@@ -257,7 +257,7 @@ object GraftSession {
   }
 
   def local(
-      cores: Int = 32,
+      cores: Int = Runtime.getRuntime.availableProcessors,
       appName: String = "graft",
       broadcastTimeoutSec: Int = 300
   ): SparkSession = {

@@ -1,7 +1,16 @@
 package graft.engine
 
-import org.apache.spark.Partitioner
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileAlreadyExistsException, FileSystem, Path}
+import org.apache.spark.{Partitioner, TaskContext}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.util.SerializableConfiguration
+
+import java.io.{BufferedWriter, IOException, OutputStreamWriter}
+import java.nio.charset.StandardCharsets.UTF_8
+import java.security.MessageDigest
+import scala.reflect.ClassTag
 
 /** The reference engine's capability core, re-expressed Spark-first.
   *
@@ -13,25 +22,40 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   * tests/test_worker_07.py:117-124 — fixture inputs are unsorted, output
   * is asserted sorted), then stream the sorted lines through a reducer
   * that relies on equal keys being adjacent (tests/testdata/exec/
-  * wc_reduce.sh uses `uniq -c`).
+  * wc_reduce.sh uses `uniq -c`), and leave exactly R `part-NNNNN` files.
   *
-  * Here: `flatMap` → `repartitionAndSortWithinPartitions` with an
-  * md5-mod-R partitioner and (key,value) lexicographic ordering → a
-  * streaming adjacent-key group iterator → reducer. Each phase is
-  * distributed and never materializes a partition in memory (iterator
-  * chain end-to-end), mirroring the reference's <1 MiB streaming bound
-  * (tests/test_worker_11.py:119-122) and scaling to arbitrarily large
-  * partitions (Spark's sort spills to disk).
+  * Here every job is one RDD pipeline: `flatMap` →
+  * `repartitionAndSortWithinPartitions` with an md5-mod-R partitioner and
+  * (key,value) lexicographic ordering (`shuffleSort`) → a streaming
+  * adjacent-key group iterator → reducer → `writeParts`, where each
+  * reduce task streams its sorted partition straight into its own
+  * `part-NNNNN` file. Each phase is distributed and never materializes a
+  * partition in memory (iterator chain end-to-end), mirroring the
+  * reference's <1 MiB streaming bound (tests/test_worker_11.py:119-122)
+  * and scaling to arbitrarily large partitions (Spark's sort spills to
+  * disk). `run`/`runKV` expose the same core as Datasets.
   */
 object MapReduce {
 
+  private val md5 = ThreadLocal.withInitial[MessageDigest](() => MessageDigest.getInstance("MD5"))
+
   /** Reference partition function: `int(md5(utf8(key)),16) % R`
     * (reference tests/test_worker_08.py — {"",hello,bye} → 0 and
-    * {world,goodbye,hadoop} → 1 when R=2).
+    * {world,goodbye,hadoop} → 1 when R=2). The 128-bit digest is reduced
+    * big-endian byte by byte (Horner's rule mod R); each step stays below
+    * 256·R < 2^39, so a Long never overflows and the result equals the
+    * BigInteger formula.
     */
   def md5Partition(key: String, numPartitions: Int): Int = {
-    val d = java.security.MessageDigest.getInstance("MD5").digest(key.getBytes("UTF-8"))
-    new java.math.BigInteger(1, d).mod(java.math.BigInteger.valueOf(numPartitions.toLong)).intValue
+    val d = md5.get.digest(key.getBytes(UTF_8))
+    val r = numPartitions.toLong
+    var acc = 0L
+    var i = 0
+    while (i < d.length) {
+      acc = ((acc << 8) | (d(i) & 0xff)) % r
+      i += 1
+    }
+    acc.toInt
   }
 
   /** Partitions composite (key,value) records by md5(key) % R, so records
@@ -78,6 +102,34 @@ object MapReduce {
     }
   }
 
+  /** The reference's M fixed map tasks: `lines` is repartitioned to
+    * `numMappers` splits when the scan planned a different count;
+    * `numMappers <= 0` keeps the scan's natural splits.
+    */
+  private[engine] def withMappers(lines: RDD[String], numMappers: Int): RDD[String] =
+    if (numMappers > 0 && lines.getNumPartitions != numMappers) lines.repartition(numMappers)
+    else lines
+
+  /** The shuffle every job shares: (key, value) records routed by
+    * md5(key) % R, each reduce partition sorted by the whole (key, value).
+    */
+  private[engine] def shuffleSort(mapped: RDD[(String, String)], numReducers: Int): RDD[(String, String)] =
+    mapped
+      .map((_, ()))
+      .repartitionAndSortWithinPartitions(new Md5KeyPartitioner(numReducers))
+      .keys
+
+  /** map → `shuffleSort` → each key's values streamed to `reducer`. */
+  private def mapReduce[O: ClassTag](
+      lines: RDD[String],
+      mapper: String => IterableOnce[(String, String)],
+      reducer: (String, Iterator[String]) => IterableOnce[O],
+      numReducers: Int
+  ): RDD[O] =
+    shuffleSort(lines.flatMap(mapper), numReducers).mapPartitions { part =>
+      new AdjacentGroups(part).flatMap { case (k, vs) => reducer(k, vs).iterator }
+    }
+
   /** Runs a full map→shuffle→sort→reduce job with the reference's exact
     * semantics. `mapper` may emit 0..n pairs per line (it is a flatMap —
     * reference mappers are generators); `reducer` sees each key's values
@@ -93,24 +145,34 @@ object MapReduce {
   ): Dataset[String] = {
     val spark = input.sparkSession
     import spark.implicits._
-    val mapped = input.rdd.flatMap(line => mapper(line).iterator.map(kv => (kv, ())))
-    val sorted = mapped.repartitionAndSortWithinPartitions(new Md5KeyPartitioner(numReducers))
-    val reduced = sorted.mapPartitions { part =>
-      new AdjacentGroups(part.map(_._1)).flatMap { case (k, vs) => reducer(k, vs).iterator }
-    }
-    spark.createDataset(reduced)
+    spark.createDataset(mapReduce(input.rdd, mapper, reducer, numReducers))
+  }
+
+  /** Same pipeline but returning typed (key, value) rows — convenient
+    * when the reducer output is itself `key\tvalue` shaped and the caller
+    * wants a DataFrame for SQL-surface verification.
+    */
+  def runKV(
+      input: Dataset[String],
+      mapper: String => IterableOnce[(String, String)],
+      reducer: (String, Iterator[String]) => IterableOnce[(String, String)],
+      numReducers: Int
+  ): Dataset[(String, String)] = {
+    val spark = input.sparkSession
+    import spark.implicits._
+    spark.createDataset(mapReduce(input.rdd, mapper, reducer, numReducers))
   }
 
   /** Reference-style final sink (SURVEY.md §2a op #9): writes the job
     * output as exactly `part-00000 … part-0000(R-1)` text files in
-    * `outputDir` — byte-compatible with the reference's layout
-    * (reference tests/test_worker_07.py:106-114 pins the names,
-    * test_integration_03.py:85 the file count). `run`'s output already
-    * has R internally-sorted partitions, and the RDD text sink names
-    * parts `part-NNNNN` natively.
+    * `outputDir`, one per partition of `output` — byte-compatible with
+    * the reference's layout (reference tests/test_worker_07.py:106-114
+    * pins the names, test_integration_03.py:85 the file count). `run`'s
+    * output already has R internally-sorted partitions. See `writeParts`
+    * for the directory contract.
     */
   def saveTextParts(output: Dataset[String], outputDir: String): Unit =
-    output.rdd.saveAsTextFile(outputDir)
+    writeParts(output.rdd, outputDir)
 
   /** Job-descriptor entry point — the reference's single user-facing API
     * (reference mapreduce/submit.py:59-78: a job is `{input_directory,
@@ -121,11 +183,11 @@ object MapReduce {
     * `outputDir` (reference tests/test_integration_03.py:85 pins the
     * exact file count; :67-75 the descriptor shape).
     *
-    * `numMappers` mirrors the reference's fixed M map tasks: the input is
-    * repartitioned to M splits when the scan planned a different count.
-    * At scale, pass the scan's natural split count (or 0 = "let Spark
-    * plan") to skip that exchange — the reference's round-robin
-    * file-to-mapper assignment is what Spark split planning already does.
+    * `numMappers` mirrors the reference's fixed M map tasks (see
+    * `withMappers`). At scale, pass the scan's natural split count (or
+    * 0 = "let Spark plan") to skip that exchange — the reference's
+    * round-robin file-to-mapper assignment is what Spark split planning
+    * already does.
     */
   def runJob(
       spark: SparkSession,
@@ -136,12 +198,8 @@ object MapReduce {
       numMappers: Int,
       numReducers: Int
   ): Unit = {
-    val lines = spark.read.textFile(inputDir)
-    val split =
-      if (numMappers > 0 && lines.rdd.getNumPartitions != numMappers) lines.repartition(numMappers)
-      else lines
-    saveTextParts(run(split, mapper, reducer, numReducers), outputDir)
-    keepOnlyParts(spark, outputDir)
+    val lines = withMappers(spark.read.textFile(inputDir).rdd, numMappers)
+    writeParts(mapReduce(lines, mapper, reducer, numReducers), outputDir)
   }
 
   /** `runJob` with *external executables* as mapper/reducer — the literal
@@ -158,47 +216,74 @@ object MapReduce {
       numMappers: Int,
       numReducers: Int
   ): Unit = {
-    val out =
-      Pipe.pipeJob(spark, spark.read.textFile(inputDir), mapperCmd, reducerCmd, numMappers, numReducers)
-    saveTextParts(out, outputDir)
-    keepOnlyParts(spark, outputDir)
+    val lines = spark.read.textFile(inputDir).rdd
+    writeParts(Pipe.pipeLines(lines, mapperCmd, reducerCmd, numMappers, numReducers), outputDir)
   }
 
-  /** Leaves only `part-NNNNN` files in `dir`: drops the committer's
-    * `_SUCCESS` marker and (on checksummed local filesystems) the hidden
-    * `.part-NNNNN.crc` siblings, so the directory listing is
-    * byte-compatible with the reference layout. Uses the RAW filesystem —
-    * `ChecksumFileSystem.listStatus` hides the very .crc files we need to
-    * remove.
+  /** The `part-NNNNN` sink, in one Spark job. `outputDir` must not exist
+    * (`FileAlreadyExistsException`, directory untouched — the Hadoop sink
+    * contract). Reduce task p streams its partition, one `\n`-terminated
+    * UTF-8 line per record, into a hidden attempt-unique file and renames
+    * it to `part-%05d` only once the partition is fully written, so
+    * readers never see a partial part:
+    *   - a failed attempt deletes its own temp file;
+    *   - a retried or speculative attempt that loses the race leaves
+    *     nothing behind — its rename fails (HDFS) or atomically replaces
+    *     the identical part (POSIX); either way no stray file;
+    *   - if the job fails, the directory this call created is deleted;
+    *     temp files are created non-recursively, so a straggler cannot
+    *     re-create it.
+    * Writes go through the raw (non-checksummed) filesystem, so no
+    * `.crc` siblings appear; there is no committer and no `_SUCCESS`
+    * marker, so the listing is exactly the part files. Tasks see the
+    * session's Hadoop configuration through a broadcast, as Spark's
+    * file readers do.
     */
-  private def keepOnlyParts(spark: SparkSession, dir: String): Unit = {
-    val path = new org.apache.hadoop.fs.Path(dir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration) match {
-      case c: org.apache.hadoop.fs.ChecksumFileSystem => c.getRawFileSystem
-      case f                                          => f
-    }
-    fs.listStatus(path).foreach { st =>
-      if (!st.getPath.getName.matches("part-\\d{5}")) fs.delete(st.getPath, false)
+  private def writeParts(lines: RDD[String], outputDir: String): Unit = {
+    val sc = lines.sparkContext
+    val dir = new Path(outputDir)
+    val fs = rawFileSystem(dir, sc.hadoopConfiguration)
+    if (fs.exists(dir)) throw new FileAlreadyExistsException(s"Output directory $dir already exists")
+    if (!fs.mkdirs(dir)) throw new IOException(s"Could not create output directory $dir")
+    val conf = sc.broadcast(new SerializableConfiguration(sc.hadoopConfiguration))
+    val dirName = dir.toString
+    try sc.runJob(lines, (ctx: TaskContext, part: Iterator[String]) => writePart(conf.value.value, dirName, ctx, part))
+    catch {
+      case t: Throwable =>
+        fs.delete(dir, true)
+        throw t
+    } finally conf.destroy()
+  }
+
+  private def writePart(conf: Configuration, dirName: String, ctx: TaskContext, lines: Iterator[String]): Unit = {
+    val dir = new Path(dirName)
+    val fs = rawFileSystem(dir, conf)
+    val name = f"part-${ctx.partitionId()}%05d"
+    val tmp = new Path(dir, s".$name-${ctx.taskAttemptId()}")
+    try {
+      val stream = fs.createNonRecursive(
+        tmp, false, 1 << 16, fs.getDefaultReplication(tmp), fs.getDefaultBlockSize(tmp), null)
+      val out = new BufferedWriter(new OutputStreamWriter(stream, UTF_8), 1 << 16)
+      try lines.foreach { l => out.write(l); out.write('\n') }
+      finally out.close()
+      val part = new Path(dir, name)
+      if (!fs.rename(tmp, part)) {
+        fs.delete(tmp, false)
+        if (!fs.exists(part)) throw new IOException(s"Could not rename $tmp to $part")
+      }
+    } catch {
+      case t: Throwable =>
+        fs.delete(tmp, false)
+        throw t
     }
   }
 
-  /** Same pipeline but returning typed (key, value) rows — convenient
-    * when the reducer output is itself `key\tvalue` shaped and the caller
-    * wants a DataFrame for SQL-surface verification.
+  /** The filesystem under `path`, without the checksumming wrapper that
+    * would add hidden `.crc` siblings to the output listing.
     */
-  def runKV(
-      input: Dataset[String],
-      mapper: String => IterableOnce[(String, String)],
-      reducer: (String, Iterator[String]) => IterableOnce[(String, String)],
-      numReducers: Int
-  ): Dataset[(String, String)] = {
-    val spark = input.sparkSession
-    import spark.implicits._
-    val mapped = input.rdd.flatMap(line => mapper(line).iterator.map(kv => (kv, ())))
-    val sorted = mapped.repartitionAndSortWithinPartitions(new Md5KeyPartitioner(numReducers))
-    val reduced = sorted.mapPartitions { part =>
-      new AdjacentGroups(part.map(_._1)).flatMap { case (k, vs) => reducer(k, vs).iterator }
+  private def rawFileSystem(path: Path, conf: Configuration): FileSystem =
+    path.getFileSystem(conf) match {
+      case c: ChecksumFileSystem => c.getRawFileSystem
+      case f                     => f
     }
-    spark.createDataset(reduced)
-  }
 }

@@ -1,5 +1,6 @@
 package graft.engine
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Dataset, SparkSession}
 
 /** Hadoop-Streaming parity: run *external executables* as the map and
@@ -30,20 +31,29 @@ object Pipe {
       numReducers: Int
   ): Dataset[String] = {
     import spark.implicits._
-    // numMappers <= 0 means "keep the scan's natural splits" — the same
-    // convention MapReduce.runJob documents for its M parameter
-    val raw = input.rdd
-    val split =
-      if (numMappers > 0 && raw.getNumPartitions != numMappers) raw.repartition(numMappers)
-      else raw
-    val mapped = split
+    spark.createDataset(pipeLines(input.rdd, mapperCmd, reducerCmd, numMappers, numReducers))
+  }
+
+  /** `pipeJob` on RDDs, the core `MapReduce.runExecJob` hands straight
+    * to the part-file sink. `numMappers` as in `MapReduce.withMappers`.
+    */
+  private[engine] def pipeLines(
+      lines: RDD[String],
+      mapperCmd: String,
+      reducerCmd: String,
+      numMappers: Int,
+      numReducers: Int
+  ): RDD[String] = {
+    val mapped = MapReduce
+      .withMappers(lines, numMappers)
       .pipe(Seq("/bin/sh", "-c", mapperCmd))
       .map { line =>
         val i = line.indexOf('\t')
-        if (i < 0) ((line, ""), ()) else ((line.substring(0, i), line.substring(i + 1)), ())
+        if (i < 0) (line, "") else (line.substring(0, i), line.substring(i + 1))
       }
-    val sorted = mapped.repartitionAndSortWithinPartitions(new MapReduce.Md5KeyPartitioner(numReducers))
-    val reduced = sorted.map { case ((k, v), _) => s"$k\t$v" }.pipe(Seq("/bin/sh", "-c", reducerCmd))
-    spark.createDataset(reduced)
+    MapReduce
+      .shuffleSort(mapped, numReducers)
+      .map { case (k, v) => s"$k\t$v" }
+      .pipe(Seq("/bin/sh", "-c", reducerCmd))
   }
 }

@@ -85,6 +85,7 @@ class MemoryBoundSpec extends AnyFunSuite {
     }
     val wallSec = (System.nanoTime() - t0) / 1e9
     val after = retainedHeap()
+    info(f"wall $wallSec%.3f s (bound 10 s, margin ${10.0 - wallSec}%.3f s)")
     assert(pipeRows > 5000 && nativeRows > 5000, s"vocab $pipeRows/$nativeRows") // Tolstoy-sized vocabulary
     assert(wallSec < 10.0, s"wall ${wallSec}s for 3.7 MB — reference bound is 10 s")
     val retainedMiB = (after - before) / 1024 / 1024

@@ -27,9 +27,18 @@ class PartitionPropertySpec extends AnyFunSuite {
 
   test("equivalent to hex-string md5 interpretation (reference formula)") {
     val rnd = new Random(2)
-    (1 to 500).foreach { _ =>
-      val key = randomKey(rnd)
-      val r = 1 + rnd.nextInt(16)
+    // small R, plus R large enough that a byte-wise reduction mod R could
+    // overflow if done carelessly (256·R > 2^31 from R = 2^23 up)
+    val bigR = Seq(255, 256, 65537, 1 << 24, Int.MaxValue)
+    // non-ASCII keys: 2-, 3- and 4-byte UTF-8 sequences and NUL
+    val nonAscii = Seq("é", "ß", "漢字", "Ωμέγα", "😀", "\u0000")
+    def unicodeKey(): String = randomKey(rnd) + nonAscii(rnd.nextInt(nonAscii.size)) + randomKey(rnd)
+    val cases = (1 to 500).map(_ => (randomKey(rnd), 1 + rnd.nextInt(16))) ++
+      (1 to 500).flatMap { i =>
+        val key = if (i % 2 == 0) unicodeKey() else randomKey(rnd)
+        bigR.map(r => (key, r))
+      }
+    cases.foreach { case (key, r) =>
       val hex = java.security.MessageDigest
         .getInstance("MD5")
         .digest(key.getBytes("UTF-8"))

@@ -1,6 +1,8 @@
 package graft.engine
 
 import graft.GraftSession
+import org.apache.hadoop.fs.FileAlreadyExistsException
+import org.apache.spark.{SparkException, TaskContext}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -31,8 +33,18 @@ class RunJobSpec extends AnyFunSuite {
   private def freshOutputDir(tag: String): String = {
     val base = Files.createTempDirectory(s"graft-$tag-").toFile
     base.deleteOnExit()
-    new File(base, "output").getPath // must not pre-exist (Hadoop sink contract)
+    // must not pre-exist: the part-file sink refuses an existing dir
+    new File(base, "output").getPath
   }
+
+  private def readLines(f: File): List[String] = {
+    val src = Source.fromFile(f, "UTF-8")
+    try src.getLines().toList
+    finally src.close()
+  }
+
+  private val wcMapper: String => Iterator[(String, String)] =
+    line => line.toLowerCase.split("[ \t]", -1).iterator.map(w => (w, "1"))
 
   test("runJob: M=4 R=2 word count — exact part files, golden contents (test_integration_03)") {
     val outDir = freshOutputDir("runjob")
@@ -117,5 +129,65 @@ class RunJobSpec extends AnyFunSuite {
       finally src.close()
     }.sorted
     assert(merged === goldenLines("word_count_correct.txt").filterNot(_.startsWith("\t")).sorted)
+  }
+
+  test("runJob: an existing output dir fails fast and is left untouched") {
+    val outDir = new File(freshOutputDir("exists"))
+    outDir.mkdirs()
+    val keep = new File(outDir, "keep.txt")
+    Files.write(keep.toPath, "precious\n".getBytes("UTF-8"))
+    intercept[FileAlreadyExistsException] {
+      MapReduce.runJob(spark, resource("input"), outDir.getPath, wcMapper,
+        (word, ones) => Iterator.single(s"$word\t${ones.size}"), numMappers = 4, numReducers = 2)
+    }
+    assert(outDir.list().toList === List("keep.txt"))
+    assert(readLines(keep) === List("precious"))
+  }
+
+  test("runJob: a failed job removes its output dir, leaving no part files") {
+    val outDir = freshOutputDir("failjob")
+    intercept[SparkException] {
+      MapReduce.runJob(spark, resource("input"), outDir, wcMapper,
+        reducer = (word, ones) => {
+          if (TaskContext.getPartitionId() == 0) throw new IllegalStateException("injected reduce failure")
+          Iterator.single(s"$word\t${ones.size}")
+        },
+        numMappers = 4, numReducers = 2)
+    }
+    assert(!new File(outDir).exists, Option(new File(outDir).list()).map(_.toList))
+  }
+
+  // Last in the suite: local mode retries a failed task only under a
+  // `local[threads, maxFailures]` master, so this test swaps the shared
+  // session for its own and leaves a clean slate (as FaultToleranceSpec).
+  test("runJob: a failed first reduce attempt is retried into exactly R golden parts, no temp files") {
+    SparkSession.getActiveSession.foreach(_.stop())
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    val retrying = SparkSession
+      .builder()
+      .master("local[4, 2]")
+      .appName("run-job-retry")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    retrying.sparkContext.setLogLevel("WARN")
+    try {
+      val outDir = freshOutputDir("retry")
+      MapReduce.runJob(retrying, resource("input"), outDir, wcMapper,
+        reducer = (word, ones) => {
+          // every first attempt dies after its temp part file is open
+          if (TaskContext.get().attemptNumber() == 0) throw new IllegalStateException("injected first-attempt failure")
+          Iterator.single(s"$word\t${ones.size}")
+        },
+        numMappers = 4, numReducers = 2)
+      val listing = new File(outDir).list().toList.sorted
+      assert(listing === List("part-00000", "part-00001"))
+      val merged = listing.flatMap(f => readLines(new File(outDir, f))).sorted
+      assert(merged === goldenLines("word_count_correct.txt").sorted)
+    } finally {
+      retrying.stop()
+      SparkSession.clearActiveSession()
+      SparkSession.clearDefaultSession()
+    }
   }
 }
