@@ -19,8 +19,16 @@ object Pipe {
 
   /** mapperCmd and reducerCmd are shell commands speaking the reference
     * text protocol: mapper stdin = raw lines, stdout = `key\tvalue`
-    * lines; reducer stdin = merge-sorted `key\tvalue` lines (equal keys
-    * adjacent), stdout = final text lines.
+    * lines; reducer stdin = the mapper's lines, verbatim, merge-sorted
+    * (equal keys adjacent), stdout = final text lines.
+    *
+    * A mapper line's key is the text before its first tab, or the whole
+    * line when it has none. The line is shuffled as the value of
+    * `(key, line)` through `MapReduce.shuffleSort`, so repeated lines are
+    * collapsed before the shuffle and expanded after the sort like any
+    * other pair, and the reducer gets each line byte for byte as the
+    * mapper wrote it. For one key, ordering by line orders by the text
+    * after the tab.
     */
   def pipeJob(
       spark: SparkSession,
@@ -49,11 +57,11 @@ object Pipe {
       .pipe(Seq("/bin/sh", "-c", mapperCmd))
       .map { line =>
         val i = line.indexOf('\t')
-        if (i < 0) (line, "") else (line.substring(0, i), line.substring(i + 1))
+        (if (i < 0) line else line.substring(0, i), line)
       }
     MapReduce
       .shuffleSort(mapped, numReducers)
-      .map { case (k, v) => s"$k\t$v" }
+      .values
       .pipe(Seq("/bin/sh", "-c", reducerCmd))
   }
 }

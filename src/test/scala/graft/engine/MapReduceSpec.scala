@@ -1,9 +1,12 @@
 package graft.engine
 
 import graft.GraftSession
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
+import java.util.concurrent.atomic.AtomicLong
+import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
 import scala.io.Source
 import scala.util.Random
 
@@ -114,18 +117,89 @@ class MapReduceSpec extends AnyFunSuite {
 
   test("reducer sees each key's values contiguously and streams groups lazily") {
     import spark.implicits._
-    val input = spark.createDataset((1 to 1000).map(i => s"k${i % 7} v$i"))
-    val out = MapReduce
-      .run(
-        input,
-        mapper = line => { val Array(k, v) = line.split(" "); Iterator.single((k, v)) },
-        reducer = (k, vs) => Iterator.single(s"$k:${vs.size}"),
-        numReducers = 4
-      )
-      .collect()
-      .sorted
-    val expected = (0 until 7).map(i => s"k$i:${(1 to 1000).count(_ % 7 == i)}").sorted
-    assert(out.toList === expected.toList)
+    // each input line is one `key\tvalue` pair; the map-side collapse
+    // must be invisible whatever the repeats, evictions and partitions
+    val mapper: String => Iterator[(String, String)] = line => {
+      val i = line.indexOf('\t')
+      Iterator.single((line.substring(0, i), line.substring(i + 1)))
+    }
+    val cases: Seq[(String, Seq[String], Int)] = Seq(
+      ("7 keys, distinct values", (1 to 1000).map(i => s"k${i % 7}\tv$i"), 4),
+      ("thousands of copies of one pair", Seq.fill(5000)("hot\tsame") :+ "hot\tother", 4),
+      // 6,000 distinct pairs, each repeated far apart, in one map task:
+      // more pairs than collapse slots, so slots collide and evict
+      ("evictions in one map partition", (0 until 20000).map { i => val j = i % 6000; s"d${j % 37}\tv$j" }, 1),
+      ("same pair in every map partition", Seq.fill(400)("every\tone"), 4),
+      ("empty key, empty value, non-ASCII",
+        Seq("\tempty-key", "\tempty-key", "k\t", "k\t", "k\tx", "\t", "\t", "möö\t中文", "möö\té",
+          "möö\té", "ß\t😀", "😀\tß"), 3)
+    )
+    for ((name, lines, mapParts) <- cases) {
+      val input = spark.createDataset(spark.sparkContext.parallelize(lines, mapParts))
+      val out = MapReduce
+        .runKV(
+          input,
+          mapper = mapper,
+          // one output row per group: a key split into two groups would
+          // show up twice
+          reducer = (k, vs) => Iterator.single((k, vs.mkString("\n"))),
+          numReducers = 4
+        )
+        .collect()
+        .toList
+        .sorted
+      val expected = lines
+        .flatMap(mapper)
+        .groupBy(_._1)
+        .map { case (k, kvs) => (k, kvs.map(_._2).sorted.mkString("\n")) }
+        .toList
+        .sorted
+      assert(out === expected, name)
+    }
+  }
+
+  test("map-side collapse: 4 map tasks of 100,000 equal pairs shuffle exactly 4 records") {
+    val sc = spark.sparkContext
+    val group = "collapse-volume"
+    val written = new AtomicLong
+    val stages = ConcurrentHashMap.newKeySet[Int]()
+    val jobs = ConcurrentHashMap.newKeySet[Int]()
+    val done = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group)) {
+          jobs.add(e.jobId)
+          e.stageIds.foreach(stages.add)
+        }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId) && e.taskMetrics != null)
+          written.addAndGet(e.taskMetrics.shuffleWriteMetrics.recordsWritten)
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (jobs.contains(e.jobId)) done.countDown()
+    }
+    import spark.implicits._
+    val input = spark.createDataset(sc.parallelize(Seq("a", "b", "c", "d"), 4))
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, group)
+      val out =
+        try
+          MapReduce
+            .run(
+              input,
+              mapper = _ => Iterator.fill(100000)(("hot", "1")),
+              reducer = (k, ones) => Iterator.single(s"$k\t${ones.size}"),
+              numReducers = 4
+            )
+            .collect()
+            .toList
+        finally sc.clearJobGroup()
+      // listener events are delivered asynchronously; task ends precede
+      // their job's end on the bus
+      assert(done.await(60, TimeUnit.SECONDS), "job end not seen")
+      assert(out === List("hot\t400000"))
+      assert(written.get === 4L)
+    } finally sc.removeSparkListener(listener)
   }
 
   test("pipe parity: external executables via RDD.pipe (Hadoop-Streaming analog)") {

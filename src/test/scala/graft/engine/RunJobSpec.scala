@@ -131,6 +131,19 @@ class RunJobSpec extends AnyFunSuite {
     assert(merged === goldenLines("word_count_correct.txt").filterNot(_.startsWith("\t")).sorted)
   }
 
+  test("runExecJob: the reducer gets mapper lines verbatim, with or without a tab") {
+    val inDir = Files.createTempDirectory("graft-verbatim-in-").toFile
+    inDir.deleteOnExit()
+    val lines = List("gamma", "beta\tb1", "alpha", "alpha\t", "alpha", "beta\tb0\tmore")
+    Files.write(new File(inDir, "input.txt").toPath, lines.mkString("", "\n", "\n").getBytes("UTF-8"))
+    val outDir = freshOutputDir("verbatim")
+    MapReduce.runExecJob(spark, inDir.getPath, outDir, "cat", "cat", numMappers = 1, numReducers = 1)
+    assert(new File(outDir).list().toList === List("part-00000"))
+    // one reducer: the lines come back sorted, each as the mapper wrote it
+    assert(readLines(new File(outDir, "part-00000")) ===
+      List("alpha", "alpha", "alpha\t", "beta\tb0\tmore", "beta\tb1", "gamma"))
+  }
+
   test("runJob: an existing output dir fails fast and is left untouched") {
     val outDir = new File(freshOutputDir("exists"))
     outDir.mkdirs()
