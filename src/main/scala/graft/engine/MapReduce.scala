@@ -2,7 +2,14 @@ package graft.engine
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{ChecksumFileSystem, FileAlreadyExistsException, FileSystem, Path}
-import org.apache.spark.{Partitioner, TaskContext}
+import org.apache.hadoop.io.compress.{CompressionCodecFactory, SplittableCompressionCodec}
+import org.apache.hadoop.mapreduce.TaskAttemptID
+import org.apache.hadoop.mapreduce.lib.input.{FileSplit, LineRecordReader}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.spark.{Partition, Partitioner, SparkContext, TaskContext}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.graft.InputMetricsBridge
+import org.apache.spark.network.util.JavaUtils
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.util.SerializableConfiguration
@@ -10,6 +17,7 @@ import org.apache.spark.util.SerializableConfiguration
 import java.io.{BufferedWriter, IOException, OutputStreamWriter}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.security.MessageDigest
+import scala.collection.mutable.ArrayBuffer
 import scala.reflect.ClassTag
 import scala.util.hashing.byteswap32
 
@@ -25,7 +33,11 @@ import scala.util.hashing.byteswap32
   * that relies on equal keys being adjacent (tests/testdata/exec/
   * wc_reduce.sh uses `uniq -c`), and leave exactly R `part-NNNNN` files.
   *
-  * Here every job is one RDD pipeline: `flatMap` → a map-side collapse
+  * Here every job is one RDD pipeline. The reference sorts its input
+  * files and hands them to exactly M map tasks; `runJob`/`runExecJob`
+  * lay the name-sorted files end to end and cut that byte stream into M
+  * equal ranges, one map partition each (`byteRanges`), with no Spark
+  * SQL scan and no repartition. Then `flatMap` → a map-side collapse
   * of repeated (key, value) pairs into `((key, value), count)` records →
   * `repartitionAndSortWithinPartitions` with an md5-mod-R partitioner and
   * (key,value) lexicographic ordering → a reduce-side expand of each
@@ -40,8 +52,9 @@ import scala.util.hashing.byteswap32
   * end-to-end; the collapse table is a fixed size per map task),
   * mirroring the reference's <1 MiB streaming bound
   * (tests/test_worker_11.py:119-122) and scaling to arbitrarily large
-  * partitions (Spark's sort spills to disk). `run`/`runKV` expose the
-  * same core as Datasets.
+  * partitions (Spark's sort spills to disk). The reader and the sink see
+  * the session's Hadoop configuration through one broadcast per job.
+  * `run`/`runKV` expose the same core as Datasets.
   */
 object MapReduce {
 
@@ -110,9 +123,11 @@ object MapReduce {
     }
   }
 
-  /** The reference's M fixed map tasks: `lines` is repartitioned to
-    * `numMappers` splits when the scan planned a different count;
-    * `numMappers <= 0` keeps the scan's natural splits.
+  /** The reference's M fixed map tasks for a `Dataset` input
+    * (`Pipe.pipeJob`): `lines` is repartitioned to `numMappers` splits
+    * when its scan planned a different count; `numMappers <= 0` keeps the
+    * scan's natural splits. `runJob`/`runExecJob` read M ranges directly
+    * (`byteRanges`).
     */
   private[engine] def withMappers(lines: RDD[String], numMappers: Int): RDD[String] =
     if (numMappers > 0 && lines.getNumPartitions != numMappers) lines.repartition(numMappers)
@@ -252,22 +267,24 @@ object MapReduce {
     * for the directory contract.
     */
   def saveTextParts(output: Dataset[String], outputDir: String): Unit =
-    writeParts(output.rdd, outputDir)
+    withJobConf(output.sparkSession.sparkContext)(writeParts(output.rdd, outputDir, _))
 
   /** Job-descriptor entry point — the reference's single user-facing API
     * (reference mapreduce/submit.py:59-78: a job is `{input_directory,
     * output_directory, mapper_executable, reducer_executable, num_mappers,
-    * num_reducers}`). Reads the text directory, runs the map→shuffle→
-    * sort→reduce pipeline with `numMappers` map tasks, and leaves EXACTLY
+    * num_reducers}`). Reads the text directory as exactly `numMappers`
+    * byte ranges (`byteRanges`), runs the map→shuffle→sort→reduce
+    * pipeline with one map task per range, and leaves EXACTLY
     * `numReducers` files named `part-00000 … part-0000(R-1)` in
     * `outputDir` (reference tests/test_integration_03.py:85 pins the
-    * exact file count; :67-75 the descriptor shape).
+    * exact file count; :67-75 the descriptor shape). The job runs in two
+    * stages, map and reduce, whatever M is.
     *
-    * `numMappers` mirrors the reference's fixed M map tasks (see
-    * `withMappers`). At scale, pass the scan's natural split count (or
-    * 0 = "let Spark plan") to skip that exchange — the reference's
-    * round-robin file-to-mapper assignment is what Spark split planning
-    * already does.
+    * `numMappers <= 0` lets Spark size the map side:
+    * `sc.defaultParallelism` ranges, or more when
+    * `spark.sql.files.maxPartitionBytes` would cut the input finer. A
+    * missing `inputDir` throws `java.io.FileNotFoundException` before
+    * `outputDir` is created.
     */
   def runJob(
       spark: SparkSession,
@@ -277,15 +294,16 @@ object MapReduce {
       reducer: (String, Iterator[String]) => IterableOnce[String],
       numMappers: Int,
       numReducers: Int
-  ): Unit = {
-    val lines = withMappers(spark.read.textFile(inputDir).rdd, numMappers)
-    writeParts(mapReduce(lines, mapper, reducer, numReducers), outputDir)
-  }
+  ): Unit =
+    withInput(spark, inputDir, numMappers) { (lines, conf) =>
+      writeParts(mapReduce(lines, mapper, reducer, numReducers), outputDir, conf)
+    }
 
   /** `runJob` with *external executables* as mapper/reducer — the literal
     * reference descriptor (`mapper_executable`/`reducer_executable` are
     * paths to programs speaking the stdin/stdout text protocol, e.g.
-    * reference tests/testdata/exec/wc_map.sh).
+    * reference tests/testdata/exec/wc_map.sh). Input splitting,
+    * `numMappers <= 0` and a missing `inputDir` behave as in `runJob`.
     */
   def runExecJob(
       spark: SparkSession,
@@ -295,9 +313,162 @@ object MapReduce {
       reducerCmd: String,
       numMappers: Int,
       numReducers: Int
-  ): Unit = {
-    val lines = spark.read.textFile(inputDir).rdd
-    writeParts(Pipe.pipeLines(lines, mapperCmd, reducerCmd, numMappers, numReducers), outputDir)
+  ): Unit =
+    withInput(spark, inputDir, numMappers) { (lines, conf) =>
+      writeParts(Pipe.pipeLines(lines, mapperCmd, reducerCmd, numReducers), outputDir, conf)
+    }
+
+  /** Runs `job` over `inputDir`'s lines, read as exactly M map
+    * partitions (`byteRanges`, `ByteRangeRDD`), with the job's one conf
+    * broadcast (`withJobConf`) for its sink. The input is listed before
+    * anything is broadcast or written.
+    */
+  private[engine] def withInput[A](spark: SparkSession, inputDir: String, numMappers: Int)(
+      job: (RDD[String], Broadcast[SerializableConfiguration]) => A
+  ): A = {
+    val ranges = byteRanges(spark, inputDir, numMappers)
+    withJobConf(spark.sparkContext)(conf => job(new ByteRangeRDD(spark.sparkContext, ranges, conf), conf))
+  }
+
+  /** Runs `job` with the session's Hadoop configuration broadcast once,
+    * as Spark's file readers see it: the input reader and the part-file
+    * sink of one job share it. Destroyed when the job ends.
+    */
+  private def withJobConf[A](sc: SparkContext)(job: Broadcast[SerializableConfiguration] => A): A = {
+    val conf = sc.broadcast(new SerializableConfiguration(sc.hadoopConfiguration))
+    try job(conf)
+    finally conf.destroy()
+  }
+
+  /** `length` bytes of the file at `path`, from byte `start`. */
+  private final case class Chunk(path: String, start: Long, length: Long)
+
+  private final class ByteRange(override val index: Int, val chunks: Array[Chunk]) extends Partition
+
+  /** The job's input cut into map ranges (SURVEY.md §2a ops #1-#2).
+    * `inputDir` is listed once: the files directly in it (or `inputDir`
+    * itself, if it is a file), skipping subdirectories and the names
+    * Spark's file index hides (see `hidden`), as `spark.read.textFile`
+    * does. The files are sorted by name and laid end to end, and that
+    * byte stream is cut into exactly M equal ranges; range r gets a
+    * `Chunk` of every file it overlaps. A file whose codec cannot split
+    * (gzip) is one chunk of the range holding its first byte. M is
+    * `numMappers`, or for `numMappers <= 0` the larger of
+    * `sc.defaultParallelism` and the input size over
+    * `spark.sql.files.maxPartitionBytes`. A missing `inputDir` throws
+    * `FileNotFoundException`.
+    */
+  private def byteRanges(spark: SparkSession, inputDir: String, numMappers: Int): Array[ByteRange] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val dir = new Path(inputDir)
+    val files = dir.getFileSystem(conf).listStatus(dir)
+      .filter(f => f.isFile && f.getLen > 0 && !hidden(f.getPath.getName))
+      .sortBy(_.getPath.getName)
+    val total = files.map(_.getLen).sum
+    val m =
+      if (numMappers > 0) numMappers
+      else {
+        val maxBytes = JavaUtils.byteStringAsBytes(spark.conf.get("spark.sql.files.maxPartitionBytes"))
+        math.max(spark.sparkContext.defaultParallelism, ((total + maxBytes - 1) / maxBytes).toInt)
+      }
+    def bound(r: Int): Long = total * r / m
+    val codecs = new CompressionCodecFactory(conf)
+    val chunks = Array.fill(m)(ArrayBuffer.empty[Chunk])
+    var offset = 0L
+    var r = 0 // the range holding byte `offset`
+    files.foreach { f =>
+      val path = f.getPath.toString
+      val end = offset + f.getLen
+      while (bound(r + 1) <= offset) r += 1
+      codecs.getCodec(f.getPath) match {
+        case c if c != null && !c.isInstanceOf[SplittableCompressionCodec] =>
+          chunks(r) += Chunk(path, 0, f.getLen)
+        case _ =>
+          var q = r
+          while (q < m && bound(q) < end) {
+            val from = math.max(bound(q), offset)
+            val to = math.min(bound(q + 1), end)
+            if (to > from) chunks(q) += Chunk(path, from - offset, to - from)
+            q += 1
+          }
+      }
+      offset = end
+    }
+    Array.tabulate(m)(i => new ByteRange(i, chunks(i).toArray))
+  }
+
+  /** Names Spark's file index leaves out of a scan: `_`-prefixed ones
+    * (unless they hold a `=`, like a partition directory), `.`-prefixed
+    * ones, and in-progress `._COPYING_` uploads.
+    */
+  private def hidden(name: String): Boolean =
+    (name.startsWith("_") && !name.contains("=")) || name.startsWith(".") || name.endsWith("._COPYING_")
+
+  /** The job's input lines, one partition per `ByteRange`. Each task
+    * reads its chunks with Hadoop's `LineRecordReader`, the reader under
+    * Spark's text scan, so line breaks are `\n`, `\r\n` or `\r`, and a
+    * last line without one is still read. A chunk that starts inside a
+    * file skips through the first line break, and every chunk reads on
+    * through the first line break at or after its last byte. So each
+    * line is read once: by the range holding the line break before it,
+    * or a file's first line by the range holding the file's first byte.
+    * Lines decode as `new String(bytes, 0, len, UTF_8)`, as a
+    * `Dataset[String]` row's `UTF8String.toString` does. Records and
+    * bytes read go to the task's input metrics.
+    */
+  private final class ByteRangeRDD(
+      sc: SparkContext,
+      @transient private val ranges: Array[ByteRange],
+      conf: Broadcast[SerializableConfiguration]
+  ) extends RDD[String](sc, Nil) {
+    override protected def getPartitions: Array[Partition] = ranges.toArray[Partition]
+
+    override def compute(split: Partition, ctx: TaskContext): Iterator[String] =
+      new RangeLines(split.asInstanceOf[ByteRange].chunks, conf.value.value, ctx)
+  }
+
+  /** Streams a range's chunks in order, one open reader at a time; the
+    * task's end closes a reader its consumer abandoned.
+    */
+  private final class RangeLines(chunks: Array[Chunk], conf: Configuration, ctx: TaskContext)
+      extends Iterator[String] {
+    private val counter = new InputMetricsBridge.Counter(ctx)
+    private var nextChunk = 0
+    private var reader: LineRecordReader = _
+    private var ready = false
+    ctx.addTaskCompletionListener[Unit](_ => close())
+
+    override def hasNext: Boolean = {
+      while (!ready && (reader != null || nextChunk < chunks.length)) {
+        if (reader == null) {
+          val c = chunks(nextChunk)
+          nextChunk += 1
+          reader = new LineRecordReader()
+          reader.initialize(
+            new FileSplit(new Path(c.path), c.start, c.length, Array.empty[String]),
+            new TaskAttemptContextImpl(conf, new TaskAttemptID()))
+        }
+        ready = reader.nextKeyValue()
+        if (!ready) close()
+      }
+      ready
+    }
+
+    override def next(): String = {
+      if (!hasNext) throw new NoSuchElementException
+      ready = false
+      counter.record()
+      val line = reader.getCurrentValue
+      new String(line.getBytes, 0, line.getLength, UTF_8)
+    }
+
+    private def close(): Unit = if (reader != null) {
+      try reader.close()
+      finally {
+        reader = null
+        counter.flush()
+      }
+    }
   }
 
   /** The `part-NNNNN` sink, in one Spark job. `outputDir` must not exist
@@ -316,23 +487,21 @@ object MapReduce {
     * Writes go through the raw (non-checksummed) filesystem, so no
     * `.crc` siblings appear; there is no committer and no `_SUCCESS`
     * marker, so the listing is exactly the part files. Tasks see the
-    * session's Hadoop configuration through a broadcast, as Spark's
-    * file readers do.
+    * session's Hadoop configuration through the job's broadcast `conf`.
     */
-  private def writeParts(lines: RDD[String], outputDir: String): Unit = {
+  private def writeParts(lines: RDD[String], outputDir: String, conf: Broadcast[SerializableConfiguration]): Unit = {
     val sc = lines.sparkContext
     val dir = new Path(outputDir)
     val fs = rawFileSystem(dir, sc.hadoopConfiguration)
     if (fs.exists(dir)) throw new FileAlreadyExistsException(s"Output directory $dir already exists")
     if (!fs.mkdirs(dir)) throw new IOException(s"Could not create output directory $dir")
-    val conf = sc.broadcast(new SerializableConfiguration(sc.hadoopConfiguration))
     val dirName = dir.toString
     try sc.runJob(lines, (ctx: TaskContext, part: Iterator[String]) => writePart(conf.value.value, dirName, ctx, part))
     catch {
       case t: Throwable =>
         fs.delete(dir, true)
         throw t
-    } finally conf.destroy()
+    }
   }
 
   private def writePart(conf: Configuration, dirName: String, ctx: TaskContext, lines: Iterator[String]): Unit = {

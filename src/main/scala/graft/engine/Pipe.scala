@@ -39,21 +39,20 @@ object Pipe {
       numReducers: Int
   ): Dataset[String] = {
     import spark.implicits._
-    spark.createDataset(pipeLines(input.rdd, mapperCmd, reducerCmd, numMappers, numReducers))
+    spark.createDataset(
+      pipeLines(MapReduce.withMappers(input.rdd, numMappers), mapperCmd, reducerCmd, numReducers))
   }
 
-  /** `pipeJob` on RDDs, the core `MapReduce.runExecJob` hands straight
-    * to the part-file sink. `numMappers` as in `MapReduce.withMappers`.
+  /** `pipeJob` on RDDs, one map task per partition of `lines`: the core
+    * `MapReduce.runExecJob` hands straight to the part-file sink.
     */
   private[engine] def pipeLines(
       lines: RDD[String],
       mapperCmd: String,
       reducerCmd: String,
-      numMappers: Int,
       numReducers: Int
   ): RDD[String] = {
-    val mapped = MapReduce
-      .withMappers(lines, numMappers)
+    val mapped = lines
       .pipe(Seq("/bin/sh", "-c", mapperCmd))
       .map { line =>
         val i = line.indexOf('\t')

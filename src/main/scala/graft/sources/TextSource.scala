@@ -6,10 +6,13 @@ import org.apache.spark.sql.functions._
 
 /** The reference's native input format: a DIRECTORY of newline-delimited
   * UTF-8 text files (SURVEY.md §2a op #1; reference mapreduce/submit.py
-  * --input). `spark.read.text(dir)` globs and splits the directory
-  * exactly as the reference's sorted-enumeration + round-robin assignment
-  * does — Spark's split planning subsumes ops #1/#2; `input_file_name()`
-  * recovers per-file identity where a job needs it.
+  * --input), as a `Dataset` for the Dataset entry points (`MapReduce.run`,
+  * `Pipe.pipeJob`). `spark.read.text(dir)` reads the same lines the
+  * engine's own job reader does, but splits them by Spark's file-scan
+  * planning, not into the job's M ranges: `MapReduce.runJob` and
+  * `runExecJob` lay the name-sorted files end to end and cut them into
+  * exactly M byte ranges themselves. `input_file_name()` recovers
+  * per-file identity where a job needs it.
   */
 object TextSource {
 

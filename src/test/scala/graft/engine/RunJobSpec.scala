@@ -3,11 +3,14 @@ package graft.engine
 import graft.GraftSession
 import org.apache.hadoop.fs.FileAlreadyExistsException
 import org.apache.spark.{SparkException, TaskContext}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-import java.io.File
+import java.io.{File, FileNotFoundException}
 import java.nio.file.Files
+import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 import scala.io.Source
 
 /** End-to-end job-descriptor parity with the reference's integration
@@ -168,6 +171,63 @@ class RunJobSpec extends AnyFunSuite {
         numMappers = 4, numReducers = 2)
     }
     assert(!new File(outDir).exists, Option(new File(outDir).list()).map(_.toList))
+  }
+
+  test("runJob: a missing input dir throws and leaves no output dir") {
+    val outDir = freshOutputDir("missing")
+    val missing = new File(Files.createTempDirectory("graft-missing-").toFile, "absent").getPath
+    intercept[FileNotFoundException] {
+      MapReduce.runJob(spark, missing, outDir, wcMapper,
+        (word, ones) => Iterator.single(s"$word\t${ones.size}"), numMappers = 4, numReducers = 2)
+    }
+    assert(!new File(outDir).exists)
+  }
+
+  test("runJob: an empty input dir gives exactly R empty part files") {
+    val inDir = Files.createTempDirectory("graft-empty-in-").toFile
+    inDir.deleteOnExit()
+    val outDir = freshOutputDir("empty")
+    MapReduce.runJob(spark, inDir.getPath, outDir, wcMapper,
+      (word, ones) => Iterator.single(s"$word\t${ones.size}"), numMappers = 4, numReducers = 3)
+    val listing = new File(outDir).list().toList.sorted
+    assert(listing === List("part-00000", "part-00001", "part-00002"))
+    listing.foreach(f => assert(new File(outDir, f).length === 0L, f))
+  }
+
+  test("runJob: M=3 reads 3 map ranges in 2 stages, golden contents") {
+    val sc = spark.sparkContext
+    val group = "runjob-m3"
+    val jobs = ConcurrentHashMap.newKeySet[Int]()
+    val stages = ConcurrentHashMap.newKeySet[Int]()
+    val mapTasks = new AtomicInteger
+    val done = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group)) {
+          jobs.add(e.jobId)
+          e.stageIds.foreach(stages.add)
+          val mapStages = e.stageInfos.flatMap(_.parentIds).toSet
+          e.stageInfos.filter(s => mapStages(s.stageId)).foreach(s => mapTasks.addAndGet(s.numTasks))
+        }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (jobs.contains(e.jobId)) done.countDown()
+    }
+    val outDir = freshOutputDir("runjob-m3")
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, group)
+      try MapReduce.runJob(spark, resource("input"), outDir, wcMapper,
+        (word, ones) => Iterator.single(s"$word\t${ones.size}"), numMappers = 3, numReducers = 2)
+      finally sc.clearJobGroup()
+      // listener events are delivered asynchronously
+      assert(done.await(60, TimeUnit.SECONDS), "job end not seen")
+      assert(jobs.size === 1)
+      assert(stages.size === 2)
+      assert(mapTasks.get === 3)
+    } finally sc.removeSparkListener(listener)
+    val listing = new File(outDir).list().toList.sorted
+    assert(listing === List("part-00000", "part-00001"))
+    assert(listing.flatMap(f => readLines(new File(outDir, f))).sorted === goldenLines("word_count_correct.txt").sorted)
   }
 
   // Last in the suite: local mode retries a failed task only under a
