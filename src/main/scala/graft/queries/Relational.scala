@@ -756,20 +756,7 @@ object Relational {
     * cheap (metadata-only) and changes whenever the data is regenerated.
     */
   private[graft] def sourceFingerprint(spark: SparkSession, paths: String*): String = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val md = java.security.MessageDigest.getInstance("MD5")
-    paths.foreach { p =>
-      val hp = new org.apache.hadoop.fs.Path(p)
-      val fs = hp.getFileSystem(conf)
-      val entries = scala.collection.mutable.ArrayBuffer.empty[String]
-      val it = fs.listFiles(hp, true)
-      while (it.hasNext) {
-        val st = it.next()
-        entries += s"${st.getPath}:${st.getLen}:${st.getModificationTime}"
-      }
-      entries.sorted.foreach(e => md.update(e.getBytes("UTF-8")))
-    }
-    val fp = md.digest().take(6).map("%02x".format(_)).mkString
+    val fp = graft.Tables.listingFp(spark, paths, 6)
     sessionFps.add(fp)
     fp
   }

@@ -104,8 +104,11 @@ object StreamingQueries {
     * run in an ISOLATED-conf session (`newSession`: shared SparkContext,
     * own SQLConf) pinned to a small state partitioning — the caller's
     * session conf is never touched, so concurrent batch queries keep
-    * their own partitioning. A production job sizes this to key
-    * throughput.
+    * their own partitioning. The pin is at most 8 and at most the
+    * context's default parallelism (its task slots in local mode): more
+    * stores than slots run each batch's stateful stage in several waves
+    * of open/commit overhead with no extra parallelism. A production job
+    * sizes this to key throughput.
     */
   // one isolated streaming session per root session (sessions are cheap
   // but carry a catalog; no need for one per query)
@@ -121,7 +124,7 @@ object StreamingQueries {
       root,
       { r =>
         val s = r.newSession()
-        s.conf.set("spark.sql.shuffle.partitions", "8")
+        s.conf.set("spark.sql.shuffle.partitions", math.min(8, r.sparkContext.defaultParallelism).toString)
         // runtime-set read options the transplanted plans rely on
         // (newSession starts from builder defaults, not runtime conf)
         s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

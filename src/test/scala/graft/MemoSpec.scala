@@ -62,4 +62,33 @@ class MemoSpec extends AnyFunSuite {
     assert(Tables.artifactParquet(spark, path, s"$dir/art2").count() === 5L)
     spark.stop()
   }
+
+  test("listing fingerprint of a multi-file, nested artifact dir equals the listFiles walk's") {
+    val spark = GraftSession.local(4, "memo-spec-listing")
+    val dir = java.nio.file.Files.createTempDirectory("graft-listing-fp-").toString
+    val path = s"$dir/art"
+    // several part files in two partition subdirs, plus .crc siblings
+    spark.range(40).selectExpr("id", "id % 2 AS k").repartition(3)
+      .write.partitionBy("k").parquet(path)
+    spark.range(5).coalesce(1).write.parquet(s"$dir/other")
+    def listFilesFp(paths: Seq[String], bytes: Int): String = {
+      val conf = spark.sparkContext.hadoopConfiguration
+      val md = java.security.MessageDigest.getInstance("MD5")
+      paths.foreach { p =>
+        val hp = new org.apache.hadoop.fs.Path(p)
+        val it = hp.getFileSystem(conf).listFiles(hp, true)
+        val entries = scala.collection.mutable.ArrayBuffer.empty[String]
+        while (it.hasNext) {
+          val st = it.next()
+          entries += s"${st.getPath}:${st.getLen}:${st.getModificationTime}"
+        }
+        entries.sorted.foreach(e => md.update(e.getBytes("UTF-8")))
+      }
+      md.digest().take(bytes).map("%02x".format(_)).mkString
+    }
+    val leaf = new java.io.File(s"$path/k=1").listFiles.filter(_.getName.startsWith("part-")).head.getPath
+    for (paths <- Seq(Seq(path), Seq(path, s"$dir/other"), Seq(leaf)); bytes <- Seq(6, 8))
+      assert(Tables.listingFp(spark, paths, bytes) === listFilesFp(paths, bytes), s"$paths / $bytes")
+    assert(queries.Relational.sourceFingerprint(spark, path) === listFilesFp(Seq(path), 6))
+  }
 }
