@@ -256,12 +256,6 @@ object Tables {
   */
 object GraftSession {
 
-  /** Per-process managed-table warehouse. Bucket tables are rebuilt per
-    * JVM regardless (the in-memory catalog doesn't persist), so a
-    * private directory costs nothing extra while removing every
-    * cross-JVM race on a shared ./spark-warehouse (concurrent test +
-    * verify runs sweeping each other's files). Deleted on JVM exit.
-    */
   /** Shared by the exit-time cleanup hooks (warehouse, streaming
     * sentinel dirs) so deletion semantics can't drift between them.
     */
@@ -271,6 +265,12 @@ object GraftSession {
     ()
   }
 
+  /** Per-process managed-table warehouse. Bucket tables are rebuilt per
+    * JVM regardless (the in-memory catalog doesn't persist), so a
+    * private directory costs nothing extra while removing every
+    * cross-JVM race on a shared ./spark-warehouse (concurrent test +
+    * verify runs sweeping each other's files). Deleted on JVM exit.
+    */
   private lazy val warehouseDir: String = {
     val p = java.nio.file.Files.createTempDirectory("graft-warehouse-")
     Runtime.getRuntime.addShutdownHook(new Thread(() => deleteRecursively(p.toFile)))

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,17 +10,10 @@ object Verify {
     val keep: String => Boolean =
       if (only.isEmpty) _ => true
       else name => only(0).split(',').exists(name.startsWith)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // native-expression SQL surface (sql_native_text) needs the
-      // injected functions on the verify session too
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").fold(4)(_.toInt)
+    // the engine's session: the same physical configuration, extensions,
+    // per-process warehouse and local filesystem as Bench and the specs
+    val spark = GraftSession.local(cpus, "verify")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(kv => keep(kv._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
@@ -45,10 +37,10 @@ object Verify {
     val json = SparkEntry.oracleSql.filter(kv => keep(kv._1))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    // session-end warehouse ledger + stale-fingerprint sweep (Verify
-    // runs against ./spark-warehouse, which persists across JVMs); a
-    // FILTERED run must not sweep — it derived only a subset of the
-    // live fingerprints, so everything else would read as stale
+    // session-end warehouse ledger + stale-fingerprint sweep of this
+    // JVM's own warehouse (GraftSession's, deleted on exit); a FILTERED
+    // run must not sweep — it derived only a subset of the live
+    // fingerprints, so everything else would read as stale
     System.err.println(graft.queries.Relational.warehouseHygiene(spark, sweep = only.isEmpty))
     spark.stop()
   }

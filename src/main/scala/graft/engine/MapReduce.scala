@@ -10,13 +10,16 @@ import org.apache.spark.{Partition, Partitioner, SparkContext, TaskContext}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.graft.InputMetricsBridge
 import org.apache.spark.network.util.JavaUtils
-import org.apache.spark.rdd.RDD
+import org.apache.spark.rdd.{RDD, ShuffledRDD}
+import org.apache.spark.serializer.{DeserializationStream, SerializationStream, Serializer, SerializerInstance}
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.util.SerializableConfiguration
 
-import java.io.{BufferedWriter, IOException, OutputStreamWriter}
+import java.io.{BufferedWriter, EOFException, IOException, InputStream, OutputStream, OutputStreamWriter}
+import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets.UTF_8
 import java.security.MessageDigest
+import java.util.Arrays
 import scala.collection.mutable.ArrayBuffer
 import scala.reflect.ClassTag
 import scala.util.hashing.byteswap32
@@ -27,21 +30,25 @@ import scala.util.hashing.byteswap32
   * flatMap a mapper executable over text lines, hash-partition its
   * `key\tvalue` output on `int(md5(key),16) % R` (pinned by
   * reference tests/test_worker_08.py:196-242), merge-sort each reduce
-  * partition lexicographically by the whole `key\tvalue` line (pinned by
-  * tests/test_worker_07.py:117-124 — fixture inputs are unsorted, output
-  * is asserted sorted), then stream the sorted lines through a reducer
-  * that relies on equal keys being adjacent (tests/testdata/exec/
-  * wc_reduce.sh uses `uniq -c`), and leave exactly R `part-NNNNN` files.
+  * partition by the whole `key\tvalue` line in Python, which is code
+  * point order (pinned by tests/test_worker_07.py:117-124 — fixture
+  * inputs are unsorted, output is asserted sorted), then stream the
+  * sorted lines through a reducer that relies on equal keys being
+  * adjacent (tests/testdata/exec/wc_reduce.sh uses `uniq -c`), and leave
+  * exactly R `part-NNNNN` files. All text is UTF-8.
   *
   * Here every job is one RDD pipeline. The reference sorts its input
   * files and hands them to exactly M map tasks; `runJob`/`runExecJob`
   * lay the name-sorted files end to end and cut that byte stream into M
   * equal ranges, one map partition each (`byteRanges`), with no Spark
-  * SQL scan and no repartition. Then `flatMap` → a map-side collapse
-  * of repeated (key, value) pairs into `((key, value), count)` records →
-  * `repartitionAndSortWithinPartitions` with an md5-mod-R partitioner and
-  * (key,value) lexicographic ordering → a reduce-side expand of each
-  * record back into `count` copies (`shuffleSort`) → a streaming
+  * SQL scan and no repartition. Then `flatMap` → `shuffleSort`, the one
+  * shuffle every job shares: each record travels as one UTF-8 line
+  * (`key\tvalue` for a native pair, the mapper's line verbatim for a
+  * piped one), a map-side collapse turns repeated records into
+  * `(line, count)`, md5 of the bytes before the first tab picks the
+  * reducer, each reduce partition is sorted by unsigned byte order of
+  * the whole line — the same order as code points, so the reference's —
+  * and each record is expanded back into `count` copies → a streaming
   * adjacent-key group iterator → reducer → `writeParts`, where each
   * reduce task streams its sorted partition straight into its own
   * `part-NNNNN` file. Records equal in key and value are
@@ -55,6 +62,10 @@ import scala.util.hashing.byteswap32
   * partitions (Spark's sort spills to disk). The reader and the sink see
   * the session's Hadoop configuration through one broadcast per job.
   * `run`/`runKV` expose the same core as Datasets.
+  *
+  * A native key may not hold a tab: the text protocol cannot express
+  * one, and a record routes and groups by the bytes before its first
+  * tab. The job fails with an `IllegalArgumentException` naming the key.
   */
 object MapReduce {
 
@@ -62,13 +73,24 @@ object MapReduce {
 
   /** Reference partition function: `int(md5(utf8(key)),16) % R`
     * (reference tests/test_worker_08.py — {"",hello,bye} → 0 and
-    * {world,goodbye,hadoop} → 1 when R=2). The 128-bit digest is reduced
-    * big-endian byte by byte (Horner's rule mod R); each step stays below
+    * {world,goodbye,hadoop} → 1 when R=2).
+    */
+  def md5Partition(key: String, numPartitions: Int): Int =
+    digestMod(md5.get.digest(key.getBytes(UTF_8)), numPartitions)
+
+  /** `md5Partition` of the UTF-8 key `line(0 until end)`. */
+  private def md5Partition(line: Array[Byte], end: Int, numPartitions: Int): Int = {
+    val md = md5.get
+    md.update(line, 0, end)
+    digestMod(md.digest(), numPartitions)
+  }
+
+  /** The 128-bit digest `d` as a big-endian unsigned integer, mod R. It
+    * is reduced byte by byte (Horner's rule mod R); each step stays below
     * 256·R < 2^39, so a Long never overflows and the result equals the
     * BigInteger formula.
     */
-  def md5Partition(key: String, numPartitions: Int): Int = {
-    val d = md5.get.digest(key.getBytes(UTF_8))
+  private def digestMod(d: Array[Byte], numPartitions: Int): Int = {
     val r = numPartitions.toLong
     var acc = 0L
     var i = 0
@@ -79,15 +101,25 @@ object MapReduce {
     acc.toInt
   }
 
-  /** Partitions composite (key,value) records by md5(key) % R, so records
-    * with equal keys co-locate while the shuffle ordering can still sort
-    * by the full (key,value) line.
+  /** Where a record's key ends: its first tab, or its end if it has none. */
+  private def keyEnd(line: Array[Byte]): Int = {
+    var i = 0
+    while (i < line.length && line(i) != '\t') i += 1
+    i
+  }
+
+  /** Routes records by md5(key) % R, so records with equal keys
+    * co-locate while the shuffle ordering can still sort by the whole
+    * line. A shuffle line (`Array[Byte]`) routes by the UTF-8 bytes before
+    * its first tab, a `(key, value)` tuple by its key, and a bare key by
+    * itself, so `key\tvalue`, `(key, value)` and `key` all agree.
     */
   final class Md5KeyPartitioner(override val numPartitions: Int) extends Partitioner {
     override def getPartition(key: Any): Int = key match {
-      case (k: String, _) => md5Partition(k, numPartitions)
-      case k: String      => md5Partition(k, numPartitions)
-      case other          => md5Partition(String.valueOf(other), numPartitions)
+      case line: Array[Byte] => md5Partition(line, keyEnd(line), numPartitions)
+      case (k: String, _)    => md5Partition(k, numPartitions)
+      case k: String         => md5Partition(k, numPartitions)
+      case other             => md5Partition(String.valueOf(other), numPartitions)
     }
   }
 
@@ -133,19 +165,150 @@ object MapReduce {
     if (numMappers > 0 && lines.getNumPartitions != numMappers) lines.repartition(numMappers)
     else lines
 
-  /** The shuffle every job shares: (key, value) records routed by
-    * md5(key) % R, each reduce partition sorted by the whole (key, value).
-    * Each map task first collapses repeated pairs into
-    * `((key, value), count)` records (`Collapse`); each reduce task
-    * expands them back (`Expand`) after the sort. Equal pairs sort next
-    * to each other, so the output is the same stream of pairs, in the
-    * same order, as shuffling every pair on its own.
+  /** The shuffle every job shares. Each record is one UTF-8 line
+    * (`codec`); every map task collapses repeated records into
+    * `(line, count)` (`Collapse`), the line's key (the bytes before its
+    * first tab) picks its reducer by md5 (`Md5KeyPartitioner`), each
+    * reduce partition is sorted by the unsigned bytes of the whole line,
+    * and each record is expanded back into `count` copies (`Expand`).
+    * Equal lines sort next to each other, so the output is the same
+    * stream of records, in the same order, as shuffling every record on
+    * its own. Unsigned UTF-8 byte order is code point order, the order
+    * the reference's Python sort gives. The `key\t…` lines of one key are
+    * contiguous, as the reducers need, because no key holds a tab. The
+    * shuffle moves the lines in `LineSerializer`'s format.
     */
-  private[engine] def shuffleSort(mapped: RDD[(String, String)], numReducers: Int): RDD[(String, String)] =
-    mapped
-      .mapPartitions(new Collapse(_))
-      .repartitionAndSortWithinPartitions(new Md5KeyPartitioner(numReducers))
-      .mapPartitions(new Expand(_), preservesPartitioning = true)
+  private[engine] def shuffleSort[T <: AnyRef: ClassTag](records: RDD[T], numReducers: Int, codec: LineCodec[T]): RDD[T] =
+    new ShuffledRDD[Array[Byte], Long, Long](records.mapPartitions(new Collapse(_, codec)), new Md5KeyPartitioner(numReducers))
+      .setKeyOrdering(UnsignedBytes)
+      .setSerializer(new LineSerializer)
+      .mapPartitions(new Expand(_, codec), preservesPartitioning = true)
+
+  /** How one kind of record becomes its shuffle line and back. `slot`
+    * hashes a record for `Collapse`.
+    */
+  private[engine] sealed abstract class LineCodec[T] extends Serializable {
+    def slot(record: T): Int
+    def encode(record: T): Array[Byte]
+    def decode(line: Array[Byte]): T
+  }
+
+  /** A native `(key, value)` pair is the line `key\tvalue`. A key with a
+    * tab throws `IllegalArgumentException`: read back, the line would
+    * split at that tab. An unpaired surrogate, which UTF-8 cannot hold,
+    * encodes as `?`, as the part-file sink writes it.
+    */
+  private[engine] object PairLines extends LineCodec[(String, String)] {
+    override def slot(kv: (String, String)): Int = kv._1.hashCode ^ byteswap32(kv._2.hashCode)
+
+    override def encode(kv: (String, String)): Array[Byte] = {
+      val k = kv._1.getBytes(UTF_8)
+      if (keyEnd(k) < k.length)
+        throw new IllegalArgumentException(s"MapReduce key contains a tab: \"${kv._1.replace("\t", "\\t")}\"")
+      val v = kv._2.getBytes(UTF_8)
+      val line = Arrays.copyOf(k, k.length + 1 + v.length)
+      line(k.length) = '\t'
+      System.arraycopy(v, 0, line, k.length + 1, v.length)
+      line
+    }
+
+    override def decode(line: Array[Byte]): (String, String) = {
+      val t = keyEnd(line)
+      (new String(line, 0, t, UTF_8), new String(line, t + 1, line.length - t - 1, UTF_8))
+    }
+  }
+
+  /** A piped mapper's line is its own shuffle line, byte for byte. Its
+    * key is the text before its first tab, or the whole line.
+    */
+  private[engine] object PipedLines extends LineCodec[String] {
+    override def slot(line: String): Int = {
+      var keyHash = 0 // `String.hashCode` of the text before the first tab
+      var i = 0
+      while (i < line.length && line.charAt(i) != '\t') {
+        keyHash = 31 * keyHash + line.charAt(i)
+        i += 1
+      }
+      keyHash ^ byteswap32(line.hashCode)
+    }
+    override def encode(line: String): Array[Byte] = line.getBytes(UTF_8)
+    override def decode(line: Array[Byte]): String = new String(line, UTF_8)
+  }
+
+  /** Shuffle lines in unsigned byte order. */
+  private object UnsignedBytes extends Ordering[Array[Byte]] {
+    override def compare(a: Array[Byte], b: Array[Byte]): Int = Arrays.compareUnsigned(a, b)
+  }
+
+  /** The shuffle's wire format for `(line, count)` records: the line's
+    * length and the count as unsigned LEB128 varints around the line's
+    * bytes. Spark reads and writes shuffle records with `writeKey`/
+    * `writeValue` and `readKey`/`readValue`, so those are all it has; a
+    * clean end of stream before a key is `EOFException`, as Spark's
+    * record iterator expects.
+    */
+  private final class LineSerializer extends Serializer with Serializable {
+    override def newInstance(): SerializerInstance = new SerializerInstance {
+      override def serializeStream(s: OutputStream): SerializationStream = new SerializationStream {
+        private def varint(n: Long): Unit = {
+          var v = n
+          while ((v & ~0x7fL) != 0) {
+            s.write(((v & 0x7f) | 0x80).toInt)
+            v >>>= 7
+          }
+          s.write(v.toInt)
+        }
+        override def writeKey[K: ClassTag](key: K): SerializationStream = {
+          val line = key.asInstanceOf[Array[Byte]]
+          varint(line.length)
+          s.write(line)
+          this
+        }
+        override def writeValue[V: ClassTag](count: V): SerializationStream = {
+          varint(count.asInstanceOf[Long])
+          this
+        }
+        override def writeObject[O: ClassTag](o: O): SerializationStream = unsupported
+        override def flush(): Unit = s.flush()
+        override def close(): Unit = s.close()
+      }
+
+      override def deserializeStream(s: InputStream): DeserializationStream = new DeserializationStream {
+        private def varint(): Long = {
+          var v = 0L
+          var shift = 0
+          var b = 0x80
+          while ((b & 0x80) != 0) {
+            b = s.read()
+            if (b < 0) throw new EOFException
+            v |= (b & 0x7fL) << shift
+            shift += 7
+          }
+          v
+        }
+        override def readKey[K: ClassTag](): K = {
+          val line = new Array[Byte](varint().toInt)
+          var off = 0
+          while (off < line.length) {
+            val n = s.read(line, off, line.length - off)
+            if (n < 0) throw new EOFException
+            off += n
+          }
+          line.asInstanceOf[K]
+        }
+        override def readValue[V: ClassTag](): V = varint().asInstanceOf[V]
+        override def readObject[O: ClassTag](): O = unsupported
+        override def close(): Unit = s.close()
+      }
+
+      override def serialize[O: ClassTag](o: O): ByteBuffer = unsupported
+      override def deserialize[O: ClassTag](bytes: ByteBuffer): O = unsupported
+      override def deserialize[O: ClassTag](bytes: ByteBuffer, loader: ClassLoader): O = unsupported
+    }
+
+    private def unsupported: Nothing =
+      throw new UnsupportedOperationException("the engine's shuffle serializer only moves (line, count) records")
+  }
 
   /** Slots in a map task's collapse table. On the reference word count
     * 256, 1,024, 4,096 and 16,384 slots left 163k, 117k, 68k and 45k of
@@ -153,41 +316,45 @@ object MapReduce {
     */
   private val CollapseSlots = 4096
 
-  /** Counts repeats of (key, value) pairs in a direct-mapped table of
-    * `CollapseSlots` slots: a pair equal (`String` equality on key and
-    * value) to the one in its slot bumps that slot's count; any other
-    * pair evicts the slot as `(pair, count)` and takes it. The table is
-    * flushed when the input ends. The hash only picks the slot, so a
-    * collision costs an extra record, never a wrong count. The value's
-    * hash is mixed because a piped mapper line, the value there, begins
-    * with its key: unmixed, `31·hash(key) + hash(line)` puts all
+  /** Counts repeats of records in a direct-mapped table of
+    * `CollapseSlots` slots: a record equal (`String` equality) to the one
+    * in its slot bumps that slot's count; any other record evicts the
+    * slot as `(line, count)` and takes it. The table is flushed when the
+    * input ends. Only evicted and flushed records are encoded. The hash
+    * only picks the slot, so a collision costs an extra record, never a
+    * wrong count. A slot hash (`LineCodec.slot`) mixes the key's hash
+    * with that of the value, or of the whole line for a piped line, which
+    * begins with its key: unmixed, `31·hash(key) + hash(line)` puts all
     * `word\t1` lines in 128 of the 4,096 slots.
     */
-  private final class Collapse(it: Iterator[(String, String)]) extends Iterator[((String, String), Long)] {
-    private val pairs = new Array[(String, String)](CollapseSlots)
+  private final class Collapse[T <: AnyRef](it: Iterator[T], codec: LineCodec[T])
+      extends Iterator[(Array[Byte], Long)] {
+    private val held = new Array[AnyRef](CollapseSlots)
     private val counts = new Array[Long](CollapseSlots)
-    private var out: ((String, String), Long) = _
+    private var out: (Array[Byte], Long) = _
     private var flushed = 0
+
+    private def emit(slot: Int): Unit = out = (codec.encode(held(slot).asInstanceOf[T]), counts(slot))
 
     override def hasNext: Boolean = {
       while (out == null && it.hasNext) {
-        val kv = it.next()
-        val s = (kv._1.hashCode ^ byteswap32(kv._2.hashCode)) & (CollapseSlots - 1)
-        val held = pairs(s)
-        if (held != null && held._1 == kv._1 && held._2 == kv._2) counts(s) += 1
+        val r = it.next()
+        val s = codec.slot(r) & (CollapseSlots - 1)
+        val h = held(s)
+        if (h != null && h == r) counts(s) += 1
         else {
-          if (held != null) out = (held, counts(s))
-          pairs(s) = kv
+          if (h != null) emit(s)
+          held(s) = r
           counts(s) = 1
         }
       }
       while (out == null && flushed < CollapseSlots) {
-        if (pairs(flushed) != null) out = (pairs(flushed), counts(flushed))
+        if (held(flushed) != null) emit(flushed)
         flushed += 1
       }
       out != null
     }
-    override def next(): ((String, String), Long) = {
+    override def next(): (Array[Byte], Long) = {
       if (!hasNext) throw new NoSuchElementException
       val r = out
       out = null
@@ -195,22 +362,22 @@ object MapReduce {
     }
   }
 
-  /** Streams each `(pair, count)` record as `count` copies of the same
-    * pair object: constant memory for any count.
+  /** Decodes each `(line, count)` record once and streams it as `count`
+    * copies of the same record object: constant memory for any count.
     */
-  private final class Expand(it: Iterator[((String, String), Long)]) extends Iterator[(String, String)] {
-    private var kv: (String, String) = _
+  private final class Expand[T](it: Iterator[(Array[Byte], Long)], codec: LineCodec[T]) extends Iterator[T] {
+    private var record: T = _
     private var left = 0L
 
     override def hasNext: Boolean = left > 0 || it.hasNext
-    override def next(): (String, String) = {
+    override def next(): T = {
       if (left == 0) {
-        val (pair, count) = it.next()
-        kv = pair
+        val (line, count) = it.next()
+        record = codec.decode(line)
         left = count
       }
       left -= 1
-      kv
+      record
     }
   }
 
@@ -221,7 +388,7 @@ object MapReduce {
       reducer: (String, Iterator[String]) => IterableOnce[O],
       numReducers: Int
   ): RDD[O] =
-    shuffleSort(lines.flatMap(mapper), numReducers).mapPartitions { part =>
+    shuffleSort(lines.flatMap(mapper), numReducers, PairLines).mapPartitions { part =>
       new AdjacentGroups(part).flatMap { case (k, vs) => reducer(k, vs).iterator }
     }
 
@@ -230,7 +397,9 @@ object MapReduce {
     * reference mappers are generators); `reducer` sees each key's values
     * as one contiguous sorted stream and may emit any number of output
     * lines. Output Dataset has `numReducers` partitions, each internally
-    * sorted by (key, value) exactly like a reference `part-NNNNN` file.
+    * sorted by the `key\tvalue` line exactly like a reference
+    * `part-NNNNN` file. A key holding a tab fails the job with an
+    * `IllegalArgumentException` naming it.
     */
   def run(
       input: Dataset[String],
@@ -278,7 +447,9 @@ object MapReduce {
     * `numReducers` files named `part-00000 … part-0000(R-1)` in
     * `outputDir` (reference tests/test_integration_03.py:85 pins the
     * exact file count; :67-75 the descriptor shape). The job runs in two
-    * stages, map and reduce, whatever M is.
+    * stages, map and reduce, whatever M is. A key holding a tab fails the
+    * job with an `IllegalArgumentException` naming it, and the output
+    * directory is removed.
     *
     * `numMappers <= 0` lets Spark size the map side:
     * `sc.defaultParallelism` ranges, or more when

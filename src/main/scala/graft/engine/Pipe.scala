@@ -18,17 +18,18 @@ import org.apache.spark.sql.{Dataset, SparkSession}
 object Pipe {
 
   /** mapperCmd and reducerCmd are shell commands speaking the reference
-    * text protocol: mapper stdin = raw lines, stdout = `key\tvalue`
-    * lines; reducer stdin = the mapper's lines, verbatim, merge-sorted
-    * (equal keys adjacent), stdout = final text lines.
+    * text protocol in UTF-8: mapper stdin = raw lines, stdout =
+    * `key\tvalue` lines; reducer stdin = the mapper's lines, verbatim,
+    * sorted by unsigned UTF-8 bytes of the whole line, which is code
+    * point order (equal keys adjacent), stdout = final text lines.
     *
     * A mapper line's key is the text before its first tab, or the whole
-    * line when it has none. The line is shuffled as the value of
-    * `(key, line)` through `MapReduce.shuffleSort`, so repeated lines are
+    * line when it has none; md5 of the key picks the line's reducer. Each
+    * line is one record of `MapReduce.shuffleSort`, so repeated lines are
     * collapsed before the shuffle and expanded after the sort like any
-    * other pair, and the reducer gets each line byte for byte as the
-    * mapper wrote it. For one key, ordering by line orders by the text
-    * after the tab.
+    * other record, and the reducer gets each line byte for byte as the
+    * mapper wrote it. The pipes are UTF-8 whatever the JVM's default
+    * charset; a child that writes invalid UTF-8 fails its task.
     */
   def pipeJob(
       spark: SparkSession,
@@ -52,15 +53,9 @@ object Pipe {
       reducerCmd: String,
       numReducers: Int
   ): RDD[String] = {
-    val mapped = lines
-      .pipe(Seq("/bin/sh", "-c", mapperCmd))
-      .map { line =>
-        val i = line.indexOf('\t')
-        (if (i < 0) line else line.substring(0, i), line)
-      }
+    val mapped = lines.pipe(Seq("/bin/sh", "-c", mapperCmd), encoding = "UTF-8")
     MapReduce
-      .shuffleSort(mapped, numReducers)
-      .values
-      .pipe(Seq("/bin/sh", "-c", reducerCmd))
+      .shuffleSort(mapped, numReducers, MapReduce.PipedLines)
+      .pipe(Seq("/bin/sh", "-c", reducerCmd), encoding = "UTF-8")
   }
 }

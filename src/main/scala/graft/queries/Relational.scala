@@ -784,8 +784,8 @@ object Relational {
     * retiring; and even when sweeping, dirs younger than `minAgeMs`
     * survive — a concurrently running Verify/test JVM's in-flight
     * builds are by construction fresh, so the age floor closes the
-    * cross-JVM delete race the per-process Bench warehouse was
-    * introduced to remove (Verify still shares ./spark-warehouse).
+    * cross-JVM delete race for any caller whose warehouse is shared
+    * (Bench and Verify each run in a per-process warehouse).
     */
   private[graft] def warehouseHygiene(
       spark: SparkSession,

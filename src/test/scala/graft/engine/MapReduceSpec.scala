@@ -101,17 +101,17 @@ class MapReduceSpec extends AnyFunSuite {
     val keys = Seq("a", "b", "", "k1", "k2", "möö")
     val kvs = List.fill(500)((keys(rnd.nextInt(keys.size)), rnd.alphanumeric.take(6).mkString))
     val r = 3
-    val parts = spark.sparkContext
-      .parallelize(kvs.map(kv => (kv, ())), 4)
-      .repartitionAndSortWithinPartitions(new MapReduce.Md5KeyPartitioner(r))
-      .mapPartitionsWithIndex { case (i, it) => it.map { case ((k, v), _) => (i, k, v) } }
+    val parts = MapReduce
+      .shuffleSort(spark.sparkContext.parallelize(kvs, 4), r, MapReduce.PairLines)
+      .mapPartitionsWithIndex { case (i, it) => it.map { case (k, v) => (i, k, v) } }
       .collect()
+    assert(parts.map(t => (t._2, t._3)).toList.sorted === kvs.sorted)
     // every key appears in exactly the partition md5Partition assigns
     parts.foreach { case (p, k, _) => assert(p === MapReduce.md5Partition(k, r)) }
-    // within each partition, rows are sorted by (key, value)
+    // within each partition, rows are sorted by the whole `key\tvalue` line
     parts.groupBy(_._1).values.foreach { rows =>
-      val kv = rows.map(t => (t._2, t._3)).toSeq
-      assert(kv === kv.sorted)
+      val lines = rows.map(t => s"${t._2}\t${t._3}").toSeq
+      assert(lines === lines.sorted(Utf8Order.lines))
     }
   }
 

@@ -1,6 +1,8 @@
 package graft.engine
 
 import org.scalatest.funsuite.AnyFunSuite
+
+import java.nio.charset.StandardCharsets.UTF_8
 import scala.util.Random
 
 /** Property-style tests for the reference partition function: range,
@@ -55,8 +57,13 @@ class PartitionPropertySpec extends AnyFunSuite {
     val rnd = new Random(3)
     val part = new MapReduce.Md5KeyPartitioner(8)
     (1 to 300).foreach { _ =>
-      val key = randomKey(rnd)
-      assert(part.getPartition(key) === part.getPartition((key, randomKey(rnd))))
+      val key = randomKey(rnd) + (if (rnd.nextBoolean()) "é😀" else "")
+      val value = randomKey(rnd)
+      val p = part.getPartition(key)
+      assert(p === part.getPartition((key, value)))
+      // the engine's shuffle lines route by the bytes before the first tab
+      assert(p === part.getPartition(s"$key\t$value\tmore".getBytes(UTF_8)))
+      assert(p === part.getPartition(key.getBytes(UTF_8)))
     }
   }
 

@@ -76,12 +76,12 @@ class RunJobSpec extends AnyFunSuite {
     }.sorted
     assert(merged === goldenLines("word_count_correct.txt").sorted)
 
-    // each part is internally (key,value)-sorted and keys are md5-routed,
-    // like a reference part file (tests/test_worker_07/08 invariants)
+    // each part is sorted by whole line in code point order and keys are
+    // md5-routed, like a reference part file (tests/test_worker_07/08)
     listing.zipWithIndex.foreach { case (f, i) =>
       val src = Source.fromFile(new File(outDir, f), "UTF-8")
       val ls = try src.getLines().toList finally src.close()
-      assert(ls === ls.sorted, s"$f not sorted")
+      assert(ls === ls.sorted(Utf8Order.lines), s"$f not sorted")
       ls.foreach { l =>
         val key = l.substring(0, l.indexOf('\t'))
         assert(MapReduce.md5Partition(key, 2) === i, s"key '$key' in wrong part")
@@ -171,6 +171,19 @@ class RunJobSpec extends AnyFunSuite {
         numMappers = 4, numReducers = 2)
     }
     assert(!new File(outDir).exists, Option(new File(outDir).list()).map(_.toList))
+  }
+
+  test("runJob: a key holding a tab fails the job with IllegalArgumentException naming it, no output dir") {
+    val outDir = freshOutputDir("tabkey")
+    val e = intercept[SparkException] {
+      MapReduce.runJob(spark, resource("input"), outDir,
+        mapper = line => Iterator(("ok", "1"), ("tab\tkey", line)),
+        reducer = (k, vs) => Iterator.single(s"$k\t${vs.size}"), numMappers = 4, numReducers = 2)
+    }
+    val cause = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .collectFirst { case c: IllegalArgumentException => c }
+    assert(cause.exists(_.getMessage.contains("\"tab\\tkey\"")), e)
+    assert(!new File(outDir).exists)
   }
 
   test("runJob: a missing input dir throws and leaves no output dir") {

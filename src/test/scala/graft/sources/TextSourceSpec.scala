@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.GraftSession
-import graft.engine.MapReduce
+import graft.engine.{MapReduce, Utf8Order}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -57,7 +57,7 @@ class TextSourceSpec extends AnyFunSuite {
     // concatenated parts hold the full golden multiset; each part is sorted
     val all = parts.flatMap { p =>
       val lines = Files.readAllLines(Paths.get(out, p)).asScala.toList
-      assert(lines === lines.sorted, s"$p not sorted")
+      assert(lines === lines.sorted(Utf8Order.lines), s"$p not sorted")
       lines
     }
     assert(all.sorted === golden("word_count_correct.txt").sorted)
