@@ -8,7 +8,7 @@ import org.apache.hadoop.mapreduce.lib.input.{FileSplit, LineRecordReader}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.{Partition, Partitioner, SparkContext, TaskContext}
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.graft.InputMetricsBridge
+import org.apache.spark.graft.{InputMetricsBridge, LineSorter}
 import org.apache.spark.network.util.JavaUtils
 import org.apache.spark.rdd.{RDD, ShuffledRDD}
 import org.apache.spark.serializer.{DeserializationStream, SerializationStream, Serializer, SerializerInstance}
@@ -48,19 +48,20 @@ import scala.util.hashing.byteswap32
   * `(line, count)`, md5 of the bytes before the first tab picks the
   * reducer, each reduce partition is sorted by unsigned byte order of
   * the whole line — the same order as code points, so the reference's —
-  * and each record is expanded back into `count` copies → a streaming
-  * adjacent-key group iterator → reducer → `writeParts`, where each
-  * reduce task streams its sorted partition straight into its own
-  * `part-NNNNN` file. Records equal in key and value are
-  * indistinguishable, so collapse + expand hands every reducer the same
-  * value stream as shuffling each pair alone would, while a word count
-  * shuffles about a quarter of the records. Each phase is distributed
-  * and never materializes a partition in memory (iterator chain
-  * end-to-end; the collapse table is a fixed size per map task),
-  * mirroring the reference's <1 MiB streaming bound
-  * (tests/test_worker_11.py:119-122) and scaling to arbitrarily large
-  * partitions (Spark's sort spills to disk). The reader and the sink see
-  * the session's Hadoop configuration through one broadcast per job.
+  * in Spark's binary external sorter (`LineSorter`), and each record is
+  * expanded back into `count` copies → a streaming adjacent-key group
+  * iterator → reducer → `writeParts`, where each reduce task streams its
+  * sorted partition straight into its own `part-NNNNN` file. Records
+  * equal in key and value are indistinguishable, so collapse + expand
+  * hands every reducer the same value stream as shuffling each pair
+  * alone would, while a word count shuffles about a quarter of the
+  * records. Each phase is distributed and never materializes a partition
+  * on the heap (iterator chain end-to-end; the collapse table is a fixed
+  * size per map task; the sort keeps its records in pages of the task's
+  * accounted execution memory and spills them to disk), mirroring the
+  * reference's <1 MiB streaming bound (tests/test_worker_11.py:119-122)
+  * and scaling to arbitrarily large partitions. The reader and the sink
+  * see the session's Hadoop configuration through one broadcast per job.
   * `run`/`runKV` expose the same core as Datasets.
   *
   * A native key may not hold a tab: the text protocol cannot express
@@ -86,17 +87,18 @@ object MapReduce {
   }
 
   /** The 128-bit digest `d` as a big-endian unsigned integer, mod R. It
-    * is reduced byte by byte (Horner's rule mod R); each step stays below
-    * 256·R < 2^39, so a Long never overflows and the result equals the
-    * BigInteger formula.
+    * is reduced one 32-bit word at a time (Horner's rule mod R): the
+    * remainder is below R < 2^31, so `acc << 32 | word` stays below 2^63,
+    * a Long never overflows and the result equals the BigInteger formula.
     */
   private def digestMod(d: Array[Byte], numPartitions: Int): Int = {
     val r = numPartitions.toLong
     var acc = 0L
     var i = 0
     while (i < d.length) {
-      acc = ((acc << 8) | (d(i) & 0xff)) % r
-      i += 1
+      val word = (d(i) & 0xffL) << 24 | (d(i + 1) & 0xff) << 16 | (d(i + 2) & 0xff) << 8 | (d(i + 3) & 0xff)
+      acc = ((acc << 32) | word) % r
+      i += 4
     }
     acc.toInt
   }
@@ -109,7 +111,7 @@ object MapReduce {
   }
 
   /** Routes records by md5(key) % R, so records with equal keys
-    * co-locate while the shuffle ordering can still sort by the whole
+    * co-locate while the reduce-side sort can still order by the whole
     * line. A shuffle line (`Array[Byte]`) routes by the UTF-8 bytes before
     * its first tab, a `(key, value)` tuple by its key, and a bare key by
     * itself, so `key\tvalue`, `(key, value)` and `key` all agree.
@@ -176,13 +178,16 @@ object MapReduce {
     * its own. Unsigned UTF-8 byte order is code point order, the order
     * the reference's Python sort gives. The `key\t…` lines of one key are
     * contiguous, as the reducers need, because no key holds a tab. The
-    * shuffle moves the lines in `LineSerializer`'s format.
+    * shuffle moves the lines in `LineSerializer`'s format, unordered; the
+    * reduce task sorts them in `LineSorter`, Spark's binary external
+    * sorter: records in pages of accounted execution memory, compared by
+    * an 8-byte prefix and byte by byte past it, spilled to disk under
+    * memory pressure or past the shuffle's force-spill thresholds.
     */
   private[engine] def shuffleSort[T <: AnyRef: ClassTag](records: RDD[T], numReducers: Int, codec: LineCodec[T]): RDD[T] =
     new ShuffledRDD[Array[Byte], Long, Long](records.mapPartitions(new Collapse(_, codec)), new Md5KeyPartitioner(numReducers))
-      .setKeyOrdering(UnsignedBytes)
       .setSerializer(new LineSerializer)
-      .mapPartitions(new Expand(_, codec), preservesPartitioning = true)
+      .mapPartitions(part => new Expand(LineSorter.sort(part, TaskContext.get()), codec), preservesPartitioning = true)
 
   /** How one kind of record becomes its shuffle line and back. `slot`
     * hashes a record for `Collapse`.
@@ -233,11 +238,6 @@ object MapReduce {
     }
     override def encode(line: String): Array[Byte] = line.getBytes(UTF_8)
     override def decode(line: Array[Byte]): String = new String(line, UTF_8)
-  }
-
-  /** Shuffle lines in unsigned byte order. */
-  private object UnsignedBytes extends Ordering[Array[Byte]] {
-    override def compare(a: Array[Byte], b: Array[Byte]): Int = Arrays.compareUnsigned(a, b)
   }
 
   /** The shuffle's wire format for `(line, count)` records: the line's
@@ -604,6 +604,8 @@ object MapReduce {
   private final class RangeLines(chunks: Array[Chunk], conf: Configuration, ctx: TaskContext)
       extends Iterator[String] {
     private val counter = new InputMetricsBridge.Counter(ctx)
+    // copies the whole conf into a JobConf, so one serves every chunk
+    private val attempt = new TaskAttemptContextImpl(conf, new TaskAttemptID())
     private var nextChunk = 0
     private var reader: LineRecordReader = _
     private var ready = false
@@ -615,9 +617,7 @@ object MapReduce {
           val c = chunks(nextChunk)
           nextChunk += 1
           reader = new LineRecordReader()
-          reader.initialize(
-            new FileSplit(new Path(c.path), c.start, c.length, Array.empty[String]),
-            new TaskAttemptContextImpl(conf, new TaskAttemptID()))
+          reader.initialize(new FileSplit(new Path(c.path), c.start, c.length, Array.empty[String]), attempt)
         }
         ready = reader.nextKeyValue()
         if (!ready) close()

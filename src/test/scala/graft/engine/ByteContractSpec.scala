@@ -15,30 +15,17 @@ import scala.util.Random
   * whole line, whatever the JVM's default charset and however the input
   * is split. Expected bytes come from `Utf8Order`, which never uses the
   * JVM's `String` order. The keys mix a character below `\t`, U+FF48
-  * (UTF-16 orders it after U+1F600, code points before) and the empty
-  * key.
+  * (UTF-16 orders it after U+1F600, code points before), the empty key,
+  * and keys that share their first 8 bytes, which the engine's sort
+  * prefix cannot tell apart.
   */
 class ByteContractSpec extends AnyFunSuite {
+  import ByteContractSpec.{inputDir, pairLines}
 
   lazy val spark: SparkSession = GraftSession.local(4, "byte-contract-spec")
 
-  /** Mapper lines, unsorted, with repeats. */
-  private val pairLines =
-    Seq("😀\t1", "a\t2", "ｈ\t1", "a\u0001\t1", "\t1", "café\t1", "a\t1", "a\t1", "café\t1")
-
   private val wcMap = """tr '[A-Z]' '[a-z]' | awk '{ for (i = 1; i <= NF; i++) print $i"\t1" }'"""
   private val wcReduce = """cut -f1 | uniq -c | awk '{print $2"\t"$1}'"""
-
-  private def inputDir(tag: String, files: Seq[String]): String = {
-    val dir = Files.createTempDirectory(s"graft-$tag-in-").toFile
-    dir.deleteOnExit()
-    files.zipWithIndex.foreach { case (text, i) =>
-      val f = new File(dir, f"file$i%02d")
-      Files.write(f.toPath, text.getBytes(UTF_8))
-      f.deleteOnExit()
-    }
-    dir.getPath
-  }
 
   private def outputDir(tag: String): String = {
     val base = Files.createTempDirectory(s"graft-$tag-out-").toFile
@@ -78,7 +65,9 @@ class ByteContractSpec extends AnyFunSuite {
     val out = outputDir("order")
     identityJob(inputDir("order", Seq(pairLines.mkString("", "\n", "\n"))), out, 1, 1)
     // written out by hand: U+0001 < \t, and U+FF48 (EF BD 88) < U+1F600 (F0 9F 98 80)
-    val expected = Seq("\t1", "a\u0001\t1", "a\t1", "a\t1", "a\t2", "café\t1", "café\t1", "ｈ\t1", "😀\t1")
+    // and past 8 shared bytes: U+0000 < \t < '1' < é (C3 A9), and é as the 8th byte sorts after 'h'
+    val expected = Seq("\t1", "a\u0001\t1", "a\t1", "a\t1", "a\t2", "abcdefgh\u0000\t1", "abcdefgh\t1",
+      "abcdefgh1\t1", "abcdefghé\t1", "abcdefgé\t1", "café\t1", "café\t1", "ｈ\t1", "😀\t1")
     assert(new String(parts(out, 1).head, UTF_8) === expected.mkString("", "\n", "\n"))
   }
 
@@ -139,4 +128,23 @@ class ByteContractSpec extends AnyFunSuite {
       assertParts(parts(piped, 3), expected, s"runExecJob M=$m")
     }
   }
+}
+
+object ByteContractSpec {
+
+  /** A temporary input directory holding `files`, named `file00`, `file01`, …. */
+  def inputDir(tag: String, files: Seq[String]): String = {
+    val dir = Files.createTempDirectory(s"graft-$tag-in-").toFile
+    dir.deleteOnExit()
+    files.zipWithIndex.foreach { case (text, i) =>
+      val f = new File(dir, f"file$i%02d")
+      Files.write(f.toPath, text.getBytes(UTF_8))
+      f.deleteOnExit()
+    }
+    dir.getPath
+  }
+
+  /** Mapper lines, unsorted, with repeats. */
+  val pairLines: Seq[String] = Seq("😀\t1", "abcdefghé\t1", "a\t2", "abcdefgh1\t1", "ｈ\t1", "abcdefgé\t1",
+    "a\u0001\t1", "\t1", "abcdefgh\t1", "café\t1", "a\t1", "abcdefgh\u0000\t1", "a\t1", "café\t1")
 }
