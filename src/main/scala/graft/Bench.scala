@@ -246,9 +246,9 @@ object Bench {
         // systematically contended window (r20 fresh-boot evidence: two
         // re-take attempts started at 0.38/0.27 yet tripped 12 and 16+
         // 3×-prior adjudications and finished 183.0 s / 234.1 s vs the
-        // 146.0 s anchor, while independent steady NgramBench probes of
-        // the same queries landed ON the anchor values — the code was
-        // still capable of the committed total). Between two runs of
+        // 146.0 s anchor, while independent steady single-query runs
+        // (SPARK_GRAFT_ONLY) of the same queries landed ON the anchor
+        // values — the code was still capable of the committed total). Between two runs of
         // the SAME code, contention only ever slows a window, so a run
         // that is slower in total AND carries in-run contention
         // evidence (adjudication triples) must not replace the quieter

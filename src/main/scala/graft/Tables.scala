@@ -11,9 +11,9 @@ object Tables {
 
   /** Reader-construction memo (r20): `spark.read.parquet` costs
     * 65–85 ms of DRIVER time per call (file listing + footer schema
-    * inference + source resolution — measured by ProbeReadOverhead:
-    * lineitem 84.6 ms/call, orders 70.2, documents 63.0, and the
-    * 10-view SQL-surface registration 625 ms/call), and every query
+    * inference + source resolution; OPTIMIZATION_r20.md "Changed this
+    * session": lineitem 84.6 ms/call, orders 70.2, documents 63.0, and
+    * the 10-view SQL-surface registration 625 ms/call), and every query
     * builder constructs its table readers fresh, so the ~400 timed
     * query executions of a bench pay it 1–4× EACH — tens of seconds of
     * pure plan-construction overhead inside the timed paths. This memo
@@ -39,9 +39,10 @@ object Tables {
   /** Self-validating ARTIFACT reader memo (r20 continuation). The
     * layout/MV family reads its warehouse artifacts by PATH
     * (`spark.read.parquet`), which costs ~55–60 ms of driver time per
-    * call (footer schema inference + source resolution —
-    * ProbeReadOverhead: 59.8 ms/call for a 1-file artifact dir,
-    * 55.4 ms for a 24-file one; the cost is per-READ, not per-file),
+    * call (footer schema inference + source resolution;
+    * OPTIMIZATION_r20.md "Layout/MV artifact reader memo": 59.8 ms/call
+    * for a 1-file artifact dir, 55.4 ms for a 24-file one; the cost is
+    * per-READ, not per-file),
     * and the family's serves pay it 2–4× per query. Unlike the
     * immutable fixture tables above, artifact dirs MUTATE within a
     * session (compaction/vacuum rewrite or physically delete files), so
@@ -277,11 +278,7 @@ object GraftSession {
     p.toString
   }
 
-  def local(
-      cores: Int = Runtime.getRuntime.availableProcessors,
-      appName: String = "graft",
-      broadcastTimeoutSec: Int = 300
-  ): SparkSession = {
+  def local(cores: Int = Runtime.getRuntime.availableProcessors, appName: String = "graft"): SparkSession = {
     val spark = SparkSession
       .builder()
       .master(s"local[$cores]")
@@ -308,33 +305,21 @@ object GraftSession {
       // the tens of KB (a large heap/sketch) must NOT rely on this
       // session default — scope a lower threshold around that job.
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "131072")
-      // broadcast deadline, CALLER-SCOPED (r20): the 300 s default clock
-      // starts when the QUERY starts, not when the broadcast's inputs
-      // are ready — any plan with a broadcast join ABOVE a >5-minute
-      // upstream chain (every index/label build past the fourth decade)
-      // dies on the default with the upstream work still healthy, so
-      // the build-scale probe tools pass 3600 (a build budget, not a
-      // hang bound; genuinely-stuck stages still fail via task-level
-      // timeouts). Verify/Bench/spec sessions keep the 300 s default:
-      // nothing they run has a >5-min upstream chain, and a genuinely
-      // wedged broadcast there should fail the gate in minutes, not
-      // stall it for an hour.
-      .config("spark.sql.broadcastTimeout", broadcastTimeoutSec.toString)
+      // a broadcast's 300 s clock starts with the query, not with its
+      // inputs: nothing Verify, Bench or the specs run has a longer
+      // upstream chain, and a wedged broadcast fails in minutes (builds
+      // past the fourth decade needed 3600 s: OPTIMIZATION_r20.md,
+      // "Inherited state")
+      .config("spark.sql.broadcastTimeout", "300")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.warehouse.dir", warehouseDir)
       .config("spark.ui.enabled", "false")
       .config("spark.hadoop.fs.file.impl", classOf[GraftLocalFileSystem].getName)
       .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[GraftLocalFs].getName)
-      // shuffle codec, parameterised for scale runs (guide §2.3 "measure
-      // shuffle bytes with each"): the r20 census measured the WHOLE
-      // 200-query suite at 525 MB shuffle writes / 664 MB reads, ZERO
-      // spill (ProbeShuffleBytes ALL, sf0.1) — at ~2.6 MB/query a
-      // lz4→zstd ratio delta is unmeasurable beneath window noise, so
-      // the local default stays lz4 and the driver bench comparable.
-      // The fifth-decade build probes already run zstd for disk headroom
-      // (probe_r20.sh passes it as a JVM flag; this env covers
-      // sbt-launched sessions at scale).
-      .config("spark.io.compression.codec", sys.env.getOrElse("GRAFT_IO_CODEC", "lz4"))
+      // lz4: the whole 200-query suite at sf0.1 shuffles ~2.6 MB/query
+      // with zero spill, so a zstd ratio gain is unmeasurable beneath
+      // window noise (OPTIMIZATION_r20.md, "Shuffle codec")
+      .config("spark.io.compression.codec", "lz4")
       // the native expressions' SQL surface (graft_fdot & co.) plus the
       // as-of-join strategy/rule ride on every engine session, so raw
       // spark.sql text reaches them exactly like the builders do

@@ -77,8 +77,9 @@ object Dedup {
     * explode + ObjectHashAggregate + exchange formulation was pure
     * overhead (guide §2.4): this shape runs signature derivation as a
     * narrow map inside the scan stage — no fan-out rows, no aggregation
-    * buffer, no shuffle. In-JVM A/B (ProbeSigMap, parity-gated):
-    * map ≤ agg at every rep, and the counts twin below is 3.3× faster.
+    * buffer, no shuffle. In-JVM A/B, parity-gated: map ≤ agg at every
+    * rep, and the counts twin below is 3.3× faster (OPTIMIZATION_r20.md,
+    * "Signature derivation as a pure map").
     *
     * The null-signature drop (zero-shingle docs) is an
     * `explode(array_compact(array(sig)))`, NOT a `.filter(sig.isNotNull)`:
@@ -111,7 +112,7 @@ object Dedup {
     * `shinglesOf(docs).groupBy(doc_id).count()` (wordShingles returns
     * the distinct set, so its size IS the exploded row count; the n > 0
     * filter reproduces the aggregate's no-group-for-empty row set).
-    * Same §2.4 rationale as [[signaturesOf]]: ProbeSigMap measures this
+    * Same §2.4 rationale as [[signaturesOf]]: the same A/B measured this
     * at 0.17 s vs 0.58 s for the explode + hash-agg form at sf0.1, and
     * the exchange it deletes was O(corpus) in every verification path.
     * The zero-count drop is the same single-evaluation
@@ -167,7 +168,7 @@ object Dedup {
   ): DataFrame = {
     import spark.implicits._
     // sizes as a narrow map over the corpus scan (r20 continuation 2,
-    // ProbeSigMap 3.3×) — every caller passes full-corpus shingle rows,
+    // 3.3×, see shingleCountsOf) — every caller passes full-corpus shingle rows,
     // so the doc set is exactly documentsFanned
     val sizes = shingleCountsOf(Tables.documentsFanned(spark, dir))
     // NOTE (r19, measured): a semi-join reduction of `sh` to candidate
@@ -324,10 +325,7 @@ object Dedup {
       JaccardThreshold
     )
 
-  /** Pre-verification LSH candidate pairs (factored out of [[minhashLsh]]
-    * so the ProbeLabelStages dev tool can attribute build cost between
-    * candidate production and exact-Jaccard verification).
-    */
+  /** Pre-verification LSH candidate pairs of [[minhashLsh]]. */
   private[graft] def lshCandidates(
       spark: SparkSession,
       dir: String,
@@ -401,25 +399,6 @@ object Dedup {
   // strong references can't pin dead contexts.
   private val labelCache =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String, Option[Int]), DataFrame]()
-
-  /** Evicts (unpersisting) every cached cluster-label frame for
-    * (spark, dir) — the build-probe hook: ProbeBuilds re-runs the label
-    * fixpoint under min-of-N timing, which the session cache would
-    * otherwise short-circuit after run 1. Returns the number evicted.
-    */
-  private[graft] def evictLabelCache(spark: SparkSession, dir: String): Int = {
-    var n = 0
-    val it = labelCache.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if ((e.getKey._1 eq spark) && e.getKey._2 == dir) {
-        e.getValue.unpersist()
-        it.remove()
-        n += 1
-      }
-    }
-    n
-  }
 
   /** (doc_id, cluster_id) for every document — the label fixpoint alone,
     * without the cluster-size aggregation `clusters` adds on top.
@@ -497,28 +476,7 @@ object Dedup {
     * Returns (labels df [u, lbl], rounds) — the round count feeds the
     * SkewSpec chain-topology bound.
     */
-  /** Per-round fixpoint telemetry for [[connectedComponents]] — consumed
-    * by the ProbeLabelStages dev tool, no-op in production paths.
-    * `starSec` is the large-star+small-star construction (through the
-    * round's localCheckpoint materialization), `checkSec` the
-    * convergence test (count + except).
-    */
-  private[graft] case class CcRound(
-      round: Int,
-      edgesIn: Long,
-      edgesOut: Long,
-      starSec: Double,
-      checkSec: Double,
-      parts: Int
-  )
-
-  private[graft] def connectedComponents(pairs: DataFrame): (DataFrame, Int) =
-    connectedComponents(pairs, _ => ())
-
-  private[graft] def connectedComponents(
-      pairs: DataFrame,
-      probe: CcRound => Unit
-  ): (DataFrame, Int) = {
+  private[graft] def connectedComponents(pairs: DataFrame): (DataFrame, Int) = {
     val spark = pairs.sparkSession
     import spark.implicits._
     // canonical downward edges (u > v), deduped
@@ -548,7 +506,6 @@ object Dedup {
       // small-star: per node, link its smaller neighbors and itself to
       // their minimum
       val ssMin = ls.groupBy($"u").agg(min($"v").as("m"))
-      val tStar0 = System.nanoTime()
       val next = ls
         .join(ssMin, "u")
         .filter($"v" =!= $"m")
@@ -556,23 +513,11 @@ object Dedup {
         .union(ssMin.select($"u", $"m".as("v")))
         .distinct()
         .localCheckpoint()
-      val starSec = (System.nanoTime() - tStar0) / 1e9
       rounds += 1
       // exact fixpoint test on canonical edge SETS: same size and no
       // new-side difference ⇒ equal (both sides are distinct)
-      val tChk0 = System.nanoTime()
       val nextCount = next.count()
       converged = nextCount == edgeCount && next.except(edges).isEmpty
-      probe(
-        CcRound(
-          rounds,
-          edgeCount,
-          nextCount,
-          starSec,
-          (System.nanoTime() - tChk0) / 1e9,
-          next.rdd.getNumPartitions
-        )
-      )
       val prev = edges
       edges = next
       edgeCount = nextCount
@@ -582,15 +527,6 @@ object Dedup {
   }
 
   val ContainmentThreshold = 0.8
-
-  /** Prefix-filter slack threshold. A pair passes iff round6(inter/min)
-    * ≥ 0.8, i.e. inter ≥ 0.7999995·min(na,nb) — any constant strictly
-    * below that bound is a safe prefix parameter (a smaller value only
-    * LENGTHENS prefixes, adding candidates, never dropping a passing
-    * pair). 0.799 leaves three orders of magnitude of slack over the
-    * rounding boundary at the cost of ≤1 extra prefix row per doc.
-    */
-  private[graft] val ContainmentPrefixT = 0.799
 
   /** Asymmetric CONTAINMENT near-dup: c(A→B) = |A∩B| / |A| — flags a
     * short document wholly (or mostly) quoted inside a longer one, the
@@ -611,31 +547,13 @@ object Dedup {
     * LINEAR in the corpus by construction (the sf1h→sf10h probe rows
     * read exactly-linear because that IS the law, not a defect).
     *
-    * Two candidate-pruning alternatives were evaluated for r20 and
-    * REJECTED on measurement; both decisions are recorded here so they
-    * aren't re-litigated from folklore:
-    *   - the r19 SIZE-RATIO prefilter does not transfer: the reported
-    *     value is the max direction, inter/min(na,nb), and
-    *     inter ≤ min(na,nb) makes any size bound vacuous — a 5-shingle
-    *     doc inside a 5 000-shingle doc scores 1.0, so no (na, nb)
-    *     shape is excludable (vs Jaccard, where min ≥ t·max is forced).
-    *   - PREFIX FILTERING (the AllPairs/PPJoin family, Xiao et al.,
-    *     WWW'08 — the correct analog; see [[containmentPrefix]]) is
-    *     result-identical (ContainmentPrefixSpec) but measured SLOWER
-    *     on both corpus shapes at every probed scale (ProbeContainment,
-    *     same-JVM alternating arms): Heap's-vocab sf1h/3h/10h warm
-    *     4.0/11.2/24.3 s direct vs 5.8/13.6/28.5 s prefix — candidates
-    *     are tight (2.2× true pairs at sf10h) but the df-ordered window
-    *     + candidate distinct + re-expansion verification costs more
-    *     than the cap-linearized single-pass join it saves; fixed-vocab
-    *     sf0.1 warm 2.5/1.6 s (capped/uncapped) direct vs 6.7/6.9 s
-    *     prefix — a 31-word vocabulary has NO rare shingles, so
-    *     prefixes stop being selective (196 313 candidates vs 256 true
-    *     pairs, 767×) and the method's core assumption (a rare-token
-    *     tail) collapses. Prefix filtering wins when the pair mass is
-    *     verification-dominated and the vocabulary long-tailed — the
-    *     UNCAPPED web-scale regime — not under a df cap that already
-    *     bounds the join linearly.
+    * Two candidate prunings were measured in r20 and rejected
+    * (OPTIMIZATION_r20.md, "Inherited state" and "Measured and
+    * rejected"): a size-ratio prefilter is vacuous here, since the max
+    * direction inter/min(na,nb) lets a 5-shingle doc inside any larger
+    * one score 1.0; prefix filtering (AllPairs/PPJoin) was
+    * result-identical but slower at every probed scale, because the cap
+    * already makes this single-pass join linear.
     */
   def containment(spark: SparkSession, dir: String, maxShingleDf: Option[Int]): DataFrame = {
     import spark.implicits._
@@ -647,101 +565,8 @@ object Dedup {
         val keep = sh.groupBy($"sh").agg(count(lit(1)).as("df")).filter($"df" <= cap).select($"sh")
         pairCommonCounts(sh.join(keep, "sh"))
     }
-    containmentVerify(spark, common, sh, sizes)
-  }
-
-  /** Prefix-filtered containment — the measured-and-rejected r20
-    * alternative (see the decision record on [[containment]]): order
-    * shingles by ascending document frequency; for a passing pair the
-    * min-size side A must share ≥ t·na kept shingles with B, so if B
-    * misses ALL of A's first L_A = ka − ⌊t'·na⌋ + 1 rarest shingles
-    * (t' < t, slack for the 6dp rounding boundary) then
-    * inter ≤ ka − L_A < t'·na and the pair cannot pass — joining only
-    * each doc's L-prefix against the full kept index yields a candidate
-    * superset at Σ dfPrefix·df join rows instead of Σ df². Docs whose
-    * prefix length is ≤ 0 (capped below t'·na kept shingles) emit no
-    * prefix rows: they cannot be the min side of a passing pair, and
-    * they still appear on the full side. Kept compiled + spec-pinned
-    * (ContainmentPrefixSpec) + probe-armed (ProbeContainment) as the
-    * scale path for uncapped long-tailed-vocabulary corpora.
-    */
-  private[graft] def containmentPrefix(
-      spark: SparkSession,
-      dir: String,
-      maxShingleDf: Option[Int]
-  ): DataFrame = {
-    val (kept, sizes, cand) = containmentPrefixParts(spark, dir, maxShingleDf)
-    containmentVerify(spark, cand, kept, sizes)
-  }
-
-  /** (kept shingle rows, uncapped sizes, prefix-join candidate pairs) of
-    * the prefix-filtered containment — split out so the A/B probe can
-    * count candidates against true pairs (the pinned candidate law).
-    */
-  private[graft] def containmentPrefixParts(
-      spark: SparkSession,
-      dir: String,
-      maxShingleDf: Option[Int]
-  ): (DataFrame, DataFrame, DataFrame) = {
-    import spark.implicits._
-    import org.apache.spark.sql.expressions.Window
-    val sh0 = shingleRows(spark, dir)
-    val sizes = shingleCountsOf(Tables.documentsFanned(spark, dir))
-    val dfreq = sh0.groupBy($"sh").agg(count(lit(1)).as("df"))
-    val kept = maxShingleDf match {
-      case None      => sh0.join(dfreq, "sh")
-      case Some(cap) => sh0.join(dfreq.filter($"df" <= cap), "sh")
-    }
-    // per-doc (df asc, sh) rank and kept-count in ONE window pass: the
-    // count rides the row_number's sort with an unbounded frame, so the
-    // prefix derivation costs a single doc_id exchange + sort
-    val w = Window.partitionBy($"doc_id").orderBy($"df", $"sh")
-    val prefix = kept
-      .withColumn("rk", row_number().over(w))
-      .withColumn(
-        "ka",
-        count(lit(1)).over(w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing))
-      )
-      .join(sizes, "doc_id")
-      .filter($"rk" <= $"ka" - floor(lit(ContainmentPrefixT) * $"n") + 1)
-      .select($"doc_id", $"sh")
-    val cand = prefix
-      .as("a")
-      .join(
-        kept.select($"doc_id", $"sh").as("b"),
-        col("a.sh") === col("b.sh") && col("a.doc_id") =!= col("b.doc_id")
-      )
-      .select(
-        least(col("a.doc_id"), col("b.doc_id")).as("id_a"),
-        greatest(col("a.doc_id"), col("b.doc_id")).as("id_b")
-      )
-      .distinct()
-    (kept, sizes, cand)
-  }
-
-  /** Exact containment verification over a candidate pair set: recount
-    * shared kept shingles per pair (candidate-bounded — Σ over pairs of
-    * |kept(a)|, never Σ df²), score the max direction, filter. Shared by
-    * the prefix-filtered path and the direct formulation so the scoring
-    * can't drift between them.
-    */
-  private def containmentVerify(
-      spark: SparkSession,
-      cand: DataFrame,
-      kept: DataFrame,
-      sizes: DataFrame
-  ): DataFrame = {
-    import spark.implicits._
     val r6 = graft.text.TextAnalysis.round6 _
-    val inter =
-      if (cand.columns.contains("inter")) cand
-      else
-        cand
-          .join(kept.select($"doc_id".as("id_a"), $"sh"), "id_a")
-          .join(kept.select($"doc_id".as("id_b"), $"sh"), Seq("id_b", "sh"))
-          .groupBy($"id_a", $"id_b")
-          .agg(count(lit(1)).as("inter"))
-    inter
+    common
       .join(sizes.select($"doc_id".as("id_a"), $"n".as("na")), "id_a")
       .join(sizes.select($"doc_id".as("id_b"), $"n".as("nb")), "id_b")
       .withColumn("containment", r6(greatest($"inter" / $"na", $"inter" / $"nb")))
@@ -749,7 +574,6 @@ object Dedup {
       .select($"id_a", $"id_b", $"containment")
       .orderBy($"id_a", $"id_b")
   }
-
 
   /** Cap-selection ledger for the df-capped dedup family: for each
     * candidate stop-shingle cap, the EXACT cost/benefit of applying it —
@@ -1017,30 +841,9 @@ object Dedup {
   def batchAdmit(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val t = incrementalIndexTable(spark, dir)
-    batchAdmitOn(
-      spark,
-      spark.table(t),
-      admitArrivals(spark, dir),
-      Tables.documentsFanned(spark, dir).filter($"doc_id" % NewBatchMod =!= 0),
-      indexBands = Some(spark.table(bandsTableOf(t)))
-    )
-  }
-
-  /** [[batchAdmit]] over explicit (index, batch, corpus) frames — the
-    * fixed-batch seam the scale probe drives (ProbeFixedBatch): hold
-    * the arriving batch CONSTANT while the index/corpus side grows, so
-    * the per-tick cost claim ("flat at fixed batch") is a measured row
-    * rather than an argument. The registered query passes the same-dir
-    * frames and is unchanged.
-    */
-  private[graft] def batchAdmitOn(
-      spark: SparkSession,
-      index: DataFrame,
-      batch: DataFrame,
-      corpus: DataFrame,
-      indexBands: Option[DataFrame] = None
-  ): DataFrame = {
-    import spark.implicits._
+    val index = spark.table(t)
+    val batch = admitArrivals(spark, dir)
+    val corpus = Tables.documentsFanned(spark, dir).filter($"doc_id" % NewBatchMod =!= 0)
     // the batch signature/size frames are shared by BOTH arms (index
     // admission and intra-batch self-dedup) — computed once here,
     // checkpointed below, and threaded into the index arm so the
@@ -1064,7 +867,7 @@ object Dedup {
       indexBucketCap = Some(MinhashBucketCap),
       precomputedSig = Some(sig),
       precomputedSizes = Some(sizes),
-      indexBands = indexBands
+      indexBands = Some(spark.table(bandsTableOf(t)))
     )
     // intra-batch exact: smallest batch doc with the same md5
     val hashes = batch.select($"doc_id", md5($"text").as("h"))
@@ -1101,8 +904,9 @@ object Dedup {
     // SortMergeJoin the exchange AND sort are computed once and reused
     // for both sides; a hint breaks that reuse for a sort it would have
     // shared anyway. (The index arm's equivalent hints measured within
-    // noise in the in-JVM alternating A/B — see dedupBatchAgainstIndexDf's
-    // shjProbes seam — so the whole family keeps the planner's SMJ.)
+    // noise in an in-JVM alternating A/B — OPTIMIZATION_r20.md,
+    // "Measured and rejected" — so the whole family keeps the planner's
+    // SMJ.)
     val bands = bands0.join(okBuckets, Seq("band", "bv"), "left_semi")
     val cand = bands
       .as("a")
@@ -1141,87 +945,6 @@ object Dedup {
         ).otherwise(0L).as("keep")
       )
       .orderBy($"doc_id")
-  }
-
-  /** Dev-only stage decomposition of [[batchAdmitOn]] (ProbeBatchAdmit):
-    * times each arm of the admission composition with its own noop sink
-    * — structure mirrors the production method (same caps, same
-    * checkpoints) so the measured split attributes the registered
-    * query's cost, not a variant's. Not referenced by any registered
-    * query path.
-    */
-  private[graft] def probeBatchAdmitStages(
-      spark: SparkSession,
-      dir: String
-  ): Seq[(String, Double)] = {
-    import spark.implicits._
-    val out = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
-    def t[A](label: String)(f: => A): A = {
-      val t0 = System.nanoTime(); val r = f
-      out += label -> (System.nanoTime() - t0) / 1e9
-      r
-    }
-    def noop(df: DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
-    val idxTable = incrementalIndexTable(spark, dir)
-    val index = spark.table(idxTable)
-    val batch = admitArrivals(spark, dir)
-    val corpus = Tables.documentsFanned(spark, dir).filter($"doc_id" % NewBatchMod =!= 0)
-    val sh = shinglesOf(batch)
-    val sig = t("sig (map signatures+checkpoint)") {
-      // repartition-before-checkpoint mirrors batchAdmitOn (see the
-      // measured rationale there)
-      signaturesOf(batch).repartition(col("doc_id")).localCheckpoint()
-    }
-    val sizes = shingleCountsOf(batch)
-    val idx = dedupBatchAgainstIndexDf(
-      spark, index, batch, corpus,
-      indexBucketCap = Some(MinhashBucketCap),
-      precomputedSig = Some(sig),
-      precomputedSizes = Some(sizes),
-      indexBands = Some(spark.table(bandsTableOf(idxTable)))
-    )
-    t("index arm (capped admission, noop)")(noop(idx))
-    val hashes = batch.select($"doc_id", md5($"text").as("h"))
-    val bex = hashes
-      .as("n")
-      .join(hashes.as("o"), col("n.h") === col("o.h") && col("o.doc_id") < col("n.doc_id"))
-      .groupBy(col("n.doc_id").as("doc_id"))
-      .agg(min(col("o.doc_id")).as("bx"))
-    t("intra-batch exact md5 arm (noop)")(noop(bex))
-    val bands0 = bandedSignatures(sig)
-    val okBuckets = bands0
-      .groupBy($"band", $"bv")
-      .agg(count(lit(1)).as("bc"))
-      .filter($"bc" <= MinhashBucketCap)
-      .select($"band", $"bv")
-    val bands = bands0.join(okBuckets, Seq("band", "bv"), "left_semi")
-    val cand = t("intra-batch banded candidates (checkpoint)") {
-      bands
-        .as("a")
-        .join(
-          bands.as("b"),
-          col("a.band") === col("b.band") && col("a.bv") === col("b.bv") &&
-            col("b.doc_id") < col("a.doc_id")
-        )
-        .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-        .distinct()
-        .localCheckpoint()
-    }
-    val inter = cand
-      .join(sh.select($"doc_id".as("id_a"), $"sh"), "id_a")
-      .join(sh.select($"doc_id".as("id_b"), $"sh"), Seq("id_b", "sh"))
-      .groupBy($"id_a", $"id_b")
-      .agg(count(lit(1)).as("inter"))
-    val bnear = inter
-      .join(sizes.select($"doc_id".as("id_a"), $"n".as("na")), "id_a")
-      .join(sizes.select($"doc_id".as("id_b"), $"n".as("nb")), "id_b")
-      .withColumn("jaccard", round($"inter" / ($"na" + $"nb" - $"inter"), 6))
-      .filter($"jaccard" >= JaccardThreshold)
-      .groupBy($"id_a")
-      .agg(min($"id_b").as("bn"))
-    t("intra-batch verify (noop)")(noop(bnear))
-    out.toSeq
   }
 
   /** The takedown fixture for the signature index: existing-corpus docs
@@ -1472,7 +1195,7 @@ object Dedup {
     * `precomputedSig` / `precomputedSizes`: the batch's (doc_id, mh)
     * signature frame and (doc_id, n) shingle counts, when the caller
     * already derived them — the full admission composition
-    * ([[batchAdmitOn]]) checkpoints both for its intra-batch arm, and
+    * ([[batchAdmit]]) checkpoints both for its intra-batch arm, and
     * recomputing the MinhashAgg (32 md5s per shingle) for the index
     * arm was the composition's single largest duplicated cost.
     */
@@ -1492,16 +1215,7 @@ object Dedup {
       // O(index) re-banding map pass. None re-derives the bands from
       // `index` (the pre-r20 shape, kept for callers without a stored
       // companion and for the parity spec).
-      indexBands: Option[DataFrame] = None,
-      // probe seam (ProbeBatchAdmit A/B only — production callers use
-      // the default): true applies SHUFFLE_HASH hints to the census
-      // semi + batch-bands join. Measured in-JVM with alternating arms
-      // (the only A/B shape this host's slow loadavg decay makes
-      // trustworthy): 2.70–2.93 s hinted vs 2.68–3.02 s unhinted —
-      // within noise, so production keeps the planner's SortMergeJoin
-      // (whose sorted band exchange is shared with the census); the
-      // seam stays so the rejection is re-runnable (PROBE_AB=shj).
-      shjProbes: Boolean = false
+      indexBands: Option[DataFrame] = None
   ): DataFrame = {
     import spark.implicits._
     val exactDup = batchDocs
@@ -1525,14 +1239,14 @@ object Dedup {
           .agg(count(lit(1)).as("bc"))
           .filter($"bc" <= cap)
           .select($"band", $"bv")
-        idxBands0.join(
-          if (shjProbes) ok.hint("shuffle_hash") else ok,
-          Seq("band", "bv"),
-          "left_semi"
-        )
+        // no SHUFFLE_HASH hints on this semi or the batch-bands join:
+        // hinted measured within noise of unhinted in an in-JVM
+        // alternating A/B, and the planner's SortMergeJoin shares its
+        // sorted band exchange with the census (OPTIMIZATION_r20.md,
+        // "Measured and rejected")
+        idxBands0.join(ok, Seq("band", "bv"), "left_semi")
     }
-    val batchBands0 = bandedSignatures(batchSig)
-    val cand0 = (if (shjProbes) batchBands0.hint("shuffle_hash") else batchBands0)
+    val cand0 = bandedSignatures(batchSig)
       .as("a")
       .join(
         idxBands.as("b"),

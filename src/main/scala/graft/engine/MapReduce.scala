@@ -157,16 +157,6 @@ object MapReduce {
     }
   }
 
-  /** The reference's M fixed map tasks for a `Dataset` input
-    * (`Pipe.pipeJob`): `lines` is repartitioned to `numMappers` splits
-    * when its scan planned a different count; `numMappers <= 0` keeps the
-    * scan's natural splits. `runJob`/`runExecJob` read M ranges directly
-    * (`byteRanges`).
-    */
-  private[engine] def withMappers(lines: RDD[String], numMappers: Int): RDD[String] =
-    if (numMappers > 0 && lines.getNumPartitions != numMappers) lines.repartition(numMappers)
-    else lines
-
   /** The shuffle every job shares. Each record is one UTF-8 line
     * (`codec`); every map task collapses repeated records into
     * `(line, count)` (`Collapse`), the line's key (the bytes before its
@@ -190,10 +180,12 @@ object MapReduce {
       .mapPartitions(part => new Expand(LineSorter.sort(part, TaskContext.get()), codec), preservesPartitioning = true)
 
   /** How one kind of record becomes its shuffle line and back. `slot`
-    * hashes a record for `Collapse`.
+    * hashes a record for `Collapse`, and `same` tells it whether two
+    * records are equal by `String.equals` on their fields.
     */
   private[engine] sealed abstract class LineCodec[T] extends Serializable {
     def slot(record: T): Int
+    def same(a: T, b: T): Boolean
     def encode(record: T): Array[Byte]
     def decode(line: Array[Byte]): T
   }
@@ -205,6 +197,7 @@ object MapReduce {
     */
   private[engine] object PairLines extends LineCodec[(String, String)] {
     override def slot(kv: (String, String)): Int = kv._1.hashCode ^ byteswap32(kv._2.hashCode)
+    override def same(a: (String, String), b: (String, String)): Boolean = a._1.equals(b._1) && a._2.equals(b._2)
 
     override def encode(kv: (String, String)): Array[Byte] = {
       val k = kv._1.getBytes(UTF_8)
@@ -236,6 +229,7 @@ object MapReduce {
       }
       keyHash ^ byteswap32(line.hashCode)
     }
+    override def same(a: String, b: String): Boolean = a.equals(b)
     override def encode(line: String): Array[Byte] = line.getBytes(UTF_8)
     override def decode(line: Array[Byte]): String = new String(line, UTF_8)
   }
@@ -317,7 +311,7 @@ object MapReduce {
   private val CollapseSlots = 4096
 
   /** Counts repeats of records in a direct-mapped table of
-    * `CollapseSlots` slots: a record equal (`String` equality) to the one
+    * `CollapseSlots` slots: a record equal (`LineCodec.same`) to the one
     * in its slot bumps that slot's count; any other record evicts the
     * slot as `(line, count)` and takes it. The table is flushed when the
     * input ends. Only evicted and flushed records are encoded. The hash
@@ -341,7 +335,7 @@ object MapReduce {
         val r = it.next()
         val s = codec.slot(r) & (CollapseSlots - 1)
         val h = held(s)
-        if (h != null && h == r) counts(s) += 1
+        if (h != null && codec.same(h.asInstanceOf[T], r)) counts(s) += 1
         else {
           if (h != null) emit(s)
           held(s) = r
@@ -486,8 +480,24 @@ object MapReduce {
       numReducers: Int
   ): Unit =
     withInput(spark, inputDir, numMappers) { (lines, conf) =>
-      writeParts(Pipe.pipeLines(lines, mapperCmd, reducerCmd, numReducers), outputDir, conf)
+      writeParts(pipeLines(lines, mapperCmd, reducerCmd, numReducers), outputDir, conf)
     }
+
+  /** One map task per partition of `lines`: each runs `mapperCmd`, a
+    * shell command, as a child process fed the lines chunk by chunk
+    * (`RDD.pipe`, the reference's `subprocess` pipes), and each reduce
+    * task runs `reducerCmd` the same way over its sorted partition. A
+    * mapper line's key is the text before its first tab, or the whole
+    * line when it has none; md5 of the key picks the line's reducer. Each
+    * line is one record of `shuffleSort`, so the reducer gets each line
+    * byte for byte as the mapper wrote it, sorted by unsigned UTF-8 bytes
+    * of the whole line (equal keys adjacent). The pipes are UTF-8
+    * whatever the JVM's default charset; a child that writes invalid
+    * UTF-8 fails its task.
+    */
+  private def pipeLines(lines: RDD[String], mapperCmd: String, reducerCmd: String, numReducers: Int): RDD[String] =
+    shuffleSort(lines.pipe(Seq("/bin/sh", "-c", mapperCmd), encoding = "UTF-8"), numReducers, PipedLines)
+      .pipe(Seq("/bin/sh", "-c", reducerCmd), encoding = "UTF-8")
 
   /** Runs `job` over `inputDir`'s lines, read as exactly M map
     * partitions (`byteRanges`, `ByteRangeRDD`), with the job's one conf

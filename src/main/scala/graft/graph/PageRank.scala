@@ -53,17 +53,8 @@ object PageRank {
   /** The recurrence over an arbitrary distinct (c, s) pair set —
     * factored out so specs can drive it with synthetic graphs and check
     * against an in-memory reference implementation.
-    *
-    * `checkpointEvery`: materialization cadence of the rank table — 1 is
-    * the registered per-round choice; the seam exists so ProbePagerank
-    * can A/B coarser cadences in one JVM (result-identical by
-    * construction: localCheckpoint only cuts lineage, the integer
-    * recurrence is unchanged; the probe asserts exact rank equality).
     */
-  private[graft] def pagerankOnPairs(raw: DataFrame): DataFrame =
-    pagerankOnPairs(raw, checkpointEvery = 1)
-
-  private[graft] def pagerankOnPairs(raw: DataFrame, checkpointEvery: Int): DataFrame = {
+  private[graft] def pagerankOnPairs(raw: DataFrame): DataFrame = {
     val spark = raw.sparkSession
     import spark.implicits._
     // symmetrize: every node gains an out-edge, so no dangling-mass term
@@ -76,16 +67,18 @@ object PageRank {
     // round pays a single join against the current ranks. (A
     // SHUFFLE_HASH hint here measured within noise — this one-time join
     // shares its exchange with the deg aggregate, so the sort it saves
-    // is already amortized; the hint stays on the 5× round join only.)
+    // is already amortized.)
     val wedges = edges.join(deg, "src").localCheckpoint()
     // the node set IS deg's key set (distinct src) — a separate
     // edges.select(src).distinct() pass re-shuffled the same keys (r20)
     var ranks = deg.select($"src".as("node"), lit(Scale).as("rank")).localCheckpoint()
     // per-round localCheckpoint, measured choice: letting the fixed
     // 5-round chain evaluate lazily as one job was ~15% SLOWER at sf0.1
-    // (Catalyst + AQE re-optimize the deep nested plan at every stage);
-    // materializing each round keeps every optimization pass O(one
-    // round's plan). Superseded checkpoints are NOT explicitly
+    // (Catalyst + AQE re-optimize the deep nested plan at every stage),
+    // and checkpointing every 2nd round or never lost or tied every rep
+    // of an in-JVM A/B (OPTIMIZATION_r20.md, "Pagerank checkpoint
+    // cadence"); materializing each round keeps every optimization pass
+    // O(one round's plan). Superseded checkpoints are NOT explicitly
     // unpersisted — Dataset.unpersist is a no-op for a localCheckpoint
     // (CacheManager has no entry for its LogicalRDD); once this loop
     // drops the reference, the ContextCleaner reclaims the blocks after
@@ -94,7 +87,7 @@ object PageRank {
     // symmetrization guarantees every node one in-edge, so contrib's
     // dst set equals the node set and the left join's coalesce(in_sum)
     // could never fire: one join per round (wedges ⋈ ranks), not two.
-    for (i <- 1 to Iterations) {
+    for (_ <- 1 to Iterations) {
       // Join strategy deliberately UNHINTED (r20, measured in-JVM with
       // alternating arms): the initial plan reads SortMergeJoin (the
       // checkpointed frames come back as ExistingRDD with no
@@ -102,10 +95,10 @@ object PageRank {
       // node-sized ranks side and the edge list never shuffles — a
       // SHUFFLE_HASH hint pinned the join and BLOCKED that conversion,
       // measuring 0.40–0.43 s/round vs 0.33–0.37 s/round unhinted
-      // (RoundExplain ROUND_AB=1). At corpus scale a node set too big
-      // to broadcast falls back to the shuffled join automatically —
-      // the unhinted form is both the faster local plan and the
-      // scale-safe one.
+      // (OPTIMIZATION_r20.md, "Measured and rejected"). At corpus scale
+      // a node set too big to broadcast falls back to the shuffled join
+      // automatically — the unhinted form is both the faster local plan
+      // and the scale-safe one.
       val next = wedges
         .join(ranks, $"src" === $"node")
         .select($"dst", expr("rank div d").as("w"))
@@ -115,10 +108,7 @@ object PageRank {
           $"dst".as("node"),
           (lit(15L * Scale / 100L) + expr("(85 * in_sum) div 100")).as("rank")
         )
-      // the last round always materializes so the caller's sort reads a
-      // LogicalRDD either way; intermediate rounds follow the cadence
-      ranks =
-        if (i % checkpointEvery == 0 || i == Iterations) next.localCheckpoint() else next
+      ranks = next.localCheckpoint()
     }
     ranks.orderBy($"node")
   }

@@ -37,7 +37,8 @@ object SqlSurface {
     if (dir == registeredDir.get(spark)) return
     // readers come from the Tables memo (r20): registration cost was
     // 625 ms/call when each view re-ran file listing + footer schema
-    // inference (ProbeReadOverhead) — paid by EVERY sql_* query run.
+    // inference (OPTIMIZATION_r20.md, "Changed this session") — paid by
+    // EVERY sql_* query run.
     val readers: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)] = Seq(
       "region" -> Tables.region,
       "nation" -> Tables.nation,

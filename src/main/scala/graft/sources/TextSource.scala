@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 /** The reference's native input format: a DIRECTORY of newline-delimited
   * UTF-8 text files (SURVEY.md §2a op #1; reference mapreduce/submit.py
   * --input), as a `Dataset` for the Dataset entry points (`MapReduce.run`,
-  * `Pipe.pipeJob`). `spark.read.text(dir)` reads the same lines the
+  * `MapReduce.runKV`). `spark.read.text(dir)` reads the same lines the
   * engine's own job reader does, but splits them by Spark's file-scan
   * planning, not into the job's M ranges: `MapReduce.runJob` and
   * `runExecJob` lay the name-sorted files end to end and cut them into

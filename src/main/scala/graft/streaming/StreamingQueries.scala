@@ -68,10 +68,10 @@ object StreamingQueries {
 
   // schema-inference memo (r20): the batch-side schema probe that seeds
   // readStream costs ~65 ms of driver time per call (file listing +
-  // footer read — ProbeReadOverhead), and the stream-stream joins pay
-  // it twice per query run. Pure metadata, same immutable-fixture
-  // contract as the Tables reader memo; entries for stopped sessions
-  // are purged on access.
+  // footer read; OPTIMIZATION_r20.md, "Changed this session"), and the
+  // stream-stream joins pay it twice per query run. Pure metadata, same
+  // immutable-fixture contract as the Tables reader memo; entries for
+  // stopped sessions are purged on access.
   private val streamSchemas =
     new java.util.concurrent.ConcurrentHashMap[
       (SparkSession, String, String),

@@ -77,6 +77,57 @@ class PipelineSpec extends AnyFunSuite {
     }
   }
 
+  /** Crafted corpus over a w0..w29 vocabulary, so shingles collide across
+    * docs. Docs 1/2: a 12-word doc quoted whole inside a longer one
+    * (containment 1.0). Docs 3/4: 5 shingles each, 4 shared, exactly
+    * 4/5 = 0.8, the inclusive boundary. Docs 5/6: 3 of 5 shared (0.6,
+    * below the threshold). Docs 7+: seeded filler sharing common words,
+    * so the caps have hot shingles to drop.
+    */
+  private def containmentCraftedDir(): String = {
+    import spark.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("containment-spec-").toString
+    val quoted = (0 until 12).map(i => s"w$i").mkString(" ")
+    val host = ((20 until 35).map(i => s"w${i % 30}") ++ (0 until 12).map(i => s"w$i") ++
+      (10 until 23).map(i => s"w${i % 30}")).mkString(" ")
+    val rnd = new scala.util.Random(7)
+    val filler = (7L until 40L).map { id =>
+      (id, (0 until (10 + rnd.nextInt(30))).map(_ => s"w${rnd.nextInt(30)}").mkString(" "))
+    }
+    (Seq(
+      (1L, quoted),
+      (2L, host),
+      (3L, "w0 w1 w2 w3 w4 w5 w6"),
+      (4L, "w0 w1 w2 w3 w4 w5 w9"),
+      (5L, "w10 w11 w12 w13 w14 w15 w16"),
+      (6L, "w10 w11 w12 w13 w14 w20 w21")
+    ) ++ filler).toDF("doc_id", "text").write.parquet(s"$tmp/documents.parquet")
+    tmp
+  }
+
+  test("containment, crafted corpus: full quote 1.0, 4/5 boundary kept, 3/5 dropped") {
+    val crafted = containmentCraftedDir()
+    def pairs(cap: Option[Int]): Map[(Long, Long), Double] =
+      Dedup
+        .containment(spark, crafted, cap)
+        .collect()
+        .map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2)))
+        .toMap
+    val uncapped = pairs(None)
+    assert(uncapped.get((1L, 2L)).contains(1.0), "planted full containment must score 1.0")
+    assert(uncapped.get((3L, 4L)).contains(0.8), "boundary pair 4/5 must be kept at exactly 0.8")
+    for (cap <- Seq(None, Some(3), Some(8))) {
+      val capped = pairs(cap)
+      assert(!capped.contains((5L, 6L)), s"3/5 = 0.6 pair must not pass (cap=$cap)")
+      capped.foreach { case (pair, c) =>
+        assert(
+          uncapped.get(pair).exists(c <= _ + 1e-9),
+          s"cap=$cap: $pair scores $c, uncapped ${uncapped.get(pair)}"
+        )
+      }
+    }
+  }
+
   test("incremental index covers zero-shingle corpus docs: exact dup of a tiny doc is caught") {
     import spark.implicits._
     // a <3-word corpus doc has zero shingles → no signature/count row;

@@ -51,26 +51,4 @@ class ConnectedComponentsSpec extends AnyFunSuite {
       }
     }
   }
-
-  test("probe hook fires once per round with consistent edge telemetry") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(11)
-    val edges = Seq.fill(120)((rnd.nextInt(80).toLong, rnd.nextInt(80).toLong)).filter(e => e._1 != e._2)
-    val seen = scala.collection.mutable.ArrayBuffer.empty[Dedup.CcRound]
-    val (_, rounds) = Dedup.connectedComponents(edges.toDF("id_a", "id_b"), seen += _)
-    assert(seen.size == rounds, "one probe callback per round")
-    assert(seen.map(_.round) == (1 to rounds), "rounds numbered consecutively")
-    // each round's input count is the previous round's output count
-    seen.sliding(2).foreach {
-      case scala.collection.mutable.ArrayBuffer(a, b) => assert(b.edgesIn == a.edgesOut)
-      case _                                          =>
-    }
-    val last = seen.last
-    assert(last.edgesIn == last.edgesOut, "fixpoint round leaves the edge set unchanged")
-    assert(seen.forall(r => r.starSec >= 0 && r.checkSec >= 0 && r.parts >= 1))
-    // the default overload (no probe) must behave identically
-    val (labels2, rounds2) = Dedup.connectedComponents(edges.toDF("id_a", "id_b"))
-    assert(rounds2 == rounds)
-    assert(labels2.count() == last.edgesOut)
-  }
 }

@@ -201,29 +201,4 @@ class MapReduceSpec extends AnyFunSuite {
       assert(written.get === 4L)
     } finally sc.removeSparkListener(listener)
   }
-
-  test("pipe parity: external executables via RDD.pipe (Hadoop-Streaming analog)") {
-    import spark.implicits._
-    val input = spark.createDataset(inputLines)
-    val got = Pipe
-      .pipeJob(
-        spark,
-        input,
-        // the reference wc_map.sh pipeline, inlined
-        mapperCmd = """tr '[A-Z]' '[a-z]' | awk '{ for (i = 1; i <= NF; i++) print $i"\t1" }'""",
-        reducerCmd = """cut -f1 | uniq -c | awk '{print $2"\t"$1}'""",
-        numMappers = 2,
-        numReducers = 2
-      )
-      .collect()
-      .sorted
-    // awk's NF-loop drops empty tokens, so compare against golden minus the
-    // empty-key line (the native engine test covers empty keys)
-    val golden = {
-      val src = Source.fromFile(resource("correct/word_count_correct.txt"), "UTF-8")
-      try src.getLines().toList.filterNot(_.startsWith("\t")).sorted
-      finally src.close()
-    }
-    assert(got.toList === golden)
-  }
 }

@@ -13,9 +13,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * <10 s wall.
   *
   * JVM analogs checked here:
-  *   - wall-clock < 10 s for the external-executable pipe job AND the
-  *     native engine run combined (the reference's bound covers one map
-  *     task; we hold both whole jobs to it);
+  *   - wall-clock < 10 s for the external-executable job (`runExecJob`,
+  *     directory to `part-NNNNN` files) AND the native engine run
+  *     combined (the reference's bound covers one map task; we hold both
+  *     whole jobs to it);
   *   - retained heap (post-GC) grows < 64 MiB across the jobs — nothing
   *     O(corpus) survives;
   *   - a sampling thread (the memory.py technique) pins peak usage under
@@ -59,20 +60,23 @@ class MemoryBoundSpec extends AnyFunSuite {
     // warm the session so one-time JIT/codegen cost isn't billed to the
     // reference's contract (the reference times an already-running worker)
     spark.range(1000).selectExpr("sum(id)").collect()
+    val outDir = java.nio.file.Files.createTempDirectory("memory-bound-spec-").resolve("out")
     val before = retainedHeap()
     val t0 = System.nanoTime()
     val ((pipeRows, nativeRows), peak) = withPeakSampler {
-      val pipe = Pipe
-        .pipeJob(
-          spark,
-          input,
-          // the reference wc_map.sh / wc_reduce.sh pipelines, inlined
-          mapperCmd = """tr '[A-Z]' '[a-z]' | awk '{ for (i = 1; i <= NF; i++) print $i"\t1" }'""",
-          reducerCmd = """cut -f1 | uniq -c | awk '{print $2"\t"$1}'""",
-          numMappers = 4,
-          numReducers = 2
-        )
-        .count()
+      MapReduce.runExecJob(
+        spark,
+        corpusDir,
+        outDir.toString,
+        // the reference wc_map.sh / wc_reduce.sh pipelines, inlined
+        mapperCmd = """tr '[A-Z]' '[a-z]' | awk '{ for (i = 1; i <= NF; i++) print $i"\t1" }'""",
+        reducerCmd = """cut -f1 | uniq -c | awk '{print $2"\t"$1}'""",
+        numMappers = 4,
+        numReducers = 2
+      )
+      val pipe = (0 until 2).map { p =>
+        java.nio.file.Files.readAllLines(outDir.resolve(f"part-$p%05d")).size.toLong
+      }.sum
       val native = MapReduce
         .run(
           input,
