@@ -272,7 +272,7 @@ object GraftSession {
     * cross-JVM race on a shared ./spark-warehouse (concurrent test +
     * verify runs sweeping each other's files). Deleted on JVM exit.
     */
-  private lazy val warehouseDir: String = {
+  private[graft] lazy val warehouseDir: String = {
     val p = java.nio.file.Files.createTempDirectory("graft-warehouse-")
     Runtime.getRuntime.addShutdownHook(new Thread(() => deleteRecursively(p.toFile)))
     p.toString

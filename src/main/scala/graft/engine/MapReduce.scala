@@ -3,6 +3,7 @@ package graft.engine
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{ChecksumFileSystem, FileAlreadyExistsException, FileSystem, Path}
 import org.apache.hadoop.io.compress.{CompressionCodecFactory, SplittableCompressionCodec}
+import org.apache.hadoop.mapred.JobConf
 import org.apache.hadoop.mapreduce.TaskAttemptID
 import org.apache.hadoop.mapreduce.lib.input.{FileSplit, LineRecordReader}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
@@ -16,6 +17,7 @@ import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.util.SerializableConfiguration
 
 import java.io.{BufferedWriter, EOFException, IOException, InputStream, OutputStream, OutputStreamWriter}
+import java.lang.ref.WeakReference
 import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets.UTF_8
 import java.security.MessageDigest
@@ -61,7 +63,9 @@ import scala.util.hashing.byteswap32
   * accounted execution memory and spills them to disk), mirroring the
   * reference's <1 MiB streaming bound (tests/test_worker_11.py:119-122)
   * and scaling to arbitrarily large partitions. The reader and the sink
-  * see the session's Hadoop configuration through one broadcast per job.
+  * see the session's Hadoop configuration through one broadcast per
+  * SparkContext and configuration content (`confBroadcast`), reused by
+  * every job until an entry changes.
   * `run`/`runKV` expose the same core as Datasets.
   *
   * A native key may not hold a tab: the text protocol cannot express
@@ -430,7 +434,7 @@ object MapReduce {
     * for the directory contract.
     */
   def saveTextParts(output: Dataset[String], outputDir: String): Unit =
-    withJobConf(output.sparkSession.sparkContext)(writeParts(output.rdd, outputDir, _))
+    writeParts(output.rdd, outputDir, confBroadcast(output.sparkSession.sparkContext))
 
   /** Job-descriptor entry point — the reference's single user-facing API
     * (reference mapreduce/submit.py:59-78: a job is `{input_directory,
@@ -500,25 +504,77 @@ object MapReduce {
       .pipe(Seq("/bin/sh", "-c", reducerCmd), encoding = "UTF-8")
 
   /** Runs `job` over `inputDir`'s lines, read as exactly M map
-    * partitions (`byteRanges`, `ByteRangeRDD`), with the job's one conf
-    * broadcast (`withJobConf`) for its sink. The input is listed before
+    * partitions (`byteRanges`, `ByteRangeRDD`), with the session's conf
+    * broadcast (`confBroadcast`) for its sink. The input is listed before
     * anything is broadcast or written.
     */
   private[engine] def withInput[A](spark: SparkSession, inputDir: String, numMappers: Int)(
       job: (RDD[String], Broadcast[SerializableConfiguration]) => A
   ): A = {
     val ranges = byteRanges(spark, inputDir, numMappers)
-    withJobConf(spark.sparkContext)(conf => job(new ByteRangeRDD(spark.sparkContext, ranges, conf), conf))
+    val conf = confBroadcast(spark.sparkContext)
+    job(new ByteRangeRDD(spark.sparkContext, ranges, conf), conf)
   }
 
-  /** Runs `job` with the session's Hadoop configuration broadcast once,
-    * as Spark's file readers see it: the input reader and the part-file
-    * sink of one job share it. Destroyed when the job ends.
+  /** The broadcast behind `confBroadcast`: `sc` (weakly held, so a
+    * stopped context can be collected), the broadcast configuration's
+    * entries, and the broadcast.
     */
-  private def withJobConf[A](sc: SparkContext)(job: Broadcast[SerializableConfiguration] => A): A = {
-    val conf = sc.broadcast(new SerializableConfiguration(sc.hadoopConfiguration))
-    try job(conf)
-    finally conf.destroy()
+  private final class ConfMemo(
+      val sc: WeakReference[SparkContext],
+      val entries: java.util.Map[String, String],
+      val conf: Broadcast[SerializableConfiguration]
+  )
+
+  private var confMemo: ConfMemo = _
+
+  /** The session's Hadoop configuration as Spark's file readers see it,
+    * broadcast once per SparkContext and configuration content: every job
+    * reuses the broadcast while `sc.hadoopConfiguration` holds the same
+    * entries, and a changed entry or another SparkContext gets a new one.
+    * Java-serializing its ~1,000 entries is a large share of a small
+    * job's fixed cost, so it is paid once, not per job. The broadcast
+    * holds a copy of the configuration, so a later change cannot reach
+    * tasks through it. A replaced broadcast is not destroyed, since a
+    * running job may still read it; the ContextCleaner drops it once
+    * unreferenced.
+    */
+  private def confBroadcast(sc: SparkContext): Broadcast[SerializableConfiguration] = synchronized {
+    val entries = entriesOf(sc.hadoopConfiguration)
+    val memo = confMemo
+    if (memo != null && (memo.sc.get eq sc) && memo.entries.equals(entries)) memo.conf
+    else {
+      val copy = new Configuration(sc.hadoopConfiguration)
+      confMemo = new ConfMemo(new WeakReference(sc), entriesOf(copy), sc.broadcast(new SerializableConfiguration(copy)))
+      confMemo.conf
+    }
+  }
+
+  private def entriesOf(conf: Configuration): java.util.Map[String, String] = {
+    val entries = new java.util.HashMap[String, String]
+    conf.forEach(e => entries.put(e.getKey, e.getValue))
+    entries
+  }
+
+  /** The `JobConf` this JVM's map tasks read input with, built at most
+    * once per conf broadcast: a `TaskAttemptContextImpl` over a
+    * `Configuration` copies every entry into a new `JobConf`, over a
+    * `JobConf` it copies nothing. It is keyed by broadcast id, and by the
+    * identity of the broadcast's value, since a new SparkContext in the
+    * same JVM numbers its broadcasts from 0 again.
+    */
+  private object TaskJobConf {
+    private final class Entry(val id: Long, val source: SerializableConfiguration, val jobConf: JobConf)
+    private var last: Entry = _
+
+    def apply(conf: Broadcast[SerializableConfiguration]): JobConf = {
+      val source = conf.value
+      synchronized {
+        if (last == null || last.id != conf.id || (last.source ne source))
+          last = new Entry(conf.id, source, new JobConf(source.value))
+        last.jobConf
+      }
+    }
   }
 
   /** `length` bytes of the file at `path`, from byte `start`. */
@@ -605,16 +661,15 @@ object MapReduce {
     override protected def getPartitions: Array[Partition] = ranges.toArray[Partition]
 
     override def compute(split: Partition, ctx: TaskContext): Iterator[String] =
-      new RangeLines(split.asInstanceOf[ByteRange].chunks, conf.value.value, ctx)
+      new RangeLines(split.asInstanceOf[ByteRange].chunks, TaskJobConf(conf), ctx)
   }
 
   /** Streams a range's chunks in order, one open reader at a time; the
     * task's end closes a reader its consumer abandoned.
     */
-  private final class RangeLines(chunks: Array[Chunk], conf: Configuration, ctx: TaskContext)
+  private final class RangeLines(chunks: Array[Chunk], conf: JobConf, ctx: TaskContext)
       extends Iterator[String] {
     private val counter = new InputMetricsBridge.Counter(ctx)
-    // copies the whole conf into a JobConf, so one serves every chunk
     private val attempt = new TaskAttemptContextImpl(conf, new TaskAttemptID())
     private var nextChunk = 0
     private var reader: LineRecordReader = _
@@ -668,7 +723,8 @@ object MapReduce {
     * Writes go through the raw (non-checksummed) filesystem, so no
     * `.crc` siblings appear; there is no committer and no `_SUCCESS`
     * marker, so the listing is exactly the part files. Tasks see the
-    * session's Hadoop configuration through the job's broadcast `conf`.
+    * session's Hadoop configuration through `conf`, the session's conf
+    * broadcast (`confBroadcast`).
     */
   private def writeParts(lines: RDD[String], outputDir: String, conf: Broadcast[SerializableConfiguration]): Unit = {
     val sc = lines.sparkContext

@@ -980,48 +980,6 @@ object Similarity {
       .orderBy($"query_id", $"rank")
   }
 
-  /** IVF probe-path serving over an EXPLICIT posting set `cell`
-    * (vec_id, cid): query probes scored fresh against `cents` (10
-    * query vectors × ≤IvfMaxCells — driver-scale), candidates from the
-    * postings equi-join, exact cosine re-rank, top-3. The shape of
-    * [[annIvfWith]] with the assignment pass replaced by the stored
-    * index.
-    */
-  private[graft] def ivfProbeServe(
-      emb: DataFrame,
-      cents: DataFrame,
-      cell: DataFrame,
-      probes: Int
-  ): DataFrame = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    val wProbe = Window.partitionBy($"vec_id").orderBy($"ccos".desc, $"cid")
-    val qprobe = emb
-      .filter($"vec_id" < NumQueries)
-      .crossJoin(broadcast(cents))
-      .withColumn("ccos", dot($"embedding", $"ce") / ($"nrm" * $"cn"))
-      .withColumn("rn", row_number().over(wProbe))
-      .filter($"rn" <= probes)
-      .select($"vec_id".as("query_id"), $"cid")
-    val cand = cell
-      .join(broadcast(qprobe), "cid")
-      .filter($"vec_id" =!= $"query_id")
-      .select($"query_id", $"vec_id")
-      .distinct()
-    val queryVecs = emb
-      .filter($"vec_id" < NumQueries)
-      .select($"vec_id".as("query_id"), $"embedding".as("qe"), $"nrm".as("qn"))
-    val w = Window.partitionBy($"query_id").orderBy($"cosine".desc, $"vec_id")
-    cand
-      .join(broadcast(queryVecs), "query_id")
-      .join(emb, "vec_id")
-      .withColumn("cosine", dot($"qe", $"embedding") / ($"qn" * $"nrm"))
-      .withColumn("rank", row_number().over(w))
-      .filter($"rank" <= 3)
-      .select($"query_id", $"vec_id".as("neighbor_id"), $"rank", round($"cosine", 6).as("cosine"))
-      .orderBy($"query_id", $"rank")
-  }
-
   private def annIvfWith(emb: DataFrame, cents: DataFrame, probes: Int): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._

@@ -10,13 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class EffectivePartsSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession
-    .builder()
-    .master("local[4]")
-    .appName("effective-parts-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.local(4, "effective-parts-spec")
 
   private def tmpDir(tag: String): String = {
     val d = java.nio.file.Files.createTempDirectory(s"effparts-$tag").toFile

@@ -6,21 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** SQL surface for the native expressions via SparkSessionExtensions. */
 class ExtensionsSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = {
-    // force a fresh session so withExtensions isn't ignored by getOrCreate
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s = SparkSession
-      .builder()
-      .master("local[4]")
-      .appName("extensions-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  // every graft session carries GraftExtensions
+  lazy val spark: SparkSession = GraftSession.local(4, "extensions-spec")
 
   test("graft_fdot is SQL-callable and matches the Column API") {
     val r = spark

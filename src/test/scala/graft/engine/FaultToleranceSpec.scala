@@ -1,5 +1,6 @@
 package graft.engine
 
+import graft.GraftSession
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
@@ -38,6 +39,7 @@ class FaultToleranceSpec extends AnyFunSuite {
       .appName("fault-tolerance-spec")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.warehouse.dir", GraftSession.warehouseDir)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try {

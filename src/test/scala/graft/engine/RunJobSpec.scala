@@ -255,6 +255,7 @@ class RunJobSpec extends AnyFunSuite {
       .master("local[4, 2]")
       .appName("run-job-retry")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.warehouse.dir", GraftSession.warehouseDir)
       .getOrCreate()
     retrying.sparkContext.setLogLevel("WARN")
     try {

@@ -90,6 +90,7 @@ class SortSpillSpec extends AnyFunSuite with BeforeAndAfterAll {
       .config("spark.shuffle.spill.numElementsForceSpillThreshold", "700")
       .config("spark.unsafe.exceptionOnMemoryLeak", "true")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.warehouse.dir", GraftSession.warehouseDir)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark.sparkContext.addSparkListener(new SparkListener {
