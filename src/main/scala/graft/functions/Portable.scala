@@ -35,19 +35,6 @@ object Portable {
       ).otherwise(array().cast("array<string>"))
     )
 
-  /** Unsigned 32-bit value from 8 hex chars of md5(s || "#" || seed),
-    * chunk ∈ [0,4). DuckDB twin: CAST('0x'||substr(md5(s||'#'||seed),
-    * 1+8*chunk, 8) AS BIGINT).
-    */
-  def md5Chunk(s: Column, seed: Int, chunk: Int): Column =
-    conv(substring(md5(concat(s, lit(s"#$seed"))), 1 + 8 * chunk, 8), 16, 10).cast("long")
-
-  /** Nibble value (0..15) at 1-based hex position `pos` of md5(s).
-    * DuckDB twin: CAST('0x'||substr(md5(s),pos,1) AS INT).
-    */
-  def md5Nibble(s: Column, pos: Int): Column =
-    conv(substring(md5(s), pos, 1), 16, 10).cast("int")
-
   /** Left-fold dot product of two float arrays in double precision —
     * native codegen'd expression (graft.functions.FloatDotProduct).
     * DuckDB twin: list_reduce(list_prepend(CAST(0 AS DOUBLE),

@@ -66,12 +66,12 @@ case class ClosedSession(
   */
 object StreamingQueries {
 
-  // schema-inference memo (r20): the batch-side schema probe that seeds
-  // readStream costs ~65 ms of driver time per call (file listing +
-  // footer read; OPTIMIZATION_r20.md, "Changed this session"), and the
-  // stream-stream joins pay it twice per query run. Pure metadata, same
-  // immutable-fixture contract as the Tables reader memo; entries for
-  // stopped sessions are purged on access.
+  // schema-inference memo: the batch-side schema probe that seeds
+  // readStream lists files and reads a footer on the driver, and the
+  // stream-stream joins would pay it twice per query run. Pure metadata,
+  // same immutable-fixture contract as the Tables reader memo; entries
+  // for stopped sessions are purged on access. Timings:
+  // OPTIMIZATION_r20.md, "Changed this session".
   private val streamSchemas =
     new java.util.concurrent.ConcurrentHashMap[
       (SparkSession, String, String),
@@ -97,24 +97,26 @@ object StreamingQueries {
     )
   }
 
-  /** Drives a streaming query to completion against the memory sink.
-    * Streaming state-store count = shuffle partitions at query start;
-    * per-batch store open/commit overhead dwarfs compute at test scale
-    * (a stream-stream join keeps four stores per partition), so streams
-    * run in an ISOLATED-conf session (`newSession`: shared SparkContext,
-    * own SQLConf) pinned to a small state partitioning — the caller's
-    * session conf is never touched, so concurrent batch queries keep
-    * their own partitioning. The pin is at most 8 and at most the
-    * context's default parallelism (its task slots in local mode): more
-    * stores than slots run each batch's stateful stage in several waves
-    * of open/commit overhead with no extra parallelism. A production job
-    * sizes this to key throughput.
-    */
-  // one isolated streaming session per root session (sessions are cheap
-  // but carry a catalog; no need for one per query)
+  // one stream session per root session (sessions are cheap but carry a
+  // catalog; no need for one per query)
   private val streamSessions =
     new java.util.concurrent.ConcurrentHashMap[SparkSession, SparkSession]()
 
+  /** The session every memory-sink stream runs in: `newSession` of the
+    * caller's (shared SparkContext, own SQLConf), so the settings below
+    * never reach the caller's session. (The caller's session does get
+    * the `nanosAsLong` read option: eventStream and sentinelFor set it
+    * there, as Tables.events does.)
+    *   - State partitions: one state store per shuffle partition, whose
+    *     per-batch open/commit dwarfs compute at test scale, so at most
+    *     8 and at most the context's task slots (more stores than slots
+    *     only add waves of that overhead).
+    *   - Artifact isolation off: each stream start clones its session,
+    *     and with isolation on every clone gets a fresh executor class
+    *     loader, which misses the codegen cache (keyed by loader) and
+    *     recompiles every generated class. Safe here: this session is
+    *     graft-internal and never given an artifact.
+    */
   private def streamSession(root: SparkSession): SparkSession = {
     // evict entries whose root context is stopped — the map holds strong
     // references, so a host that churns sessions (fresh session per test
@@ -124,6 +126,7 @@ object StreamingQueries {
       root,
       { r =>
         val s = r.newSession()
+        s.conf.set("spark.sql.artifact.isolation.enabled", "false")
         s.conf.set("spark.sql.shuffle.partitions", math.min(8, r.sparkContext.defaultParallelism).toString)
         // runtime-set read options the transplanted plans rely on
         // (newSession starts from builder defaults, not runtime conf)
@@ -138,6 +141,9 @@ object StreamingQueries {
   // drained results in driver memory
   private val lastView = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
+  /** Drives a streaming query to completion against the memory sink,
+    * in the stream session.
+    */
   private def runToMemory(df: DataFrame, base: String, mode: String): DataFrame = {
     val scoped = streamSession(df.sparkSession)
     val name = s"${base}_${System.nanoTime()}"
@@ -664,10 +670,11 @@ object StreamingQueries {
     val index = spark.table(indexTable)
     // static lookup sides, re-planned per micro-batch: distinct corpus
     // md5s, and each LSH band bucket's smallest member. The band side
-    // serves the index's STORED banded companion when it exists (r20,
-    // Dedup.bandsTableOf): these sides re-plan and re-execute EVERY
-    // micro-batch, so the per-batch O(index) re-banding pass the stored
-    // form deletes is paid once per tick here, not once per query
+    // serves the index's STORED banded companion when it exists
+    // (Dedup.bandsTableOf): these sides re-plan and re-execute EVERY
+    // micro-batch, so without it an O(index) re-banding pass would run
+    // once per tick. Timings: OPTIMIZATION_r20.md, "Stored banded
+    // signature index"
     val bandSrc =
       if (spark.catalog.tableExists(Dedup.bandsTableOf(indexTable)))
         spark.table(Dedup.bandsTableOf(indexTable))
