@@ -308,7 +308,7 @@ object Bench {
     // session-end warehouse ledger + stale-fingerprint sweep (stderr:
     // the stdout contract is the single JSON line above); a filtered
     // run derived only a subset of fingerprints — never sweep on one
-    System.err.println(graft.queries.Relational.warehouseHygiene(spark, sweep = only.isEmpty))
+    System.err.println(graft.Warehouse.warehouseHygiene(spark, sweep = only.isEmpty))
     spark.stop()
   }
 }

@@ -9,101 +9,36 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Tables {
 
-  /** Reader-construction memo (r20): `spark.read.parquet` costs
-    * 65–85 ms of DRIVER time per call (file listing + footer schema
-    * inference + source resolution; OPTIMIZATION_r20.md "Changed this
-    * session": lineitem 84.6 ms/call, orders 70.2, documents 63.0, and
-    * the 10-view SQL-surface registration 625 ms/call), and every query
-    * builder constructs its table readers fresh, so the ~400 timed
-    * query executions of a bench pay it 1–4× EACH — tens of seconds of
-    * pure plan-construction overhead inside the timed paths. This memo
-    * returns the one already-constructed DataFrame per (session, path):
-    * exactly what a catalog does for a registered table (schema
-    * resolved once, readers share the table metadata). It caches NO
-    * data and NO results — the value is an unexecuted logical plan, and
-    * every execution still scans the parquet files (the FileScan node
-    * stays in every plan; Bench/Verify numbers remain full
-    * recomputations from the input bytes). Fixture paths are immutable
-    * for a JVM's lifetime by the same contract `splitCounts` (below)
-    * already relies on; entries for stopped sessions are purged on the
-    * next access, mirroring the histogram registry's lifecycle.
+  /** Reader memo: `spark.read.parquet` costs 65–85 ms of driver time
+    * per call (file listing, footer schema inference, source
+    * resolution), and every query builder constructs its readers fresh,
+    * so each execution would repay it once per table. This returns the
+    * one already-constructed DataFrame per (session, path), as a catalog
+    * does for a registered table. It caches NO data and NO results: the
+    * value is an unexecuted logical plan, and every execution still scans
+    * the parquet files. Fixture paths are immutable for a JVM's lifetime.
     */
-  private val readerCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  private val readers = new Warehouse.Memo[String, DataFrame]()
 
-  private def pq(spark: SparkSession, path: String): DataFrame = {
-    readerCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    readerCache.computeIfAbsent((spark, path), _ => spark.read.parquet(path))
-  }
+  private def pq(spark: SparkSession, path: String): DataFrame =
+    readers(spark, path)(spark.read.parquet(path))
 
-  /** Self-validating ARTIFACT reader memo (r20 continuation). The
-    * layout/MV family reads its warehouse artifacts by PATH
-    * (`spark.read.parquet`), which costs ~55–60 ms of driver time per
-    * call (footer schema inference + source resolution;
-    * OPTIMIZATION_r20.md "Layout/MV artifact reader memo": 59.8 ms/call
-    * for a 1-file artifact dir, 55.4 ms for a 24-file one; the cost is
-    * per-READ, not per-file),
-    * and the family's serves pay it 2–4× per query. Unlike the
-    * immutable fixture tables above, artifact dirs MUTATE within a
-    * session (compaction/vacuum rewrite or physically delete files), so
-    * the plain (session, path) memo was deliberately NOT applied to
-    * them in the main r20 pass. This memo closes that gap without the
-    * staleness risk: the key includes a recursive name:len:mtime
-    * LISTING fingerprint of the dirs (~1–3 ms on a local FS — two
-    * orders of magnitude below the inference it replaces), so any
-    * mutation produces a new key and a fresh reader (Spark part-file
-    * names carry a per-job UUID, so even a byte-identical rewrite
-    * renames its files) — self-validating, no write-side invalidation
-    * hooks to forget. Same no-data/no-results contract as the reader
-    * memo above: the value is an unexecuted logical plan whose
-    * execution scans the parquet files; MemoSpec pins both plan
-    * identity while unchanged AND freshness across a mutation. Bounded
-    * LRU (the vacuum/compaction families mint a handful of
-    * fingerprints per session; evicted entries hold no cached blocks).
+  /** Self-validating reader memo for warehouse artifacts read by path.
+    * Unlike the fixtures above, artifact dirs MUTATE within a session
+    * (compaction and vacuum rewrite or delete files), so the key carries
+    * the listing fingerprint of the dirs: about 1–3 ms on a local FS, two
+    * orders of magnitude below the ~55–60 ms inference it saves. Any
+    * mutation yields a new key and a fresh reader (Spark part-file names
+    * carry a per-job UUID, so even a byte-identical rewrite renames its
+    * files); no write-side invalidation hook is needed. Same
+    * no-data/no-results contract as the reader memo. Capped: the vacuum
+    * and compaction families mint a handful of fingerprints per session,
+    * and evicted entries hold no cached blocks.
     */
-  private val artifactCache =
-    new java.util.LinkedHashMap[(SparkSession, Seq[String], String), DataFrame](64, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(SparkSession, Seq[String], String), DataFrame]
-      ): Boolean = size() > 64
-    }
+  private val artifacts = new Warehouse.Memo[(Seq[String], String), DataFrame](64)
 
-  /** Hex MD5 (first `bytes` bytes) over the sorted `path:len:mtime` of
-    * every file under `paths`, recursively — the listing fingerprint of
-    * the artifact memo above and of `Relational.sourceFingerprint`. The
-    * walk uses `listStatus`, not `listFiles`: `listFiles` wraps each file
-    * in a `LocatedFileStatus`, whose constructor reads the permission
-    * (a forked `ls -ld` per file on a host without `libhadoop`) and which
-    * carries block locations nothing here reads. Same files, same paths,
-    * same digest.
-    */
-  private[graft] def listingFp(spark: SparkSession, paths: Seq[String], bytes: Int): String = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val md = java.security.MessageDigest.getInstance("MD5")
-    paths.foreach { p =>
-      val hp = new org.apache.hadoop.fs.Path(p)
-      val fs = hp.getFileSystem(conf)
-      def walk(dir: org.apache.hadoop.fs.Path): Seq[String] =
-        fs.listStatus(dir).toSeq.flatMap { st =>
-          if (st.isFile) Seq(s"${st.getPath}:${st.getLen}:${st.getModificationTime}")
-          else walk(st.getPath)
-        }
-      walk(hp).sorted.foreach(e => md.update(e.getBytes("UTF-8")))
-    }
-    md.digest().take(bytes).map("%02x".format(_)).mkString
-  }
-
-  def artifactParquet(spark: SparkSession, paths: String*): DataFrame = {
-    val key = (spark, paths.toList, listingFp(spark, paths, 8))
-    artifactCache.synchronized {
-      artifactCache.keySet.removeIf(_._1.sparkContext.isStopped)
-      Option(artifactCache.get(key)).getOrElse {
-        val df = spark.read.parquet(paths: _*)
-        artifactCache.put(key, df)
-        df
-      }
-    }
-  }
+  def artifactParquet(spark: SparkSession, paths: String*): DataFrame =
+    artifacts(spark, (paths.toList, Warehouse.listingFp(spark, paths, 8)))(spark.read.parquet(paths: _*))
 
   def region(spark: SparkSession, dir: String): DataFrame = pq(spark, s"$dir/region.parquet")
   def nation(spark: SparkSession, dir: String): DataFrame = pq(spark, s"$dir/nation.parquet")
@@ -146,20 +81,19 @@ object Tables {
     * one task; a real corpus has ≥ cores input splits and takes the
     * no-op branch, so no shuffle is ever added at scale. The shuffled
     * payload in the fan-out branch is by definition smaller than one
-    * split. The split count is probed once per path (the probe plans the
-    * query; every documents()/embeddings() call repaying it would add a
-    * full planning pass per query construction).
+    * split. The split count is probed once per (session, path): the probe
+    * plans the query, and repaying it on every documents()/embeddings()
+    * call would add a full planning pass per query construction.
     */
-  private val splitCounts = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+  private val splitCounts = new Warehouse.Memo[String, Int]()
 
   /** Effective scan parallelism of a parquet path: byte-range splits
     * OVERCOUNT it — a split yields rows only if it contains a row-group
     * midpoint, so a large single file with few row groups reads on few
-    * tasks no matter how many 5 MB splits the planner cuts (measured in
-    * the r18 build probes: the planner cut 32 splits of the sf30
-    * documents file, but its 2 row groups serialized the whole
-    * shingle+minhash chain onto 2 tasks — the entire "fourth-decade
-    * superlinearity" of the index builds). The real floor is the ROW
+    * tasks no matter how many 5 MB splits the planner cuts (the planner
+    * cut 32 splits of the sf30 documents file, but its 2 row groups
+    * serialized the whole shingle+minhash chain onto 2 tasks — the
+    * superlinear term of the sf30 index builds). The real floor is the ROW
     * GROUP count; footers are read only when the path has fewer files
     * than cores, so a production table (≥ cores files) never pays a
     * footer pass.
@@ -197,18 +131,11 @@ object Tables {
 
   def fanOut(df: DataFrame, cacheKey: String = ""): DataFrame = {
     val cores = df.sparkSession.sparkContext.defaultParallelism
-    // split planning depends on session parallelism, so the cache key
-    // includes it (a later session with different cores re-probes);
-    // test-data paths are immutable for a JVM's lifetime by contract
     val parts =
       if (cacheKey.isEmpty) df.rdd.getNumPartitions
-      else
-        splitCounts
-          .computeIfAbsent(s"$cacheKey#$cores", _ => effectiveParts(df, cacheKey, cores))
-          .intValue()
+      else splitCounts(df.sparkSession, cacheKey)(effectiveParts(df, cacheKey, cores))
     if (parts < cores) df.repartition(cores) else df
   }
-
 
   /** Plain scans: cheap map-only queries (grep, exact dedup, metadata
     * extraction, scan-side text scoring) keep their natural input splits —
@@ -290,8 +217,8 @@ object GraftSession {
       // SQLConf default) — every imperative aggregate here (minhash
       // signatures, top-k buffers, KMV, the PQ/IVF argmaxes) then pays a
       // full sort of its INPUT rows, which is exactly the superlinear
-      // fourth-decade term the r18 build probes measured (sig build 13 s
-      // → 159 s at 3× data). 128k keys × ≤256 B buffers ≈ 33 MB/task —
+      // term the sf30 index builds showed (sig build 13 s → 159 s at 3×
+      // data). 128k keys × ≤256 B buffers ≈ 33 MB/task —
       // bounded at any corpus size because keys/task are shuffle-bounded,
       // while the avoided sort grows with the DATA.
       //   SESSION-GLOBAL ASSUMPTION: the threshold applies to EVERY
@@ -308,8 +235,7 @@ object GraftSession {
       // a broadcast's 300 s clock starts with the query, not with its
       // inputs: nothing Verify, Bench or the specs run has a longer
       // upstream chain, and a wedged broadcast fails in minutes (builds
-      // past the fourth decade needed 3600 s: OPTIMIZATION_r20.md,
-      // "Inherited state")
+      // at sf30 and beyond needed 3600 s)
       .config("spark.sql.broadcastTimeout", "300")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.warehouse.dir", warehouseDir)
@@ -318,7 +244,7 @@ object GraftSession {
       .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[GraftLocalFs].getName)
       // lz4: the whole 200-query suite at sf0.1 shuffles ~2.6 MB/query
       // with zero spill, so a zstd ratio gain is unmeasurable beneath
-      // window noise (OPTIMIZATION_r20.md, "Shuffle codec")
+      // window noise
       .config("spark.io.compression.codec", "lz4")
       // the native expressions' SQL surface (graft_fdot & co.) plus the
       // as-of-join strategy/rule ride on every engine session, so raw

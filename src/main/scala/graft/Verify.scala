@@ -41,7 +41,7 @@ object Verify {
     // JVM's own warehouse (GraftSession's, deleted on exit); a FILTERED
     // run must not sweep — it derived only a subset of the live
     // fingerprints, so everything else would read as stale
-    System.err.println(graft.queries.Relational.warehouseHygiene(spark, sweep = only.isEmpty))
+    System.err.println(graft.Warehouse.warehouseHygiene(spark, sweep = only.isEmpty))
     spark.stop()
   }
 }

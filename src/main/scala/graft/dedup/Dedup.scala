@@ -73,13 +73,12 @@ object Dedup {
     * [[graft.functions.MinhashArray]] shares MinhashAgg.updateInto, so
     * the arithmetic CANNOT drift; the isNotNull filter reproduces the
     * aggregate's row set exactly — zero-shingle docs produce no group).
-    * A per-doc signature is a function of that doc alone, so the r20
-    * explode + ObjectHashAggregate + exchange formulation was pure
+    * A per-doc signature is a function of that doc alone, so an
+    * explode + ObjectHashAggregate + exchange formulation is pure
     * overhead (guide §2.4): this shape runs signature derivation as a
     * narrow map inside the scan stage — no fan-out rows, no aggregation
     * buffer, no shuffle. In-JVM A/B, parity-gated: map ≤ agg at every
-    * rep, and the counts twin below is 3.3× faster (OPTIMIZATION_r20.md,
-    * "Signature derivation as a pure map").
+    * rep, and the counts twin below is 3.3× faster.
     *
     * The null-signature drop (zero-shingle docs) is an
     * `explode(array_compact(array(sig)))`, NOT a `.filter(sig.isNotNull)`:
@@ -87,7 +86,7 @@ object Dedup {
     * SUBSTITUTION, so the filter form evaluates the whole
     * tokenize+md5 signature expression TWICE per row (once in the
     * pushed Filter below the fan-out exchange, once in the Project —
-    * visible in plans/r20/dedup_simhash_after.txt's Filter(2)). The
+    * visible as a second Filter in the plan). The
     * 0-or-1-element explode evaluates it once and yields the identical
     * row set.
     */
@@ -167,11 +166,11 @@ object Dedup {
       threshold: Double
   ): DataFrame = {
     import spark.implicits._
-    // sizes as a narrow map over the corpus scan (r20 continuation 2,
-    // 3.3×, see shingleCountsOf) — every caller passes full-corpus shingle rows,
+    // sizes as a narrow map over the corpus scan (3.3×, see
+    // shingleCountsOf) — every caller passes full-corpus shingle rows,
     // so the doc set is exactly documentsFanned
     val sizes = shingleCountsOf(Tables.documentsFanned(spark, dir))
-    // NOTE (r19, measured): a semi-join reduction of `sh` to candidate
+    // NOTE (measured): a semi-join reduction of `sh` to candidate
     // docs before these joins was tried and REJECTED — deriving the two
     // candidate doc-id sets re-executes the (expensive) candidate
     // subtree twice more in the same query (no exchange reuse across
@@ -180,11 +179,11 @@ object Dedup {
     // candidate pairs over a 500k-doc corpus), so the reduction shrank
     // nothing and pair production regressed 224 → 375 s. Single
     // reference to `cand`, one pass, stays.
-    //   What DOES pay (r19): the SIZE-RATIO prefilter. J(A,B) ≥ t and
+    //   What DOES pay: the SIZE-RATIO prefilter. J(A,B) ≥ t and
     // |A∩B| ≤ min(|A|,|B|) force min ≥ t·max, so joining the (tiny,
     // per-doc) size table onto the candidates BEFORE the shingle
     // expansion drops every size-skewed background pair from the
-    // dominant Σ|shingles(a)| term — the r19 stage probe measured the
+    // dominant Σ|shingles(a)| term — a stage probe measured the
     // LSH candidate set at 220× the true pair set at sf30, and ~60% of
     // those background pairs fail the ratio on U{10..100}-length docs.
     // Exactly result-invariant (a necessary condition of the final
@@ -265,7 +264,7 @@ object Dedup {
     // curation pipelines). The CacheManager dedupes by canonical plan,
     // so every consumer in a session reads one materialization instead
     // of re-deriving shingles → signatures per query. Derivation is the
-    // pure-map [[signaturesOf]] (r20 continuation 2): one narrow pass,
+    // pure-map [[signaturesOf]]: one narrow pass,
     // no explode/aggregate/exchange.
     signaturesOf(Tables.documentsFanned(spark, dir)).persist()
   }
@@ -387,18 +386,16 @@ object Dedup {
       .orderBy($"doc_id")
   }
 
-  // cluster-assignment cache: unlike the plan-keyed CacheManager reuse
+  // cluster-assignment memo: unlike the plan-keyed CacheManager reuse
   // the signature index gets for free, the label FIXPOINT runs
   // driver-orchestrated actions while the DataFrame is being
-  // CONSTRUCTED — so without an explicit cache every consumer
-  // (clusters, fuzzy curation, the pretraining pipeline) re-runs the
-  // whole LSH → large-star/small-star convergence. The assignment table
-  // is exactly what a production pipeline stores. Keys carry the q22
-  // content fingerprint, so regenerated data under the same path can
-  // never serve stale labels; stopped sessions are evicted so the
-  // strong references can't pin dead contexts.
-  private val labelCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String, Option[Int]), DataFrame]()
+  // CONSTRUCTED — so without a memo every consumer (clusters, fuzzy
+  // curation, the pretraining pipeline) re-runs the whole LSH →
+  // large-star/small-star convergence. The assignment table is exactly
+  // what a production pipeline stores. Keys carry the source
+  // fingerprint, so regenerated data under the same path can never
+  // serve stale labels, and the superseded labels are unpersisted
+  private val labels = new graft.Warehouse.Memo[(String, String, Option[Int]), DataFrame](free = _.unpersist())
 
   /** (doc_id, cluster_id) for every document — the label fixpoint alone,
     * without the cluster-size aggregation `clusters` adds on top.
@@ -416,39 +413,16 @@ object Dedup {
       dir: String,
       cap: Option[Int] = None
   ): DataFrame = {
-    labelCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    val fp = graft.queries.Relational.sourceFingerprint(spark, s"$dir/documents.parquet")
-    val key = (spark, dir, fp, cap)
-    // evict superseded fingerprints for this (spark, dir): regenerated
-    // source data must not leave the old labels pinned in executor memory
-    val it = labelCache.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if ((e.getKey._1 eq spark) && e.getKey._2 == dir && e.getKey._3 != fp) {
-        e.getValue.unpersist()
-        it.remove()
-      }
-    }
-    // build OUTSIDE the map: the fixpoint runs multi-job Spark actions,
-    // far beyond what computeIfAbsent's bin lock should ever hold
-    val cached = labelCache.get(key)
-    if (cached != null) cached
-    else {
+    val fp = graft.Warehouse.sourceFingerprint(spark, s"$dir/documents.parquet")
+    labels(spark, (dir, fp, cap), k => k._1 == dir && k._2 != fp) {
       import spark.implicits._
-      val labels = connectedComponents(minhashLsh(spark, dir, cap).select($"id_a", $"id_b"))._1
-      val built = Tables
+      val lbl = connectedComponents(minhashLsh(spark, dir, cap).select($"id_a", $"id_b"))._1
+      Tables
         .documents(spark, dir)
         .select($"doc_id")
-        .join(labels.select($"u".as("doc_id"), $"lbl"), Seq("doc_id"), "left")
+        .join(lbl.select($"u".as("doc_id"), $"lbl"), Seq("doc_id"), "left")
         .select($"doc_id", coalesce($"lbl", $"doc_id").as("cluster_id"))
         .persist()
-      Option(labelCache.putIfAbsent(key, built)) match {
-        // the loser must NOT unpersist: CacheManager keys entries by
-        // canonicalized plan and both racers' plans are identical, so
-        // unpersisting the duplicate would evict the winner's cache too
-        case Some(winner) => winner
-        case None         => built
-      }
     }
   }
 
@@ -547,9 +521,8 @@ object Dedup {
     * LINEAR in the corpus by construction (the sf1h→sf10h probe rows
     * read exactly-linear because that IS the law, not a defect).
     *
-    * Two candidate prunings were measured in r20 and rejected
-    * (OPTIMIZATION_r20.md, "Inherited state" and "Measured and
-    * rejected"): a size-ratio prefilter is vacuous here, since the max
+    * Two candidate prunings were measured and rejected: a size-ratio
+    * prefilter is vacuous here, since the max
     * direction inter/min(na,nb) lets a 5-shingle doc inside any larger
     * one score 1.0; prefix filtering (AllPairs/PPJoin) was
     * result-identical but slower at every probed scale, because the cap
@@ -634,7 +607,7 @@ object Dedup {
     */
   /** Companion BANDED table of a signature index — the (doc_id, band,
     * bv) rows [[bandedSignatures]] derives from the stored signatures,
-    * persisted WITH the index (r20: a stored LSH index IS its buckets —
+    * persisted WITH the index (a stored LSH index IS its buckets —
     * the IVF/BM25 families already store postings/codes, not raw inputs
     * to re-derive per serve). Maintained in lockstep with the index:
     * built inside [[incrementalIndexTable]]'s build-once, appended by
@@ -656,11 +629,10 @@ object Dedup {
 
   private[graft] def incrementalIndexTable(spark: SparkSession, dir: String): String = {
     import spark.implicits._
-    val fp = graft.queries.Relational.sourceFingerprint(spark, s"$dir/documents.parquet")
+    val fp = graft.Warehouse.sourceFingerprint(spark, s"$dir/documents.parquet")
     val t = s"graft_dedup_index_$fp"
     val bt = bandsTableOf(t)
-    graft.queries.Relational
-      .buildOnce(spark, Seq("graft_dedup_index_", "graft_dedup_bands_"), Seq(t, bt)) {
+    graft.Warehouse.buildOnce(spark, Seq("graft_dedup_index_", "graft_dedup_bands_"), Seq(t, bt)) {
       // n (distinct-shingle count) rides in the index so the ingest
       // path's Jaccard denominators never re-derive corpus shingles
       val counts =
@@ -898,15 +870,14 @@ object Dedup {
       .agg(count(lit(1)).as("bc"))
       .filter($"bc" <= MinhashBucketCap)
       .select($"band", $"bv")
-    // NO SHUFFLE_HASH hints here (r20, measured): hinting the census
+    // NO SHUFFLE_HASH hints here (measured): hinting the census
     // semi + the band SELF-join regressed the full query by ~0.5 s —
     // the self-join's two sides are the same subtree, so under
     // SortMergeJoin the exchange AND sort are computed once and reused
     // for both sides; a hint breaks that reuse for a sort it would have
     // shared anyway. (The index arm's equivalent hints measured within
-    // noise in an in-JVM alternating A/B — OPTIMIZATION_r20.md,
-    // "Measured and rejected" — so the whole family keeps the planner's
-    // SMJ.)
+    // noise in an in-JVM alternating A/B, so the whole family keeps the
+    // planner's SMJ.)
     val bands = bands0.join(okBuckets, Seq("band", "bv"), "left_semi")
     val cand = bands
       .as("a")
@@ -960,9 +931,9 @@ object Dedup {
     */
   private[graft] def indexDvTable(spark: SparkSession, dir: String): String = {
     import spark.implicits._
-    val fp = graft.queries.Relational.sourceFingerprint(spark, s"$dir/documents.parquet")
+    val fp = graft.Warehouse.sourceFingerprint(spark, s"$dir/documents.parquet")
     val t = s"graft_dedup_dv_$fp"
-    graft.queries.Relational.buildOnce(spark, Seq("graft_dedup_dv_"), Seq(t)) {
+    graft.Warehouse.buildOnce(spark, Seq("graft_dedup_dv_"), Seq(t)) {
       Tables
         .documents(spark, dir)
         .filter($"doc_id" % NewBatchMod =!= 0 && $"doc_id" % IndexDeleteMod === IndexDeleteRem)
@@ -987,7 +958,7 @@ object Dedup {
     * exactly as before. The admission rides the CAPPED arm — hot LIVE
     * index band buckets (population counted after the DV anti-join)
     * leave before the batch×index candidate join, exactly like every
-    * other registered admission serve; the r15 probe measured the
+    * other registered admission serve; a probe measured the
     * uncapped arm at 46.6 s vs the capped band's ~16 s at sf10, the
     * Σ batch_df×index_df superlinearity the cap exists to kill. The
     * oracle replays admission with the victims absent from both
@@ -1032,11 +1003,11 @@ object Dedup {
     */
   private[graft] def indexStreamDvTable(spark: SparkSession, dir: String): String = {
     import spark.implicits._
-    val fp = graft.queries.Relational.sourceFingerprint(spark, s"$dir/documents.parquet")
+    val fp = graft.Warehouse.sourceFingerprint(spark, s"$dir/documents.parquet")
     val dvt = s"graft_dedupsd_dv_$fp"
-    graft.queries.Relational.buildOnce(spark, Seq("graft_dedupsd_dv_"), Seq(dvt)) {
+    graft.Warehouse.buildOnce(spark, Seq("graft_dedupsd_dv_"), Seq(dvt)) {
       spark.sql(s"DROP TABLE IF EXISTS $dvt")
-      val frag = graft.queries.Layout.tmpDirOnce("graft_dedupsdq_", fp) { path =>
+      val frag = graft.Warehouse.tmpDirOnce("graft_dedupsdq_", fp) { path =>
         Tables
           .documents(spark, dir)
           .filter($"doc_id" % NewBatchMod =!= 0 && $"doc_id" % IndexDeleteMod === IndexDeleteRem)
@@ -1094,11 +1065,10 @@ object Dedup {
     */
   private[graft] def compactedIndexTable(spark: SparkSession, dir: String): String = {
     import spark.implicits._
-    val fp = graft.queries.Relational.sourceFingerprint(spark, s"$dir/documents.parquet")
+    val fp = graft.Warehouse.sourceFingerprint(spark, s"$dir/documents.parquet")
     val t = s"graft_dedup_cidx_$fp"
     val bt = bandsTableOf(t)
-    graft.queries.Relational
-      .buildOnce(spark, Seq("graft_dedup_cidx_", "graft_dedup_cbands_"), Seq(t, bt)) {
+    graft.Warehouse.buildOnce(spark, Seq("graft_dedup_cidx_", "graft_dedup_cbands_"), Seq(t, bt)) {
         val src = incrementalIndexTable(spark, dir)
         val dv = broadcast(spark.table(indexDvTable(spark, dir)))
         spark
@@ -1213,7 +1183,7 @@ object Dedup {
       // production callers pass the lockstep-maintained companion table
       // (DV-filtered on the takedown seams), which deletes the per-tick
       // O(index) re-banding map pass. None re-derives the bands from
-      // `index` (the pre-r20 shape, kept for callers without a stored
+      // `index` (the older shape, kept for callers without a stored
       // companion and for the parity spec).
       indexBands: Option[DataFrame] = None
   ): DataFrame = {
@@ -1242,8 +1212,7 @@ object Dedup {
         // no SHUFFLE_HASH hints on this semi or the batch-bands join:
         // hinted measured within noise of unhinted in an in-JVM
         // alternating A/B, and the planner's SortMergeJoin shares its
-        // sorted band exchange with the census (OPTIMIZATION_r20.md,
-        // "Measured and rejected")
+        // sorted band exchange with the census
         idxBands0.join(ok, Seq("band", "bv"), "left_semi")
     }
     val cand0 = bandedSignatures(batchSig)
@@ -1306,7 +1275,7 @@ object Dedup {
     */
   def simhashSignatures(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    // pure-map formulation (r20 continuation 2, the minhash pattern):
+    // pure-map formulation (the minhash pattern):
     // the per-doc signature runs inside the scan stage via the scalar
     // SimhashArray — value-identical to the explode → md5 → SimhashAgg
     // aggregate (SimhashArraySpec pins parity). The null drop
@@ -1497,26 +1466,16 @@ object Dedup {
 
   // bloom artifact per (session, dir, content fingerprint) — built once
   // from the persisted dedup index, the same derived-artifact pattern as
-  // cluster labels; superseded fingerprints are evicted on access
-  private val bloomCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), org.apache.spark.util.sketch.BloomFilter]()
+  // cluster labels
+  private val blooms = new graft.Warehouse.Memo[(String, String), org.apache.spark.util.sketch.BloomFilter]()
 
   private[graft] def corpusBloom(spark: SparkSession, dir: String, indexTable: String): org.apache.spark.util.sketch.BloomFilter = {
-    bloomCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    val fp = graft.queries.Relational.sourceFingerprint(spark, s"$dir/documents.parquet")
-    val it = bloomCache.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if ((e.getKey._1 eq spark) && e.getKey._2 == dir && e.getKey._3 != fp) it.remove()
+    val fp = graft.Warehouse.sourceFingerprint(spark, s"$dir/documents.parquet")
+    blooms(spark, (dir, fp), k => k._1 == dir && k._2 != fp) {
+      val index = spark.table(indexTable)
+      val n = math.max(index.count(), 1L)
+      index.stat.bloomFilter("h", n, BloomFpp)
     }
-    bloomCache.computeIfAbsent(
-      (spark, dir, fp),
-      { _ =>
-        val index = spark.table(indexTable)
-        val n = math.max(index.count(), 1L)
-        index.stat.bloomFilter("h", n, BloomFpp)
-      }
-    )
   }
 
   /** Bloom-gated ingest admission — the index-less fast path of the

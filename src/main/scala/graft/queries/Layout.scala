@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.Tables
+import graft.{Tables, Warehouse}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -87,9 +87,9 @@ object Layout {
     */
   private[queries] def zorderTable(spark: SparkSession, dir: String): String = {
     import spark.implicits._
-    val fp = Relational.sourceFingerprint(spark, s"$dir/lineitem.parquet")
+    val fp = Warehouse.sourceFingerprint(spark, s"$dir/lineitem.parquet")
     val t = s"graft_zorder_$fp"
-    Relational.buildOnce(spark, Seq("graft_zorder_"), Seq(t)) {
+    Warehouse.buildOnce(spark, Seq("graft_zorder_"), Seq(t)) {
       Tables
         .lineitem(spark, dir)
         .withColumn("z", zValue($"l_partkey".cast("int"), $"l_suppkey".cast("int")))
@@ -113,9 +113,9 @@ object Layout {
   private[queries] def manifestTable(spark: SparkSession, dir: String): String = {
     import spark.implicits._
     val zt = zorderTable(spark, dir)
-    val fp = Relational.sourceFingerprint(spark, s"$dir/lineitem.parquet")
+    val fp = Warehouse.sourceFingerprint(spark, s"$dir/lineitem.parquet")
     val t = s"graft_zmanifest_$fp"
-    Relational.buildOnce(spark, Seq("graft_zmanifest_"), Seq(t)) {
+    Warehouse.buildOnce(spark, Seq("graft_zmanifest_"), Seq(t)) {
       spark
         .table(zt)
         .groupBy(input_file_name().as("file"))
@@ -181,41 +181,9 @@ object Layout {
   val FragFiles = 64
   val CompactTarget = 4
 
-  // serializes tmpdir layout builds (two concurrent first callers would
-  // interleave writes into the same path) — same discipline as
-  // Relational.bucketBuildLock for warehouse artifacts
-  private val tmpBuildLock = new Object
-
-  /** Build-once guard for fingerprinted tmpdir layouts: retires sibling
-    * `prefix*` dirs whose fingerprint no longer matches (each testdata
-    * regeneration would otherwise leak a dir of parquet per prefix),
-    * then runs `build` exactly once under [[tmpBuildLock]]
-    * (double-checked on the _SUCCESS marker). A dir present WITHOUT the
-    * marker is a crashed partial build and is deleted before the retry:
-    * leftover state must not leak into the rebuild — in particular a
-    * streaming build's `_chk` checkpoint would make the retry resume
-    * past its already-committed batches and silently drop their rows.
-    */
-  private[graft] def tmpDirOnce(prefix: String, fp: String)(build: String => Unit): String = {
-    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
-    val path = s"$tmp/$prefix$fp"
-    if (!new java.io.File(path, "_SUCCESS").exists()) tmpBuildLock.synchronized {
-      if (!new java.io.File(path, "_SUCCESS").exists()) {
-        Option(tmp.listFiles())
-          .getOrElse(Array.empty)
-          .filter(f => f.getName.startsWith(prefix) && f.getName != s"$prefix$fp")
-          .foreach(stale => org.apache.commons.io.FileUtils.deleteQuietly(stale))
-        if (new java.io.File(path).exists())
-          org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(path))
-        build(path)
-      }
-    }
-    path
-  }
-
   private[queries] def fragmentedDir(spark: SparkSession, dir: String): String = {
-    val fp = Relational.sourceFingerprint(spark, s"$dir/documents.parquet")
-    tmpDirOnce("graft_frag_", fp) { path =>
+    val fp = Warehouse.sourceFingerprint(spark, s"$dir/documents.parquet")
+    Warehouse.tmpDirOnce("graft_frag_", fp) { path =>
       Tables.documents(spark, dir).repartition(FragFiles).write.mode("overwrite").parquet(path)
     }
   }
@@ -231,8 +199,8 @@ object Layout {
   def compactScan(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val frag = fragmentedDir(spark, dir)
-    val fp = Relational.sourceFingerprint(spark, s"$dir/documents.parquet")
-    val compacted = tmpDirOnce("graft_compact_", fp) { path =>
+    val fp = Warehouse.sourceFingerprint(spark, s"$dir/documents.parquet")
+    val compacted = Warehouse.tmpDirOnce("graft_compact_", fp) { path =>
       Tables.artifactParquet(spark, frag).coalesce(CompactTarget).write.mode("overwrite").parquet(path)
     }
     Tables.artifactParquet(spark, compacted)
@@ -286,7 +254,7 @@ object Layout {
     */
   private def incTick(spark: SparkSession, dir: String, fp: String, k: Int): (String, String) = {
     import spark.implicits._
-    val data = tmpDirOnce(s"graft_zinc_d${k}_", fp) { path =>
+    val data = Warehouse.tmpDirOnce(s"graft_zinc_d${k}_", fp) { path =>
       incSlice(spark, dir, k)
         .withColumn("z", zValue($"l_partkey".cast("int"), $"l_suppkey".cast("int")))
         .repartitionByRange(IncSliceFiles(k), $"z")
@@ -296,7 +264,7 @@ object Layout {
         .mode("overwrite")
         .parquet(path)
     }
-    val man = tmpDirOnce(s"graft_zinc_m${k}_", fp) { path =>
+    val man = Warehouse.tmpDirOnce(s"graft_zinc_m${k}_", fp) { path =>
       val stats = Tables.artifactParquet(spark, data)
         .groupBy(input_file_name().as("file"))
         .agg(
@@ -324,7 +292,7 @@ object Layout {
     */
   def incrementalScan(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val fp = Relational.sourceFingerprint(spark, s"$dir/lineitem.parquet")
+    val fp = Warehouse.sourceFingerprint(spark, s"$dir/lineitem.parquet")
     val ticks = (0 until IncSlices).map(k => incTick(spark, dir, fp, k))
     val manifest = Tables.artifactParquet(spark, ticks.map(_._2): _*)
     val keep = manifest
@@ -364,7 +332,7 @@ object Layout {
     */
   def snapshotScan(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val fp = Relational.sourceFingerprint(spark, s"$dir/lineitem.parquet")
+    val fp = Warehouse.sourceFingerprint(spark, s"$dir/lineitem.parquet")
     val ticks = (0 until IncSlices).map(k => incTick(spark, dir, fp, k))
     val tagged = ticks.zipWithIndex
       .map { case ((data, _), k) =>
@@ -412,11 +380,11 @@ object Layout {
     */
   private[graft] def streamIngestRoot(spark: SparkSession, dir: String): String = {
     import spark.implicits._
-    val fp = Relational.sourceFingerprint(spark, s"$dir/lineitem.parquet")
-    val frag = tmpDirOnce("graft_slsrc_", fp) { path =>
+    val fp = Warehouse.sourceFingerprint(spark, s"$dir/lineitem.parquet")
+    val frag = Warehouse.tmpDirOnce("graft_slsrc_", fp) { path =>
       Tables.lineitem(spark, dir).repartition(StreamIngestFragFiles).write.mode("overwrite").parquet(path)
     }
-    tmpDirOnce("graft_sling_", fp) { root =>
+    Warehouse.tmpDirOnce("graft_sling_", fp) { root =>
       new java.io.File(root).mkdirs()
       val schema = Tables.artifactParquet(spark, frag).schema
       val stream = spark.readStream
@@ -519,11 +487,11 @@ object Layout {
     */
   private[graft] def streamMvRoot(spark: SparkSession, dir: String): String = {
     import spark.implicits._
-    val fp = Relational.sourceFingerprint(spark, s"$dir/lineitem.parquet")
-    val frag = tmpDirOnce("graft_smvsrc_", fp) { path =>
+    val fp = Warehouse.sourceFingerprint(spark, s"$dir/lineitem.parquet")
+    val frag = Warehouse.tmpDirOnce("graft_smvsrc_", fp) { path =>
       Tables.lineitem(spark, dir).repartition(StreamIngestFragFiles).write.mode("overwrite").parquet(path)
     }
-    tmpDirOnce("graft_smv_", fp) { root =>
+    Warehouse.tmpDirOnce("graft_smv_", fp) { root =>
       new java.io.File(root).mkdirs()
       val schema = Tables.artifactParquet(spark, frag).schema
       val stream = spark.readStream
@@ -622,9 +590,9 @@ object Layout {
     */
   private[graft] def vacuumLineage(spark: SparkSession, dir: String): (Seq[String], String, String) = {
     import spark.implicits._
-    val fp = Relational.sourceFingerprint(spark, s"$dir/lineitem.parquet")
+    val fp = Warehouse.sourceFingerprint(spark, s"$dir/lineitem.parquet")
     val tickDirs = (0 until IncSlices).map { k =>
-      tmpDirOnce(s"graft_vacd${k}_", fp) { path =>
+      Warehouse.tmpDirOnce(s"graft_vacd${k}_", fp) { path =>
         incSlice(spark, dir, k)
           .withColumn("z", zValue($"l_partkey".cast("int"), $"l_suppkey".cast("int")))
           .repartitionByRange(IncSliceFiles(k), $"z")
@@ -636,7 +604,7 @@ object Layout {
       }
     }
     // the compaction commit MUST land before any expiry deletes ticks
-    val comp = tmpDirOnce("graft_vacc_", fp) { path =>
+    val comp = Warehouse.tmpDirOnce("graft_vacc_", fp) { path =>
       Tables.artifactParquet(spark, tickDirs: _*)
         .withColumn("z", zValue($"l_partkey".cast("int"), $"l_suppkey".cast("int")))
         .repartitionByRange(VacCompactFiles, $"z")
@@ -646,7 +614,7 @@ object Layout {
         .mode("overwrite")
         .parquet(path)
     }
-    val man = tmpDirOnce("graft_vacm_", fp) { path =>
+    val man = Warehouse.tmpDirOnce("graft_vacm_", fp) { path =>
       Tables.artifactParquet(spark, comp)
         .groupBy(input_file_name().as("file"))
         .agg(
@@ -737,9 +705,9 @@ object Layout {
     * existed when it landed.
     */
   private[queries] def evoDirs(spark: SparkSession, dir: String): Seq[String] = {
-    val fp = Relational.sourceFingerprint(spark, s"$dir/lineitem.parquet")
+    val fp = Warehouse.sourceFingerprint(spark, s"$dir/lineitem.parquet")
     (0 until IncSlices).map { k =>
-      tmpDirOnce(s"graft_evo_d${k}_", fp) { path =>
+      Warehouse.tmpDirOnce(s"graft_evo_d${k}_", fp) { path =>
         val cols = EvoBaseCols ++
           (if (k >= 1) Seq("l_discount") else Nil) ++
           (if (k >= 2) Seq("l_tax") else Nil)
@@ -813,7 +781,7 @@ object Layout {
     */
   private[queries] def specEvoTick(spark: SparkSession, dir: String, fp: String, k: Int): String = {
     import spark.implicits._
-    tmpDirOnce(s"graft_pspec_d${k}_", fp) { path =>
+    Warehouse.tmpDirOnce(s"graft_pspec_d${k}_", fp) { path =>
       val cols = specEvoCols(k)
       incSlice(spark, dir, k)
         .select($"l_orderkey", $"l_quantity", $"l_extendedprice", $"l_returnflag", $"l_shipdate")
@@ -857,7 +825,7 @@ object Layout {
     */
   def specEvolutionScan(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val fp = Relational.sourceFingerprint(spark, s"$dir/lineitem.parquet")
+    val fp = Warehouse.sourceFingerprint(spark, s"$dir/lineitem.parquet")
     val ticks = (0 until IncSlices).map(k => specEvoTick(spark, dir, fp, k))
     val segs = ticks.map { seg =>
       // MEASURED EXCEPTION to the artifact reader memo (r20
@@ -916,7 +884,7 @@ object Layout {
   private def mvTick(spark: SparkSession, dir: String, fp: String, k: Int): String = {
     import spark.implicits._
     val prev = if (k == 0) None else Some(mvTick(spark, dir, fp, k - 1))
-    tmpDirOnce(s"graft_mv${k}_", fp) { path =>
+    Warehouse.tmpDirOnce(s"graft_mv${k}_", fp) { path =>
       val delta = incSlice(spark, dir, k)
         .groupBy($"l_returnflag", $"l_linestatus")
         .agg(
@@ -962,7 +930,7 @@ object Layout {
     */
   def mvServe(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val fp = Relational.sourceFingerprint(spark, s"$dir/lineitem.parquet")
+    val fp = Warehouse.sourceFingerprint(spark, s"$dir/lineitem.parquet")
     val last = mvTick(spark, dir, fp, IncSlices - 1)
     Tables.artifactParquet(spark, last)
       .select(
@@ -993,7 +961,7 @@ object Layout {
     */
   def mvSnapshotServe(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val fp = Relational.sourceFingerprint(spark, s"$dir/lineitem.parquet")
+    val fp = Warehouse.sourceFingerprint(spark, s"$dir/lineitem.parquet")
     (0 until IncSlices)
       .map(k => Tables.artifactParquet(spark, mvTick(spark, dir, fp, k)).withColumn("version", lit(k.toLong)))
       .reduce(_ unionByName _)
@@ -1034,8 +1002,8 @@ object Layout {
     */
   private[queries] def mvVacRoot(spark: SparkSession, dir: String): String = {
     import spark.implicits._
-    val fp = Relational.sourceFingerprint(spark, s"$dir/lineitem.parquet")
-    tmpDirOnce("graft_mvvac_", fp) { path =>
+    val fp = Warehouse.sourceFingerprint(spark, s"$dir/lineitem.parquet")
+    Warehouse.tmpDirOnce("graft_mvvac_", fp) { path =>
       (0 until IncSlices).foldLeft(Option.empty[String]) { (prev, k) =>
         val delta = incSlice(spark, dir, k)
           .groupBy($"l_returnflag", $"l_linestatus")
@@ -1150,8 +1118,8 @@ object Layout {
     */
   private[queries] def morDataDir(spark: SparkSession, dir: String): String = {
     import spark.implicits._
-    val fp = Relational.sourceFingerprint(spark, s"$dir/lineitem.parquet")
-    tmpDirOnce("graft_mord_", fp) { path =>
+    val fp = Warehouse.sourceFingerprint(spark, s"$dir/lineitem.parquet")
+    Warehouse.tmpDirOnce("graft_mord_", fp) { path =>
       Tables
         .lineitem(spark, dir)
         .withColumn("z", zValue($"l_partkey".cast("int"), $"l_suppkey".cast("int")))
@@ -1204,7 +1172,7 @@ object Layout {
       .take(6)
       .map("%02x".format(_))
       .mkString
-    s"${Relational.sourceFingerprint(spark, s"$dir/lineitem.parquet")}e$epoch"
+    s"${Warehouse.sourceFingerprint(spark, s"$dir/lineitem.parquet")}e$epoch"
   }
 
   /** The DELETE commit: a key-delete file — the row-lineage ids of the
@@ -1219,7 +1187,7 @@ object Layout {
   private[queries] def morDvDir(spark: SparkSession, dir: String): String = {
     import spark.implicits._
     val fp = morChildFp(spark, dir)
-    tmpDirOnce("graft_mordv_", fp) { path =>
+    Warehouse.tmpDirOnce("graft_mordv_", fp) { path =>
       Tables.artifactParquet(spark, morDataDir(spark, dir))
         .filter(morPred(spark))
         .select(MorKeys.map(col): _*)
@@ -1257,7 +1225,7 @@ object Layout {
   private[queries] def morPurgedDir(spark: SparkSession, dir: String): String = {
     import spark.implicits._
     val fp = morChildFp(spark, dir)
-    tmpDirOnce("graft_morp_", fp) { path =>
+    Warehouse.tmpDirOnce("graft_morp_", fp) { path =>
       val data = morDataDir(spark, dir)
       val dv = Tables.artifactParquet(spark, morDvDir(spark, dir))
       val tagged = Tables.artifactParquet(spark, data).withColumn("f", input_file_name())
@@ -1374,7 +1342,7 @@ object Layout {
     import spark.implicits._
     val data = morDataDir(spark, dir)
     val fp = morChildFp(spark, dir)
-    val frag = tmpDirOnce("graft_morsdq_", fp) { path =>
+    val frag = Warehouse.tmpDirOnce("graft_morsdq_", fp) { path =>
       Tables.artifactParquet(spark, data)
         .filter(morPred(spark))
         .select(MorKeys.map(col): _*)
@@ -1383,7 +1351,7 @@ object Layout {
         .mode("overwrite")
         .parquet(path)
     }
-    tmpDirOnce("graft_morsd_", fp) { root =>
+    Warehouse.tmpDirOnce("graft_morsd_", fp) { root =>
       new java.io.File(root).mkdirs()
       val schema = Tables.artifactParquet(spark, frag).schema
       val stream = spark.readStream
@@ -1452,7 +1420,7 @@ object Layout {
     val data = morDataDir(spark, dir)
     val fp = morChildFp(spark, dir)
     val t = s"graft_mormanifest_$fp"
-    Relational.buildOnce(spark, Seq("graft_mormanifest_"), Seq(t)) {
+    Warehouse.buildOnce(spark, Seq("graft_mormanifest_"), Seq(t)) {
       Tables.artifactParquet(spark, data)
         .groupBy(input_file_name().as("file"))
         .agg(
@@ -1563,8 +1531,8 @@ object Layout {
     */
   private[queries] def cdcDirs(spark: SparkSession, dir: String): (String, String, String) = {
     import spark.implicits._
-    val fp = Relational.sourceFingerprint(spark, s"$dir/lineitem.parquet")
-    val base = tmpDirOnce("graft_cdcb2_", fp) { path =>
+    val fp = Warehouse.sourceFingerprint(spark, s"$dir/lineitem.parquet")
+    val base = Warehouse.tmpDirOnce("graft_cdcb2_", fp) { path =>
       incSlice(spark, dir, 0)
         .withColumn("cdc_commit", lit(1L))
         .withColumn("cdc_rid", monotonically_increasing_id())
@@ -1572,7 +1540,7 @@ object Layout {
         .mode("overwrite")
         .parquet(path)
     }
-    val ins = tmpDirOnce("graft_cdci2_", fp) { path =>
+    val ins = Warehouse.tmpDirOnce("graft_cdci2_", fp) { path =>
       incSlice(spark, dir, 1)
         .unionByName(incSlice(spark, dir, 2))
         .withColumn("cdc_commit", lit(2L))
@@ -1581,7 +1549,7 @@ object Layout {
         .mode("overwrite")
         .parquet(path)
     }
-    val dv = tmpDirOnce("graft_cdcd2_", fp) { path =>
+    val dv = Warehouse.tmpDirOnce("graft_cdcd2_", fp) { path =>
       Tables.artifactParquet(spark, base)
         .unionByName(Tables.artifactParquet(spark, ins))
         .filter($"l_partkey" <= MorPartHi)
@@ -1678,7 +1646,7 @@ object Layout {
   private def cdfMvVersion(spark: SparkSession, dir: String, fp: String, v: Int): String = {
     import spark.implicits._
     val prev = if (v == 1) None else Some(cdfMvVersion(spark, dir, fp, v - 1))
-    tmpDirOnce(s"graft_cmv${v}_", fp) { path =>
+    Warehouse.tmpDirOnce(s"graft_cmv${v}_", fp) { path =>
       val changes = tableChanges(spark, dir, v)
       val delta = changes
         .groupBy($"l_returnflag", $"l_linestatus")
@@ -1730,7 +1698,7 @@ object Layout {
     */
   def mvFromChangesServe(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val fp = Relational.sourceFingerprint(spark, s"$dir/lineitem.parquet")
+    val fp = Warehouse.sourceFingerprint(spark, s"$dir/lineitem.parquet")
     val last = cdfMvVersion(spark, dir, fp, 3)
     Tables.artifactParquet(spark, last)
       .select(

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.Tables
+import graft.{Tables, Warehouse}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -351,6 +351,41 @@ object Relational {
       .orderBy($"o_custkey")
   }
 
+  /** The persisted per-group distinct-value histogram (g, v, c, b) every
+    * rank-percentile consumer shares: distinct VALUES only — bounded by
+    * the value grid, tiny relative to the table — and the CacheManager
+    * dedupes invocations by canonical plan, so every caller over the
+    * same (g, v) frame ([[rankPercentiles]]' internal branches AND
+    * [[statsHistogram]]'s bucket-stats aggregate) reads ONE cached
+    * materialization — one table scan total. Entries live in a bounded
+    * plan-keyed memo, NOT open-endedly in the session: the engine
+    * invokes this over a FIXED set of inputs (q19/q20/histogram — three
+    * frames), so repeated calls return the one registered DataFrame per
+    * canonical plan instead of re-marking a persist, an ad-hoc caller
+    * churning through many inputs evicts the least-recently-returned
+    * entry at the cap instead of accumulating executor memory without
+    * bound, and the session-end hygiene pass
+    * ([[Warehouse.warehouseHygiene]], which Bench and Verify
+    * already run) releases every entry — no cache outlives the serving
+    * pass that needed it.
+    */
+  private val HistRegistryCap = 8
+  private[graft] val histograms =
+    new Warehouse.Memo[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, DataFrame](
+      HistRegistryCap,
+      _.unpersist()
+    )
+
+  private[graft] def valueHistogram(df: DataFrame): DataFrame = {
+    val spark = df.sparkSession
+    import spark.implicits._
+    val hist = df
+      .groupBy($"g", $"v")
+      .agg(count(lit(1)).as("c"))
+      .withColumn("b", floor($"v"))
+    histograms(spark, hist.queryExecution.analyzed.canonicalized)(hist.persist())
+  }
+
   /** Rank-based exact interpolated percentiles per group — the
     * scale-safe replacement for the exact `percentile` aggregate, which
     * materializes every group value in its aggregation buffer (executor
@@ -374,85 +409,6 @@ object Relational {
     *      are bit-identical to the exact aggregate this replaces
     *      (pinned by PercentileParitySpec).
     */
-  /** The persisted per-group distinct-value histogram (g, v, c, b) every
-    * rank-percentile consumer shares: distinct VALUES only — bounded by
-    * the value grid, tiny relative to the table — and the CacheManager
-    * dedupes invocations by canonical plan, so every caller over the
-    * same (g, v) frame ([[rankPercentiles]]' internal branches AND
-    * [[statsHistogram]]'s bucket-stats aggregate) reads ONE cached
-    * materialization — one table scan total. Entries live in a bounded
-    * plan-keyed registry, NOT open-endedly in the session: the engine
-    * invokes this over a FIXED set of inputs (q19/q20/histogram — three
-    * frames), so repeated calls return the one registered DataFrame per
-    * canonical plan instead of re-marking a persist, an ad-hoc caller
-    * churning through many inputs evicts the eldest entry at the size
-    * cap instead of accumulating executor memory without bound, and the
-    * session-end hygiene pass ([[warehouseHygiene]], which Bench and
-    * Verify already run) releases every entry — no cache outlives the
-    * serving pass that needed it.
-    */
-  private val HistRegistryCap = 8
-  // ACCESS-order (third ctor arg): a cache hit moves the entry to the
-  // back, so cap eviction takes the least-recently-RETURNED histogram —
-  // insertion order would evict the eldest unconditionally, including
-  // one a concurrent caller just received and is still executing
-  // against (results stay correct either way — Spark recomputes an
-  // unpersisted frame — but the shared-scan optimization would be
-  // silently defeated under concurrent use at the cap)
-  private val histRegistry =
-    new java.util.LinkedHashMap[
-      (SparkSession, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan),
-      DataFrame
-    ](16, 0.75f, true)
-
-  private[graft] def valueHistogram(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val hist = df
-      .groupBy($"g", $"v")
-      .agg(count(lit(1)).as("c"))
-      .withColumn("b", floor($"v"))
-    val key = (spark, hist.queryExecution.analyzed.canonicalized)
-    histRegistry.synchronized {
-      histRegistry.entrySet().removeIf(_.getKey._1.sparkContext.isStopped)
-      val cached = histRegistry.get(key)
-      if (cached != null) cached
-      else {
-        if (histRegistry.size >= HistRegistryCap) {
-          val eldest = histRegistry.entrySet().iterator().next()
-          eldest.getValue.unpersist()
-          histRegistry.remove(eldest.getKey)
-          // stderr so a churn pattern at the cap is visible in run logs
-          System.err.println(
-            s"[hist-registry] evicted least-recently-used entry at cap $HistRegistryCap"
-          )
-        }
-        val built = hist.persist()
-        histRegistry.put(key, built)
-        built
-      }
-    }
-  }
-
-  /** Unpersists every registered rank-percentile histogram for
-    * `spark` — the session-end half of the registry's lifetime story,
-    * invoked from [[warehouseHygiene]]. Returns the number released.
-    */
-  private[graft] def releaseHistograms(spark: SparkSession): Int =
-    histRegistry.synchronized {
-      val it = histRegistry.entrySet().iterator()
-      var n = 0
-      while (it.hasNext) {
-        val e = it.next()
-        if (e.getKey._1 eq spark) {
-          e.getValue.unpersist()
-          it.remove()
-          n += 1
-        }
-      }
-      n
-    }
-
   private[graft] def rankPercentiles(
       df: DataFrame,
       ps: Seq[(String, Double)],
@@ -619,7 +575,7 @@ object Relational {
   def q21SketchGate(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val li = Tables.lineitem(spark, dir)
-    // Three scans ON PURPOSE (r20 measured rejection): folding the exact
+    // Three scans ON PURPOSE (measured, and rejected): folding the exact
     // countDistincts into the rank-check aggregate (one combined
     // join+multi-distinct pass, 3 scans → 2) measured CONSISTENTLY
     // SLOWER at sf0.1 (1.61–1.71 s vs 1.20–1.41 s steady) — the
@@ -752,189 +708,9 @@ object Relational {
     * construction. The one-time write is amortized like any production
     * bucketed layout — bench's min-of-2 times the join, not the write.
     */
-  /** Hex digest of the source files' (path, length, mtime) triples —
-    * cheap (metadata-only) and changes whenever the data is regenerated.
-    */
-  private[graft] def sourceFingerprint(spark: SparkSession, paths: String*): String = {
-    val fp = graft.Tables.listingFp(spark, paths, 6)
-    sessionFps.add(fp)
-    fp
-  }
-
-  /** Every fingerprint this JVM derived — the live set for the
-    * session-end warehouse hygiene sweep ([[warehouseHygiene]]).
-    */
-  private val sessionFps =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** Session-end warehouse hygiene: one ledger line (live artifact dirs,
-    * bytes) plus a retirement sweep of `graft_*` dirs whose name carries
-    * NO fingerprint this session derived — the dead artifacts a
-    * multi-decade probe session (or a warehouse shared across rounds)
-    * would otherwise accumulate without bound, since buildOnce's
-    * per-prefix sweep only fires for prefixes the session rebuilds.
-    * Child fingerprints (`<fp>e<epoch>`) contain the parent fp, so a
-    * substring match keeps them with their parent. Call only at
-    * session end (Bench/Verify), after the last query.
-    *
-    * Two guards keep the sweep from eating artifacts it must not:
-    * `sweep=false` (a FILTERED Verify/Bench run — this session derived
-    * fingerprints for only a subset of queries, so "no fp from this
-    * session" proves nothing about the rest) prints the ledger without
-    * retiring; and even when sweeping, dirs younger than `minAgeMs`
-    * survive — a concurrently running Verify/test JVM's in-flight
-    * builds are by construction fresh, so the age floor closes the
-    * cross-JVM delete race for any caller whose warehouse is shared
-    * (Bench and Verify each run in a per-process warehouse).
-    */
-  private[graft] def warehouseHygiene(
-      spark: SparkSession,
-      sweep: Boolean = true,
-      minAgeMs: Long = 60L * 60 * 1000
-  ): String = {
-    // session-end cache hygiene rides with the warehouse ledger: the
-    // registered rank-percentile histograms must not outlive the
-    // serving pass (Bench/Verify call this exactly once, at the end)
-    val released = releaseHistograms(spark)
-    val warehouse = new org.apache.hadoop.fs.Path(spark.conf.get("spark.sql.warehouse.dir"))
-    val fs = warehouse.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(warehouse)) return s"[warehouse] empty; released $released cached histograms"
-    val live = scala.collection.immutable.Set.from(
-      scala.jdk.CollectionConverters.SetHasAsScala(sessionFps).asScala
-    )
-    val entries = fs.listStatus(warehouse).filter(_.getPath.getName.startsWith("graft_"))
-    val cutoff = System.currentTimeMillis() - minAgeMs
-    // the age floor is BUILD-TIME-DERIVED: an artifact's age is its
-    // newest write anywhere under the dir, not the dir inode's mtime —
-    // a concurrent JVM mid-way through a build LONGER than the floor
-    // (sf30 index builds run to the hour) keeps writing files, so its
-    // newest-write stays fresh even though the dir was created before
-    // the cutoff. Recursion only ever runs over the dead candidates
-    // (dirs no live fingerprint claims), never the whole warehouse.
-    // a concurrent writer can rename/delete entries (e.g. _temporary
-    // commit) between our listStatus and the child stat — an unreadable
-    // entry is BY DEFINITION being written right now, so treat it as
-    // maximally fresh rather than crash the sweep
-    def newestWrite(p: org.apache.hadoop.fs.Path): Long =
-      try {
-        val st = fs.getFileStatus(p)
-        if (!st.isDirectory) st.getModificationTime
-        else {
-          val children = fs.listStatus(p)
-          if (children.isEmpty) st.getModificationTime
-          else math.max(st.getModificationTime, children.map(c => newestWrite(c.getPath)).max)
-        }
-      } catch {
-        case scala.util.control.NonFatal(_) => Long.MaxValue
-      }
-    val (liveKept, dead) =
-      entries.partition(st => live.exists(fp => st.getPath.getName.contains(fp)))
-    val staleCandidates =
-      if (sweep) dead.filter(st => newestWrite(st.getPath) <= cutoff)
-      else Array.empty[org.apache.hadoop.fs.FileStatus]
-    // liveness is re-checked against the LIVE fp set immediately before
-    // each delete: a concurrent first caller can claim (fingerprint) an
-    // hour-old artifact AFTER the `live` snapshot above and be serving
-    // from it by the time this sweep reaches it — the snapshot-then-
-    // delete window spans the whole candidate walk, while fp
-    // registration precedes the claimer's first read by planning time,
-    // so the delete-time check closes the race the minAge floor cannot
-    // (the floor only protects FRESH writes, not serves of old dirs)
-    val stale = staleCandidates.filter { st =>
-      val claimedMeanwhile = scala.jdk.CollectionConverters
-        .SetHasAsScala(sessionFps)
-        .asScala
-        .exists(fp => st.getPath.getName.contains(fp))
-      if (!claimedMeanwhile) fs.delete(st.getPath, true)
-      !claimedMeanwhile
-    }
-    val kept = liveKept ++ dead.diff(stale)
-    // the byte census is informational; a concurrent builder's
-    // retire-then-rebuild (buildOnce deletes the current-fp dirs before
-    // rewriting them) can remove a listed dir between our listStatus and
-    // this walk — count what is readable rather than crash the sweep
-    val bytes = kept.map { st =>
-      try fs.getContentSummary(st.getPath).getLength
-      catch { case scala.util.control.NonFatal(_) => 0L }
-    }.sum
-    val mode = if (sweep) "" else " (filtered run: sweep skipped)"
-    s"[warehouse] ${kept.length} live artifact dirs, $bytes bytes; retired ${stale.length} stale$mode;" +
-      s" released $released cached histograms"
-  }
-
-  // serializes bucket-table builds: two first callers racing on the same
-  // fingerprint would otherwise interleave delete + saveAsTable
-  private val bucketBuildLock = new Object
-
-  /** Retires every warehouse artifact whose name starts with one of
-    * `prefixes` — shared by q22 and q31 so deletion semantics can't
-    * drift between call sites. Three steps, in q22's original order:
-    * (1) registered sibling tables drop THROUGH the catalog (files +
-    * registration, so nothing this session registered can dangle);
-    * (2) on-disk leftovers no catalog knows (crashed mid-write builds,
-    * dead JVMs) are swept — INCLUDING the current fingerprint's dirs,
-    * which the caller is about to rebuild anyway; (3) the current
-    * tables' own registrations drop if present. Call only from inside a
-    * build-once block under [[bucketBuildLock]].
-    */
-  private def retireWarehouseArtifacts(
-      spark: SparkSession,
-      prefixes: Seq[String],
-      currentTables: Seq[String]
-  ): Unit = {
-    spark.catalog
-      .listTables()
-      .collect()
-      .map(_.name)
-      .filter(n => prefixes.exists(n.startsWith) && !currentTables.contains(n))
-      .foreach(n => spark.sql(s"DROP TABLE IF EXISTS $n"))
-    val warehouse = new org.apache.hadoop.fs.Path(spark.conf.get("spark.sql.warehouse.dir"))
-    val fs = warehouse.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(warehouse)) {
-      fs.listStatus(warehouse)
-        .filter(st => prefixes.exists(st.getPath.getName.startsWith))
-        .foreach(st => fs.delete(st.getPath, true))
-    }
-    currentTables.foreach { t =>
-      if (spark.catalog.tableExists(t)) spark.sql(s"DROP TABLE $t")
-    }
-  }
-
-  /** Build-once guard for fingerprinted warehouse artifacts: if any of
-    * `tables` is missing, retire stale siblings under `prefixes` and run
-    * `build` exactly once under [[bucketBuildLock]] (double-checked so
-    * concurrent first callers don't interleave delete + saveAsTable).
-    * Shared by q22 (bucketed layout), q31 (partitioned layout) and the
-    * incremental-dedup signature index so the build/retire semantics
-    * can't drift between call sites.
-    */
-  /** Completion sentinel for multi-table builds whose tables come into
-    * existence DURING the build (stream-maintained indexes: the first
-    * micro-batch creates the postings table) — the catalog edition of
-    * the layout family's _SUCCESS-written-last discipline. Include the
-    * sentinel in the buildOnce guard list and write it at the END of
-    * the build: a crash mid-drain leaves the sentinel missing, so the
-    * next call retires the partial tables and rebuilds from batch 0
-    * instead of silently serving a half-drained index.
-    */
-  private[graft] def writeDoneSentinel(spark: SparkSession, doneTable: String): Unit =
-    spark.range(1).write.mode("overwrite").format("parquet").saveAsTable(doneTable)
-
-  private[graft] def buildOnce(
-      spark: SparkSession,
-      prefixes: Seq[String],
-      tables: Seq[String]
-  )(build: => Unit): Unit =
-    if (!tables.forall(spark.catalog.tableExists)) bucketBuildLock.synchronized {
-      if (!tables.forall(spark.catalog.tableExists)) {
-        retireWarehouseArtifacts(spark, prefixes, tables)
-        build
-      }
-    }
-
   def q22BucketedJoin(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val fp = sourceFingerprint(spark, s"$dir/orders.parquet", s"$dir/lineitem.parquet")
+    val fp = Warehouse.sourceFingerprint(spark, s"$dir/orders.parquet", s"$dir/lineitem.parquet")
     val ordersT = s"graft_orders_bucketed_$fp"
     val lineitemT = s"graft_lineitem_bucketed_$fp"
     // guard on BOTH tables: a prior attempt that created orders but threw
@@ -942,7 +718,7 @@ object Relational {
     // (a warehouse shared by CONCURRENT JVMs would need a lock around
     // the whole build; this engine's sessions use a per-process
     // warehouse dir)
-    buildOnce(
+    Warehouse.buildOnce(
       spark,
       Seq("graft_orders_bucketed_", "graft_lineitem_bucketed_"),
       Seq(ordersT, lineitemT)
@@ -1070,9 +846,9 @@ object Relational {
     */
   private[graft] def ordersByYearTable(spark: SparkSession, dir: String): String = {
     import spark.implicits._
-    val fp = sourceFingerprint(spark, s"$dir/orders.parquet")
+    val fp = Warehouse.sourceFingerprint(spark, s"$dir/orders.parquet")
     val t = s"graft_orders_byyear_$fp"
-    buildOnce(spark, Seq("graft_orders_byyear_"), Seq(t)) {
+    Warehouse.buildOnce(spark, Seq("graft_orders_byyear_"), Seq(t)) {
       Tables
         .orders(spark, dir)
         .withColumn("o_year", year($"o_orderdate"))
@@ -1153,9 +929,9 @@ object Relational {
     */
   private[graft] def calendarTable(spark: SparkSession, dir: String): String = {
     import spark.implicits._
-    val fp = sourceFingerprint(spark, s"$dir/orders.parquet")
+    val fp = Warehouse.sourceFingerprint(spark, s"$dir/orders.parquet")
     val ct = s"graft_calendar_$fp"
-    buildOnce(spark, Seq("graft_calendar_"), Seq(ct)) {
+    Warehouse.buildOnce(spark, Seq("graft_calendar_"), Seq(ct)) {
       Tables
         .orders(spark, dir)
         .select(year($"o_orderdate").as("cal_year"))

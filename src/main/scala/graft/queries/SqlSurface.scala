@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.Tables
+import graft.{Tables, Warehouse}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The SQL-string surface: the parquet tables registered as temp views
@@ -19,26 +19,18 @@ object SqlSurface {
   /** Registers every TESTDATA table as a session temp view (metadata
     * only — no scan happens here; each view is lazily planned like the
     * Tables readers, with events going through the same NTZ/nanos
-    * normalization).
+    * normalization). The readers come from the Tables memo, so no view
+    * repeats file listing and footer schema inference.
     */
-  // last-registered dir per session (r20): view registration itself
-  // (10 × createOrReplaceTempView) still measured 120 ms/call after the
-  // reader memo removed the schema-inference cost, and every sql_*
-  // query run pays it. The view set for a (session, dir) pair is
-  // deterministic, so re-registering the same dir is a no-op by
-  // construction; a caller switching dirs falls through and overwrites
-  // all ten views atomically under the lock.
-  private val registeredDir =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession, String]()
-    )
+  // the dir each session's views point at: ten createOrReplaceTempView
+  // calls cost ~120 ms even on memoized readers, and every sql_* query
+  // would pay them. The view set for a (session, dir) pair is
+  // deterministic, so re-registering the same dir is skipped; a caller
+  // switching dirs falls through and overwrites all ten views
+  private val registeredDirs = new Warehouse.Memo[Unit, String]()
 
   private[graft] def registerViews(spark: SparkSession, dir: String): Unit = {
-    if (dir == registeredDir.get(spark)) return
-    // readers come from the Tables memo (r20): registration cost was
-    // 625 ms/call when each view re-ran file listing + footer schema
-    // inference (OPTIMIZATION_r20.md, "Changed this session") — paid by
-    // EVERY sql_* query run.
+    if (registeredDirs.get(spark, ()).contains(dir)) return
     val readers: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)] = Seq(
       "region" -> Tables.region,
       "nation" -> Tables.nation,
@@ -52,7 +44,7 @@ object SqlSurface {
     Tables.documents(spark, dir).createOrReplaceTempView("documents")
     Tables.embeddings(spark, dir).createOrReplaceTempView("embeddings")
     Tables.events(spark, dir).createOrReplaceTempView("events")
-    registeredDir.put(spark, dir)
+    registeredDirs.put(spark, (), dir)
     ()
   }
 

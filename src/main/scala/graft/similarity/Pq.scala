@@ -190,9 +190,9 @@ object Pq {
     * QUERY-side lookup table (queries × subspaces × codes dots).
     */
   private[graft] def pqCodebookTable(spark: SparkSession, dir: String): String = {
-    val fp = graft.queries.Relational.sourceFingerprint(spark, s"$dir/embeddings.parquet")
+    val fp = graft.Warehouse.sourceFingerprint(spark, s"$dir/embeddings.parquet")
     val t = s"graft_pq_cents_$fp"
-    graft.queries.Relational.buildOnce(spark, Seq("graft_pq_cents_"), Seq(t)) {
+    graft.Warehouse.buildOnce(spark, Seq("graft_pq_cents_"), Seq(t)) {
       val emb = Tables.embeddingsFanned(spark, dir).select(col("vec_id"), col("embedding"))
       pqCodebook(subvectors(emb))
         .write
@@ -204,9 +204,9 @@ object Pq {
   }
 
   private[graft] def pqCodeTable(spark: SparkSession, dir: String): String = {
-    val fp = graft.queries.Relational.sourceFingerprint(spark, s"$dir/embeddings.parquet")
+    val fp = graft.Warehouse.sourceFingerprint(spark, s"$dir/embeddings.parquet")
     val t = s"graft_pq_codes_$fp"
-    graft.queries.Relational.buildOnce(spark, Seq("graft_pq_codes_"), Seq(t)) {
+    graft.Warehouse.buildOnce(spark, Seq("graft_pq_codes_"), Seq(t)) {
       val emb = Tables.embeddingsFanned(spark, dir).select(col("vec_id"), col("embedding"))
       pqEncode(subvectors(emb), spark.table(pqCodebookTable(spark, dir)))
         .write
@@ -305,11 +305,11 @@ object Pq {
     */
   private[graft] def pqAppendTables(spark: SparkSession, dir: String): (String, String, String) = {
     import spark.implicits._
-    val fp = graft.queries.Relational.sourceFingerprint(spark, s"$dir/embeddings.parquet")
+    val fp = graft.Warehouse.sourceFingerprint(spark, s"$dir/embeddings.parquet")
     val ct = s"graft_pqa_cents_$fp"
     val kt = s"graft_pqa_codes_$fp"
     val vt = s"graft_pqa_vecs_$fp"
-    graft.queries.Relational.buildOnce(
+    graft.Warehouse.buildOnce(
       spark,
       Seq("graft_pqa_cents_", "graft_pqa_codes_", "graft_pqa_vecs_"),
       Seq(ct, kt, vt)
@@ -425,20 +425,20 @@ object Pq {
     */
   private[graft] def pqStreamTables(spark: SparkSession, dir: String): (String, String, String) = {
     import spark.implicits._
-    val fp = graft.queries.Relational.sourceFingerprint(spark, s"$dir/embeddings.parquet")
+    val fp = graft.Warehouse.sourceFingerprint(spark, s"$dir/embeddings.parquet")
     val ct = s"graft_pqs_cents_$fp"
     val kt = s"graft_pqs_codes_$fp"
     val vt = s"graft_pqs_vecs_$fp"
     // codes/vector tables are created by the first micro-batch: guard
-    // on a drain-complete sentinel (Relational.writeDoneSentinel)
+    // on a drain-complete sentinel (Warehouse.writeDoneSentinel)
     val done = s"graft_pqs_done_$fp"
-    graft.queries.Relational.buildOnce(
+    graft.Warehouse.buildOnce(
       spark,
       Seq("graft_pqs_cents_", "graft_pqs_codes_", "graft_pqs_vecs_", "graft_pqs_done_"),
       Seq(ct, kt, vt, done)
     ) {
       val (act, _, _) = pqAppendTables(spark, dir)
-      val frag = graft.queries.Layout.tmpDirOnce("graft_pqsrc_", fp) { path =>
+      val frag = graft.Warehouse.tmpDirOnce("graft_pqsrc_", fp) { path =>
         Tables
           .embeddingsFanned(spark, dir)
           .select($"vec_id", $"embedding")
@@ -453,7 +453,7 @@ object Pq {
         df => pqAppendTick(spark, ct, kt, vt, df)
       }
       lastStreamPq.set((batches, spark.table(kt).count()))
-      graft.queries.Relational.writeDoneSentinel(spark, done)
+      graft.Warehouse.writeDoneSentinel(spark, done)
       ()
     }
     (ct, kt, vt)
@@ -491,10 +491,10 @@ object Pq {
     */
   private[graft] def pqCompactTables(spark: SparkSession, dir: String): (String, String) = {
     import org.apache.spark.sql.functions.broadcast
-    val fp = graft.queries.Relational.sourceFingerprint(spark, s"$dir/embeddings.parquet")
+    val fp = graft.Warehouse.sourceFingerprint(spark, s"$dir/embeddings.parquet")
     val kt = s"graft_pqcmp_codes_$fp"
     val vt = s"graft_pqcmp_vecs_$fp"
-    graft.queries.Relational.buildOnce(
+    graft.Warehouse.buildOnce(
       spark,
       Seq("graft_pqcmp_codes_", "graft_pqcmp_vecs_"),
       Seq(kt, vt)

@@ -325,9 +325,9 @@ object Similarity {
     * artifact bound (≤ IvfMaxCells rows of one vector each).
     */
   private[graft] def ivfIndexTable(spark: SparkSession, dir: String): String = {
-    val fp = graft.queries.Relational.sourceFingerprint(spark, s"$dir/embeddings.parquet")
+    val fp = graft.Warehouse.sourceFingerprint(spark, s"$dir/embeddings.parquet")
     val t = s"graft_ivf_cents_$fp"
-    graft.queries.Relational.buildOnce(spark, Seq("graft_ivf_cents_"), Seq(t)) {
+    graft.Warehouse.buildOnce(spark, Seq("graft_ivf_cents_"), Seq(t)) {
       lloydCentroids(corpusWithNorm(spark, dir))
         .write
         .mode("overwrite")
@@ -347,9 +347,9 @@ object Similarity {
     * bit-for-bit (the sim_ivf_persisted equality argument).
     */
   private[graft] def ivfCellTable(spark: SparkSession, dir: String): String = {
-    val fp = graft.queries.Relational.sourceFingerprint(spark, s"$dir/embeddings.parquet")
+    val fp = graft.Warehouse.sourceFingerprint(spark, s"$dir/embeddings.parquet")
     val t = s"graft_ivf_cells_$fp"
-    graft.queries.Relational.buildOnce(spark, Seq("graft_ivf_cells_"), Seq(t)) {
+    graft.Warehouse.buildOnce(spark, Seq("graft_ivf_cells_"), Seq(t)) {
       assignCells(corpusWithNorm(spark, dir), spark.table(ivfIndexTable(spark, dir)))
         .write
         .mode("overwrite")
@@ -439,10 +439,10 @@ object Similarity {
     */
   private[graft] def ivfAppendTables(spark: SparkSession, dir: String): (String, String) = {
     import spark.implicits._
-    val fp = graft.queries.Relational.sourceFingerprint(spark, s"$dir/embeddings.parquet")
+    val fp = graft.Warehouse.sourceFingerprint(spark, s"$dir/embeddings.parquet")
     val ct = s"graft_ivfapp_cents_$fp"
     val at = s"graft_ivfapp_asg_$fp"
-    graft.queries.Relational.buildOnce(
+    graft.Warehouse.buildOnce(
       spark,
       Seq("graft_ivfapp_cents_", "graft_ivfapp_asg_"),
       Seq(ct, at)
@@ -545,9 +545,9 @@ object Similarity {
     */
   private[graft] def ivfDvTable(spark: SparkSession, dir: String): String = {
     import spark.implicits._
-    val fp = graft.queries.Relational.sourceFingerprint(spark, s"$dir/embeddings.parquet")
+    val fp = graft.Warehouse.sourceFingerprint(spark, s"$dir/embeddings.parquet")
     val t = s"graft_ivfapp_dv_$fp"
-    graft.queries.Relational.buildOnce(spark, Seq("graft_ivfapp_dv_"), Seq(t)) {
+    graft.Warehouse.buildOnce(spark, Seq("graft_ivfapp_dv_"), Seq(t)) {
       corpusWithNorm(spark, dir)
         .filter($"vec_id" % IvfDeleteMod === IvfDeleteRem && $"vec_id" >= NumQueries)
         .select($"vec_id")
@@ -600,11 +600,11 @@ object Similarity {
     */
   private[graft] def ivfStreamDvTable(spark: SparkSession, dir: String): String = {
     import spark.implicits._
-    val fp = graft.queries.Relational.sourceFingerprint(spark, s"$dir/embeddings.parquet")
+    val fp = graft.Warehouse.sourceFingerprint(spark, s"$dir/embeddings.parquet")
     val dvt = s"graft_ivfsd_dv_$fp"
-    graft.queries.Relational.buildOnce(spark, Seq("graft_ivfsd_dv_"), Seq(dvt)) {
+    graft.Warehouse.buildOnce(spark, Seq("graft_ivfsd_dv_"), Seq(dvt)) {
       spark.sql(s"DROP TABLE IF EXISTS $dvt")
-      val frag = graft.queries.Layout.tmpDirOnce("graft_ivfsdq_", fp) { path =>
+      val frag = graft.Warehouse.tmpDirOnce("graft_ivfsdq_", fp) { path =>
         corpusWithNorm(spark, dir)
           .filter($"vec_id" % IvfDeleteMod === IvfDeleteRem && $"vec_id" >= NumQueries)
           .select($"vec_id")
@@ -791,21 +791,21 @@ object Similarity {
     */
   private[graft] def ivfStreamTables(spark: SparkSession, dir: String): (String, String) = {
     import spark.implicits._
-    val fp = graft.queries.Relational.sourceFingerprint(spark, s"$dir/embeddings.parquet")
+    val fp = graft.Warehouse.sourceFingerprint(spark, s"$dir/embeddings.parquet")
     val ct = s"graft_ivfs_cents_$fp"
     val at = s"graft_ivfs_asg_$fp"
     // the postings table is CREATED by the first micro-batch, so the
     // guard includes a completion sentinel written after the drain — a
     // crash mid-drain must not leave a half-index that satisfies
-    // build-once (see Relational.writeDoneSentinel)
+    // build-once (see Warehouse.writeDoneSentinel)
     val done = s"graft_ivfs_done_$fp"
-    graft.queries.Relational.buildOnce(
+    graft.Warehouse.buildOnce(
       spark,
       Seq("graft_ivfs_cents_", "graft_ivfs_asg_", "graft_ivfs_done_"),
       Seq(ct, at, done)
     ) {
       val (act, _) = ivfAppendTables(spark, dir)
-      val frag = graft.queries.Layout.tmpDirOnce("graft_ivfsrc_", fp) { path =>
+      val frag = graft.Warehouse.tmpDirOnce("graft_ivfsrc_", fp) { path =>
         corpusWithNorm(spark, dir).repartition(6).write.mode("overwrite").parquet(path)
       }
       Seq(ct, at).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
@@ -814,7 +814,7 @@ object Similarity {
         df => ivfAppendTick(spark, ct, at, df)
       }
       lastStreamIvf.set((batches, spark.table(at).count()))
-      graft.queries.Relational.writeDoneSentinel(spark, done)
+      graft.Warehouse.writeDoneSentinel(spark, done)
       ()
     }
     (ct, at)
@@ -850,9 +850,9 @@ object Similarity {
     */
   private[graft] def ivfCompactTable(spark: SparkSession, dir: String): String = {
     import spark.implicits._
-    val fp = graft.queries.Relational.sourceFingerprint(spark, s"$dir/embeddings.parquet")
+    val fp = graft.Warehouse.sourceFingerprint(spark, s"$dir/embeddings.parquet")
     val t = s"graft_ivfcmp_asg_$fp"
-    graft.queries.Relational.buildOnce(spark, Seq("graft_ivfcmp_asg_"), Seq(t)) {
+    graft.Warehouse.buildOnce(spark, Seq("graft_ivfcmp_asg_"), Seq(t)) {
       val (_, _, postings) = ivfAppendServeParts(spark, dir)
       postings
         .join(broadcast(spark.table(ivfDvTable(spark, dir))), Seq("vec_id"), "left_anti")
@@ -902,10 +902,10 @@ object Similarity {
     */
   private[graft] def ivfRetrainTables(spark: SparkSession, dir: String): (String, String) = {
     import spark.implicits._
-    val fp = graft.queries.Relational.sourceFingerprint(spark, s"$dir/embeddings.parquet")
+    val fp = graft.Warehouse.sourceFingerprint(spark, s"$dir/embeddings.parquet")
     val ct = s"graft_ivfrt_cents_$fp"
     val at = s"graft_ivfrt_asg_$fp"
-    graft.queries.Relational.buildOnce(
+    graft.Warehouse.buildOnce(
       spark,
       Seq("graft_ivfrt_cents_", "graft_ivfrt_asg_"),
       Seq(ct, at)
@@ -1242,10 +1242,9 @@ object Similarity {
   // minhash signature index, the cluster-assignment fixpoint, and the
   // Lloyd quantizer, it is persisted per (session, dir, content
   // fingerprint): sim_knn_graph and graph_triangles share one
-  // materialization instead of re-running LSH + re-rank each. Stopped
-  // sessions are evicted so strong references can't pin dead contexts.
-  private val knnCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
+  // materialization instead of re-running LSH + re-rank each. A
+  // regenerated source supersedes the entry and unpersists its blocks.
+  private val knnGraphs = new graft.Warehouse.Memo[(String, String), DataFrame](free = _.unpersist())
 
   /** k-NN graph over the WHOLE corpus — the input to graph-based semantic
     * dedup (SemDeDup-style clustering) and retrieval index builds: per
@@ -1262,35 +1261,8 @@ object Similarity {
     * lists ever outgrow a window partition.
     */
   def knnGraph(spark: SparkSession, dir: String): DataFrame = {
-    knnCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    val fp = graft.queries.Relational.sourceFingerprint(spark, s"$dir/embeddings.parquet")
-    val key = (spark, dir, fp)
-    // evict superseded fingerprints for this (spark, dir): if the source
-    // under dir is regenerated mid-session, the stale entry would
-    // otherwise pin its persisted blocks for the session's lifetime
-    val it = knnCache.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if ((e.getKey._1 eq spark) && e.getKey._2 == dir && e.getKey._3 != fp) {
-        e.getValue.unpersist()
-        it.remove()
-      }
-    }
-    // build OUTSIDE the map (multi-job Spark work, same discipline as
-    // Dedup.clusterLabels)
-    val cached = knnCache.get(key)
-    if (cached != null) cached
-    else {
-      val built = knnGraphUncached(spark, dir).persist()
-      Option(knnCache.putIfAbsent(key, built)) match {
-        // the loser must NOT unpersist: CacheManager keys entries by
-        // canonicalized plan and both racers' plans are identical, so
-        // unpersisting the duplicate would evict the winner's cache too.
-        // persist() is idempotent per plan — dropping the handle is free.
-        case Some(winner) => winner
-        case None         => built
-      }
-    }
+    val fp = graft.Warehouse.sourceFingerprint(spark, s"$dir/embeddings.parquet")
+    knnGraphs(spark, (dir, fp), k => k._1 == dir && k._2 != fp)(knnGraphUncached(spark, dir).persist())
   }
 
   private[graft] def knnGraphUncached(spark: SparkSession, dir: String): DataFrame = {

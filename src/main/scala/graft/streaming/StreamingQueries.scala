@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.Tables
+import graft.{Tables, Warehouse}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -69,14 +69,8 @@ object StreamingQueries {
   // schema-inference memo: the batch-side schema probe that seeds
   // readStream lists files and reads a footer on the driver, and the
   // stream-stream joins would pay it twice per query run. Pure metadata,
-  // same immutable-fixture contract as the Tables reader memo; entries
-  // for stopped sessions are purged on access. Timings:
-  // OPTIMIZATION_r20.md, "Changed this session".
-  private val streamSchemas =
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String, String),
-      org.apache.spark.sql.types.StructType
-    ]()
+  // under the same immutable-fixture contract as the Tables reader memo
+  private val streamSchemas = new Warehouse.Memo[(String, String), org.apache.spark.sql.types.StructType]()
 
   private def eventStream(
       spark: SparkSession,
@@ -84,11 +78,8 @@ object StreamingQueries {
       glob: String = "events.parquet" // source dirs hold one file per table
   ): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    streamSchemas.keySet.removeIf(_._1.sparkContext.isStopped)
-    val schema = streamSchemas.computeIfAbsent(
-      (spark, dir, glob),
-      _ => spark.read.option("pathGlobFilter", glob).parquet(dir).schema
-    )
+    val schema =
+      streamSchemas(spark, (dir, glob))(spark.read.option("pathGlobFilter", glob).parquet(dir).schema)
     graft.Tables.normalizeEventTs(
       spark.readStream
         .schema(schema)
@@ -99,8 +90,7 @@ object StreamingQueries {
 
   // one stream session per root session (sessions are cheap but carry a
   // catalog; no need for one per query)
-  private val streamSessions =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, SparkSession]()
+  private val streamSessions = new Warehouse.Memo[Unit, SparkSession]()
 
   /** The session every memory-sink stream runs in: `newSession` of the
     * caller's (shared SparkContext, own SQLConf), so the settings below
@@ -117,29 +107,21 @@ object StreamingQueries {
     *     recompiles every generated class. Safe here: this session is
     *     graft-internal and never given an artifact.
     */
-  private def streamSession(root: SparkSession): SparkSession = {
-    // evict entries whose root context is stopped — the map holds strong
-    // references, so a host that churns sessions (fresh session per test
-    // suite) would otherwise pin every stopped session for the JVM's life
-    streamSessions.keySet.removeIf(k => k.sparkContext.isStopped)
-    streamSessions.computeIfAbsent(
-      root,
-      { r =>
-        val s = r.newSession()
-        s.conf.set("spark.sql.artifact.isolation.enabled", "false")
-        s.conf.set("spark.sql.shuffle.partitions", math.min(8, r.sparkContext.defaultParallelism).toString)
-        // runtime-set read options the transplanted plans rely on
-        // (newSession starts from builder defaults, not runtime conf)
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        s
-      }
-    )
-  }
+  private def streamSession(root: SparkSession): SparkSession =
+    streamSessions(root, ()) {
+      val s = root.newSession()
+      s.conf.set("spark.sql.artifact.isolation.enabled", "false")
+      s.conf.set("spark.sql.shuffle.partitions", math.min(8, root.sparkContext.defaultParallelism).toString)
+      // runtime-set read options the transplanted plans rely on
+      // (newSession starts from builder defaults, not runtime conf)
+      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      s
+    }
 
-  // last memory-sink view per query family — dropped when the family
-  // runs again, so repeated Verify/Bench invocations don't accumulate
-  // drained results in driver memory
-  private val lastView = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  // last memory-sink view per (stream session, query family) — dropped
+  // when the family runs again in that session, so repeated Verify/Bench
+  // invocations don't accumulate drained results in driver memory
+  private val lastViews = new Warehouse.Memo[String, String]()
 
   /** Drives a streaming query to completion against the memory sink,
     * in the stream session.
@@ -147,7 +129,7 @@ object StreamingQueries {
   private def runToMemory(df: DataFrame, base: String, mode: String): DataFrame = {
     val scoped = streamSession(df.sparkSession)
     val name = s"${base}_${System.nanoTime()}"
-    Option(lastView.put(base, name)).foreach(scoped.catalog.dropTempView(_))
+    lastViews.put(scoped, base, name).foreach(scoped.catalog.dropTempView(_))
     // re-root the plan in the scoped session; the memory-sink view and
     // the returned result live there too (callers only project/sort it)
     val sdf = org.apache.spark.sql.graft.Bridge.ofRows(scoped, df.queryExecution.logical)

@@ -711,10 +711,10 @@ object TextAnalysis {
     */
   private[graft] def bm25IndexTables(spark: SparkSession, dir: String): (String, String) = {
     import spark.implicits._
-    val fp = graft.queries.Relational.sourceFingerprint(spark, s"$dir/documents.parquet")
+    val fp = graft.Warehouse.sourceFingerprint(spark, s"$dir/documents.parquet")
     val bt = s"graft_bm25_post_$fp"
     val st = s"graft_bm25_stats_$fp"
-    graft.queries.Relational.buildOnce(
+    graft.Warehouse.buildOnce(
       spark,
       Seq("graft_bm25_post_", "graft_bm25_stats_"),
       Seq(bt, st)
@@ -784,18 +784,18 @@ object TextAnalysis {
     */
   private[graft] def bm25StreamTables(spark: SparkSession, dir: String): (String, String) = {
     import spark.implicits._
-    val fp = graft.queries.Relational.sourceFingerprint(spark, s"$dir/documents.parquet")
+    val fp = graft.Warehouse.sourceFingerprint(spark, s"$dir/documents.parquet")
     val bt = s"graft_bm25s_post_$fp"
     val st = s"graft_bm25s_stats_$fp"
     // both tables are created by the first micro-batch: guard on a
-    // drain-complete sentinel (Relational.writeDoneSentinel)
+    // drain-complete sentinel (Warehouse.writeDoneSentinel)
     val done = s"graft_bm25s_done_$fp"
-    graft.queries.Relational.buildOnce(
+    graft.Warehouse.buildOnce(
       spark,
       Seq("graft_bm25s_post_", "graft_bm25s_stats_", "graft_bm25s_done_"),
       Seq(bt, st, done)
     ) {
-      val frag = graft.queries.Layout.tmpDirOnce("graft_bm25src_", fp) { path =>
+      val frag = graft.Warehouse.tmpDirOnce("graft_bm25src_", fp) { path =>
         Tables.documents(spark, dir).repartition(6).write.mode("overwrite").parquet(path)
       }
       // the tables live in the per-JVM warehouse while /tmp survives
@@ -810,7 +810,7 @@ object TextAnalysis {
         df => bm25AppendTick(spark, bt, st, df)
       }
       lastStreamBm25.set((batches, spark.table(st).count()))
-      graft.queries.Relational.writeDoneSentinel(spark, done)
+      graft.Warehouse.writeDoneSentinel(spark, done)
       ()
     }
     (bt, st)
@@ -879,11 +879,11 @@ object TextAnalysis {
     */
   private[graft] def bm25DeleteTables(spark: SparkSession, dir: String): (String, String, String) = {
     import spark.implicits._
-    val fp = graft.queries.Relational.sourceFingerprint(spark, s"$dir/documents.parquet")
+    val fp = graft.Warehouse.sourceFingerprint(spark, s"$dir/documents.parquet")
     val bt = s"graft_bm25d_post_$fp"
     val st = s"graft_bm25d_stats_$fp"
     val dvt = s"graft_bm25d_dv_$fp"
-    graft.queries.Relational.buildOnce(
+    graft.Warehouse.buildOnce(
       spark,
       Seq("graft_bm25d_post_", "graft_bm25d_stats_", "graft_bm25d_dv_"),
       Seq(bt, st, dvt)
@@ -939,7 +939,7 @@ object TextAnalysis {
     */
   private[graft] def bm25StreamDeleteTables(spark: SparkSession, dir: String): (String, String, String) = {
     import spark.implicits._
-    val fp = graft.queries.Relational.sourceFingerprint(spark, s"$dir/documents.parquet")
+    val fp = graft.Warehouse.sourceFingerprint(spark, s"$dir/documents.parquet")
     val bt = s"graft_bm25sd_post_$fp"
     val st = s"graft_bm25sd_stats_$fp"
     val dvt = s"graft_bm25sd_dv_$fp"
@@ -947,7 +947,7 @@ object TextAnalysis {
     // drain: guard on a drain-complete sentinel so a mid-drain crash
     // can't leave a partial retraction that satisfies build-once
     val done = s"graft_bm25sd_done_$fp"
-    graft.queries.Relational.buildOnce(
+    graft.Warehouse.buildOnce(
       spark,
       Seq("graft_bm25sd_post_", "graft_bm25sd_stats_", "graft_bm25sd_dv_", "graft_bm25sd_done_"),
       Seq(bt, st, dvt, done)
@@ -956,7 +956,7 @@ object TextAnalysis {
       Seq(bt, st, dvt).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
       spark.table(abt).write.mode("overwrite").format("parquet").saveAsTable(bt)
       spark.table(ast).write.mode("overwrite").format("parquet").saveAsTable(st)
-      val frag = graft.queries.Layout.tmpDirOnce("graft_bm25delsrc_", fp) { path =>
+      val frag = graft.Warehouse.tmpDirOnce("graft_bm25delsrc_", fp) { path =>
         spark
           .table(bt)
           .filter($"doc_id" % Bm25DeleteMod === Bm25DeleteRem)
@@ -973,7 +973,7 @@ object TextAnalysis {
       lastStreamBm25Del.set(
         (batches, spark.table(st).filter($"n_docs" < 0).count())
       )
-      graft.queries.Relational.writeDoneSentinel(spark, done)
+      graft.Warehouse.writeDoneSentinel(spark, done)
       ()
     }
     (bt, st, dvt)
@@ -1012,10 +1012,10 @@ object TextAnalysis {
     */
   private[graft] def bm25CompactTables(spark: SparkSession, dir: String): (String, String) = {
     import spark.implicits._
-    val fp = graft.queries.Relational.sourceFingerprint(spark, s"$dir/documents.parquet")
+    val fp = graft.Warehouse.sourceFingerprint(spark, s"$dir/documents.parquet")
     val bt = s"graft_bm25c_post_$fp"
     val st = s"graft_bm25c_stats_$fp"
-    graft.queries.Relational.buildOnce(
+    graft.Warehouse.buildOnce(
       spark,
       Seq("graft_bm25c_post_", "graft_bm25c_stats_"),
       Seq(bt, st)

@@ -61,6 +61,10 @@ class MemoSpec extends AnyFunSuite {
     spark.range(4).coalesce(1).write.mode("overwrite").parquet(s"$dir/art2")
     assert(Tables.artifactParquet(spark, path, s"$dir/art2").count() === 5L)
     spark.stop()
+    assert(Warehouse.heldBy(spark) > 0)
+    // the next access of any memo drops the stopped session's entries
+    Tables.lineitem(GraftSession.local(4, "memo-spec-next"), sf)
+    assert(Warehouse.heldBy(spark) === 0, "the store still holds entries of a stopped session")
   }
 
   test("listing fingerprint of a multi-file, nested artifact dir equals the listFiles walk's") {
@@ -88,7 +92,7 @@ class MemoSpec extends AnyFunSuite {
     }
     val leaf = new java.io.File(s"$path/k=1").listFiles.filter(_.getName.startsWith("part-")).head.getPath
     for (paths <- Seq(Seq(path), Seq(path, s"$dir/other"), Seq(leaf)); bytes <- Seq(6, 8))
-      assert(Tables.listingFp(spark, paths, bytes) === listFilesFp(paths, bytes), s"$paths / $bytes")
-    assert(queries.Relational.sourceFingerprint(spark, path) === listFilesFp(Seq(path), 6))
+      assert(Warehouse.listingFp(spark, paths, bytes) === listFilesFp(paths, bytes), s"$paths / $bytes")
+    assert(Warehouse.sourceFingerprint(spark, path) === listFilesFp(Seq(path), 6))
   }
 }

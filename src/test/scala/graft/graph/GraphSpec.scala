@@ -98,12 +98,8 @@ class GraphSpec extends AnyFunSuite {
         .filter(p => p._1 != p._2)
       Triangles.trianglesOnEdges(pairs.toDF("src_id", "dst_id")).collect()
     }
-    Triangles.oeCache.synchronized {
-      assert(
-        Triangles.oeCache.size() <= Triangles.MaxCachedEdgeSets,
-        s"registry grew past its bound: ${Triangles.oeCache.size()}"
-      )
-    }
+    val held = Triangles.orientedEdges.size
+    assert(held <= Triangles.MaxCachedEdgeSets, s"registry grew past its bound: $held")
     // persisted blocks track the registry, not the call count: cached
     // RDD count must stay well below the number of distinct inputs
     val cachedNow = spark.sparkContext.getPersistentRDDs.size

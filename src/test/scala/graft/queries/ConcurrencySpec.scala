@@ -91,7 +91,7 @@ class ConcurrencySpec extends AnyFunSuite {
         () => { assert(sortedRows(graft.text.TextAnalysis.bm25StreamServe(spark, freshDir)) === reference); () }
       ) ++
         Seq[() => Unit](() => { Relational.q22BucketedJoin(spark, dir).collect(); () }) ++
-        (1 to 3).map[() => Unit](_ => () => { (1 to 3).foreach(_ => Relational.warehouseHygiene(spark, sweep = true)); () })
+        (1 to 3).map[() => Unit](_ => () => { (1 to 3).foreach(_ => graft.Warehouse.warehouseHygiene(spark, sweep = true)); () })
     inParallel(tasks)
     assert(!stale.exists(), "stale unclaimed artifact must be retired by the concurrent sweep")
     assert(fresh.exists(), "fresh unclaimed artifact must survive the minAge floor")
@@ -116,7 +116,7 @@ class ConcurrencySpec extends AnyFunSuite {
     }
     inParallel(tasks)
     // session-end release drains at most the cap — the registry stayed bounded
-    val released = Relational.releaseHistograms(spark)
+    val released = Relational.histograms.release(spark)
     assert(released <= 8, s"registry exceeded its cap: $released entries live at session end")
   }
 }

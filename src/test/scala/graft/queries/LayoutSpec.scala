@@ -115,7 +115,7 @@ class LayoutSpec extends AnyFunSuite {
       new java.io.File(p).listFiles().count(_.getName.endsWith(".parquet"))
     assert(parquetFiles(frag) === Layout.FragFiles)
     val got = Layout.compactScan(spark, dir).collect().map(_.toSeq).toSeq
-    val fp = Relational.sourceFingerprint(spark, s"$dir/documents.parquet")
+    val fp = graft.Warehouse.sourceFingerprint(spark, s"$dir/documents.parquet")
     val compacted = s"${System.getProperty("java.io.tmpdir")}/graft_compact_$fp"
     assert(parquetFiles(compacted) === Layout.CompactTarget)
     // the compaction read+coalesce plans WITHOUT a shuffle exchange
@@ -547,7 +547,7 @@ class LayoutSpec extends AnyFunSuite {
     val dst = new java.io.File(s"$vdir/lineitem.parquet")
     if (src.isDirectory) org.apache.commons.io.FileUtils.copyDirectory(src, dst)
     else org.apache.commons.io.FileUtils.copyFile(src, dst)
-    val fp = Relational.sourceFingerprint(spark, s"$vdir/lineitem.parquet")
+    val fp = graft.Warehouse.sourceFingerprint(spark, s"$vdir/lineitem.parquet")
 
     // tick 0 lands FIRST, under spec A (year); snapshot its bytes
     val seg0 = Layout.specEvoTick(spark, vdir, fp, 0)

@@ -37,19 +37,19 @@ class WarehouseHygieneSpec extends AnyFunSuite {
     )
     warehouse.mkdirs()
     // register a live fingerprint in this session (any real source file)
-    val liveFp = Relational.sourceFingerprint(spark, "/root/testdata/sf0.001/region.parquet")
+    val liveFp = graft.Warehouse.sourceFingerprint(spark, "/root/testdata/sf0.001/region.parquet")
     val live = mkArtifact(warehouse, s"graft_hyg_live_$liveFp", old = true)
     val staleOld = mkArtifact(warehouse, "graft_hyg_stale_deadbeef0001", old = true)
     val staleYoung = mkArtifact(warehouse, "graft_hyg_stale_deadbeef0002", old = false)
 
     // filtered run: ledger only, nothing retired regardless of age
-    val filtered = Relational.warehouseHygiene(spark, sweep = false)
+    val filtered = graft.Warehouse.warehouseHygiene(spark, sweep = false)
     assert(filtered.contains("retired 0 stale"), s"filtered run must not sweep: $filtered")
     assert(live.exists() && staleOld.exists() && staleYoung.exists())
 
     // full run: the old dead dir goes, the live dir (older still) and
     // the young dead dir (concurrent-JVM guard) both survive
-    val swept = Relational.warehouseHygiene(spark)
+    val swept = graft.Warehouse.warehouseHygiene(spark)
     assert(!staleOld.exists(), s"old stale dir must be retired: $swept")
     assert(live.exists(), "live-fingerprint dir must survive at any age")
     assert(staleYoung.exists(), "young dir must survive (cross-JVM in-flight build guard)")
@@ -58,7 +58,7 @@ class WarehouseHygieneSpec extends AnyFunSuite {
     assert(retired.exists(_ >= 1), s"expected a non-zero retired count: $swept")
 
     // age floor of zero retires the young dead dir too; live still survives
-    val sweptAll = Relational.warehouseHygiene(spark, sweep = true, minAgeMs = 0L)
+    val sweptAll = graft.Warehouse.warehouseHygiene(spark, sweep = true, minAgeMs = 0L)
     assert(!staleYoung.exists(), s"minAgeMs=0 must retire young dead dirs: $sweptAll")
     assert(live.exists(), "live-fingerprint dir must survive any sweep")
     live.listFiles().foreach(_.delete()); live.delete()
@@ -83,7 +83,7 @@ class WarehouseHygieneSpec extends AnyFunSuite {
     // age the intermediate dirs too — only the leaf write is fresh
     deep.setLastModified(System.currentTimeMillis() - 2L * 60 * 60 * 1000)
 
-    val swept = Relational.warehouseHygiene(spark)
+    val swept = graft.Warehouse.warehouseHygiene(spark)
     assert(
       inflight.exists() && freshPart.exists(),
       s"an in-flight build with a fresh newest-write must survive the sweep: $swept"
@@ -95,7 +95,7 @@ class WarehouseHygieneSpec extends AnyFunSuite {
       Option(f.listFiles()).foreach(_.foreach(ageAll))
     }
     ageAll(inflight)
-    val swept2 = Relational.warehouseHygiene(spark)
+    val swept2 = graft.Warehouse.warehouseHygiene(spark)
     assert(!inflight.exists(), s"a dead build past the floor must still be retired: $swept2")
   }
 }

@@ -13,7 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *     catalog table written once AFTER a complete drain — so table
   *     existence IS the completion marker, and a pre-existing partial
   *     table is simply overwritten by the next complete drain;
-  *   - the drain-complete sentinel (`Relational.writeDoneSentinel`):
+  *   - the drain-complete sentinel (`Warehouse.writeDoneSentinel`):
   *     builders whose tables accrete DURING the drain guard on a
   *     sentinel written last, so deleting any piece (sentinel included)
   *     forces a full retire-and-rebuild.
