@@ -13,21 +13,26 @@ object Tables {
     * per call (file listing, footer schema inference, source
     * resolution), and every query builder constructs its readers fresh,
     * so each execution would repay it once per table. This returns the
-    * one already-constructed DataFrame per (session, path), as a catalog
-    * does for a registered table. It caches NO data and NO results: the
-    * value is an unexecuted logical plan, and every execution still scans
-    * the parquet files. Fixture paths are immutable for a JVM's lifetime.
+    * one already-constructed DataFrame per (session, path, listing), as
+    * a catalog does for a registered table. It caches NO data and NO
+    * results: the value is an unexecuted logical plan, and every
+    * execution still scans the parquet files. The key carries the path's
+    * listing fingerprint (one `listStatus` of a single-file fixture), so
+    * a regenerated or appended source gets a fresh reader that lists the
+    * new files, and the new reader supersedes the old one.
     */
-  private val readers = new Warehouse.Memo[String, DataFrame]()
+  private val readers = new Warehouse.Memo[(String, String), DataFrame]()
 
-  private def pq(spark: SparkSession, path: String): DataFrame =
-    readers(spark, path)(spark.read.parquet(path))
+  private def pq(spark: SparkSession, path: String): DataFrame = {
+    val fp = Warehouse.listingFp(spark, Seq(path), 8)
+    readers(spark, (path, fp), k => k._1 == path && k._2 != fp)(spark.read.parquet(path))
+  }
 
   /** Self-validating reader memo for warehouse artifacts read by path.
-    * Unlike the fixtures above, artifact dirs MUTATE within a session
-    * (compaction and vacuum rewrite or delete files), so the key carries
-    * the listing fingerprint of the dirs: about 1–3 ms on a local FS, two
-    * orders of magnitude below the ~55–60 ms inference it saves. Any
+    * Artifact dirs MUTATE within a session (compaction and vacuum
+    * rewrite or delete files), so the key carries the listing
+    * fingerprint of the dirs: about 1–3 ms on a local FS, two orders of
+    * magnitude below the ~55–60 ms inference it saves. Any
     * mutation yields a new key and a fresh reader (Spark part-file names
     * carry a per-job UUID, so even a byte-identical rewrite renames its
     * files); no write-side invalidation hook is needed. Same

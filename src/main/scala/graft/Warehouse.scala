@@ -214,9 +214,8 @@ object Warehouse {
     * runs `build` exactly once under [[tmpBuildLock]] (double-checked on
     * the _SUCCESS marker). A dir present WITHOUT the marker is a crashed
     * partial build and is deleted before the retry: leftover state must
-    * not leak into the rebuild — in particular a streaming build's `_chk`
-    * checkpoint would make the retry resume past its already-committed
-    * batches and silently drop their rows.
+    * not leak into the rebuild (a crashed stream build's batch dirs
+    * would sit beside the retry's own).
     */
   private[graft] def tmpDirOnce(prefix: String, fp: String)(build: String => Unit): String = {
     val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))

@@ -2,6 +2,7 @@ package graft.dedup
 
 import graft.Tables
 import graft.functions.Portable._
+import graft.streaming.StreamDrain
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -594,17 +595,6 @@ object Dedup {
 
   val NewBatchMod = 5 // incremental split: doc_id % NewBatchMod == 0 is the new batch
 
-  /** Builds (once per corpus fingerprint) the PERSISTED dedup index the
-    * incremental path joins against: one row per EXISTING-corpus
-    * document with its exact-dup md5 and its 32-long minhash signature.
-    * This is the production artifact — written at corpus build time,
-    * appended per accepted ingest — so incremental dedup never touches
-    * corpus text except to verify candidates. Reuses q22's fingerprinted
-    * build-once machinery (stale fingerprints are retired, concurrent
-    * first callers serialize); the one corpus-wide signature pass it
-    * costs is shared with every other dedup query via the session-cached
-    * [[minhashSignatures]].
-    */
   /** Companion BANDED table of a signature index — the (doc_id, band,
     * bv) rows [[bandedSignatures]] derives from the stored signatures,
     * persisted WITH the index (a stored LSH index IS its buckets —
@@ -627,6 +617,17 @@ object Dedup {
       .replace("graft_dedup_index_", "graft_dedup_bands_")
       .replace("graft_dedup_cidx_", "graft_dedup_cbands_")
 
+  /** Builds (once per corpus fingerprint) the PERSISTED dedup index the
+    * incremental path joins against: one row per EXISTING-corpus
+    * document with its exact-dup md5 and its 32-long minhash signature.
+    * This is the production artifact — written at corpus build time,
+    * appended per accepted ingest — so incremental dedup never touches
+    * corpus text except to verify candidates. Reuses q22's fingerprinted
+    * build-once machinery (stale fingerprints are retired, concurrent
+    * first callers serialize); the one corpus-wide signature pass it
+    * costs is shared with every other dedup query via the session-cached
+    * [[minhashSignatures]].
+    */
   private[graft] def incrementalIndexTable(spark: SparkSession, dir: String): String = {
     import spark.implicits._
     val fp = graft.Warehouse.sourceFingerprint(spark, s"$dir/documents.parquet")
@@ -1006,21 +1007,13 @@ object Dedup {
     val fp = graft.Warehouse.sourceFingerprint(spark, s"$dir/documents.parquet")
     val dvt = s"graft_dedupsd_dv_$fp"
     graft.Warehouse.buildOnce(spark, Seq("graft_dedupsd_dv_"), Seq(dvt)) {
-      spark.sql(s"DROP TABLE IF EXISTS $dvt")
-      val frag = graft.Warehouse.tmpDirOnce("graft_dedupsdq_", fp) { path =>
+      val frag = StreamDrain.queue("graft_dedupsdq_", fp) {
         Tables
           .documents(spark, dir)
           .filter($"doc_id" % NewBatchMod =!= 0 && $"doc_id" % IndexDeleteMod === IndexDeleteRem)
           .select($"doc_id")
-          .repartition(6)
-          .write
-          .mode("overwrite")
-          .parquet(path)
       }
-      // crash-safe drain: per-batch staged slices, table committed only
-      // after a complete drain (see StreamDrain scaladoc — a partial
-      // first-batch-created table must never satisfy build-once)
-      val batches = graft.streaming.StreamDrain.drainToTable(spark, frag, dvt)
+      val batches = StreamDrain.drainToTable(spark, frag, dvt)
       lastStreamDedupDel.set((batches, spark.table(dvt).count()))
       ()
     }

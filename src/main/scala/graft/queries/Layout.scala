@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{Tables, Warehouse}
+import graft.streaming.StreamDrain
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -59,12 +60,12 @@ object Layout {
     * with source bytes past floor×256 MB. Without this the fifth-decade
     * MoR build funnels 600M rows into [[MorFiles]]=8 range-sort tasks —
     * 75M-row external sorts, the ~60 GB spill that kept the sf100 probe
-    * off the disk budget (VERDICT r19 #3); with it, per-task sort state
+    * off the disk budget; with it, per-task sort state
     * is bounded by the byte target at ANY corpus size, which is the
     * property that holds on a 1000-executor cluster too (file count
     * grows with data; task state does not). Bytes come from one
     * filesystem ContentSummary call — no data scan, no double-exec of
-    * the child plan.
+    * the child plan. Numbers: OPTIMIZATION_r20.md, "Inherited state".
     */
   private def scaledRangeFiles(spark: SparkSession, floor: Int, sourcePath: String): Int = {
     val bytes =
@@ -356,8 +357,6 @@ object Layout {
 
   // ---- streaming ingest into the incremental layout --------------------
 
-  val StreamIngestFragFiles = 6 // arriving "upstream" files
-  val StreamIngestFilesPerTrigger = 2 // → 3 micro-batches
   val StreamIngestTickFiles = 2 // z-clustered files per committed tick
 
   /** Spec ledger: (non-empty micro-batches, manifest segments
@@ -381,52 +380,40 @@ object Layout {
   private[graft] def streamIngestRoot(spark: SparkSession, dir: String): String = {
     import spark.implicits._
     val fp = Warehouse.sourceFingerprint(spark, s"$dir/lineitem.parquet")
-    val frag = Warehouse.tmpDirOnce("graft_slsrc_", fp) { path =>
-      Tables.lineitem(spark, dir).repartition(StreamIngestFragFiles).write.mode("overwrite").parquet(path)
-    }
+    val frag = lineitemQueue(spark, dir, fp)
     Warehouse.tmpDirOnce("graft_sling_", fp) { root =>
       new java.io.File(root).mkdirs()
-      val schema = Tables.artifactParquet(spark, frag).schema
-      val stream = spark.readStream
-        .schema(schema)
-        .option("maxFilesPerTrigger", StreamIngestFilesPerTrigger)
-        .parquet(frag)
-      val batches = new java.util.concurrent.atomic.AtomicInteger
-      val segments = new java.util.concurrent.atomic.AtomicInteger
-      val q = stream.writeStream
-        .foreachBatch { (df: DataFrame, id: java.lang.Long) =>
-          if (!df.isEmpty) {
-            batches.incrementAndGet()
-            val dataPath = s"$root/data_$id"
-            df.withColumn("z", zValue($"l_partkey".cast("int"), $"l_suppkey".cast("int")))
-              .repartitionByRange(StreamIngestTickFiles, $"z")
-              .sortWithinPartitions($"z")
-              .drop("z")
-              .write
-              .mode("overwrite")
-              .parquet(dataPath)
-            Tables.artifactParquet(spark, dataPath)
-              .groupBy(input_file_name().as("file"))
-              .agg(
-                min($"l_partkey").as("pmin"), max($"l_partkey").as("pmax"),
-                min($"l_suppkey").as("smin"), max($"l_suppkey").as("smax")
-              )
-              .write
-              .mode("overwrite")
-              .parquet(s"$root/man_$id")
-            segments.incrementAndGet()
-          }
-          ()
-        }
-        .option("checkpointLocation", s"$root/_chk")
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-      lastStreamIngest.set((batches.get, segments.get))
+      val batches = StreamDrain.drainTicks(spark, frag) { (df, id) =>
+        val dataPath = s"$root/data_$id"
+        df.withColumn("z", zValue($"l_partkey".cast("int"), $"l_suppkey".cast("int")))
+          .repartitionByRange(StreamIngestTickFiles, $"z")
+          .sortWithinPartitions($"z")
+          .drop("z")
+          .write
+          .mode("overwrite")
+          .parquet(dataPath)
+        Tables.artifactParquet(spark, dataPath)
+          .groupBy(input_file_name().as("file"))
+          .agg(
+            min($"l_partkey").as("pmin"), max($"l_partkey").as("pmax"),
+            min($"l_suppkey").as("smin"), max($"l_suppkey").as("smax")
+          )
+          .write
+          .mode("overwrite")
+          .parquet(s"$root/man_$id")
+      }
+      val segments = new java.io.File(root).list().count(_.startsWith("man_"))
+      lastStreamIngest.set((batches, segments))
       new java.io.File(root, "_SUCCESS").createNewFile()
       ()
     }
   }
+
+  /** The upstream queue both [[streamIngestRoot]] and [[streamMvRoot]]
+    * drain: the lineitem table as arriving files.
+    */
+  private def lineitemQueue(spark: SparkSession, dir: String, fp: String): String =
+    StreamDrain.queue("graft_slsrc_", fp)(Tables.lineitem(spark, dir))
 
   /** Registered query `stream_layout_ingest`: the manifest-pruned box
     * scan over the STREAM-committed layout — identical result contract
@@ -488,54 +475,38 @@ object Layout {
   private[graft] def streamMvRoot(spark: SparkSession, dir: String): String = {
     import spark.implicits._
     val fp = Warehouse.sourceFingerprint(spark, s"$dir/lineitem.parquet")
-    val frag = Warehouse.tmpDirOnce("graft_smvsrc_", fp) { path =>
-      Tables.lineitem(spark, dir).repartition(StreamIngestFragFiles).write.mode("overwrite").parquet(path)
-    }
+    val frag = lineitemQueue(spark, dir, fp)
     Warehouse.tmpDirOnce("graft_smv_", fp) { root =>
       new java.io.File(root).mkdirs()
-      val schema = Tables.artifactParquet(spark, frag).schema
-      val stream = spark.readStream
-        .schema(schema)
-        .option("maxFilesPerTrigger", StreamIngestFilesPerTrigger)
-        .parquet(frag)
-      val batches = new java.util.concurrent.atomic.AtomicInteger
+      // set by the ticks on the stream's thread, read here after the drain
       val latest = new java.util.concurrent.atomic.AtomicReference[String](null)
-      val q = stream.writeStream
-        .foreachBatch { (df: DataFrame, id: java.lang.Long) =>
-          if (!df.isEmpty) {
-            val delta = df
+      val batches = StreamDrain.drainTicks(spark, frag) { (df, id) =>
+        val delta = df
+          .groupBy($"l_returnflag", $"l_linestatus")
+          .agg(
+            count(lit(1)).as("n_rows"),
+            sum($"l_quantity").as("sum_qty"),
+            sum($"l_extendedprice".cast("decimal(18,2)")).cast("decimal(38,2)").as("sum_price")
+          )
+        val merged = Option(latest.get()) match {
+          case None => delta
+          case Some(p) =>
+            Tables.artifactParquet(spark, p)
+              .unionByName(delta)
               .groupBy($"l_returnflag", $"l_linestatus")
               .agg(
-                count(lit(1)).as("n_rows"),
-                sum($"l_quantity").as("sum_qty"),
-                sum($"l_extendedprice".cast("decimal(18,2)")).cast("decimal(38,2)").as("sum_price")
+                sum($"n_rows").as("n_rows"),
+                sum($"sum_qty").as("sum_qty"),
+                sum($"sum_price").cast("decimal(38,2)").as("sum_price")
               )
-            val merged = Option(latest.get()) match {
-              case None => delta
-              case Some(p) =>
-                Tables.artifactParquet(spark, p)
-                  .unionByName(delta)
-                  .groupBy($"l_returnflag", $"l_linestatus")
-                  .agg(
-                    sum($"n_rows").as("n_rows"),
-                    sum($"sum_qty").as("sum_qty"),
-                    sum($"sum_price").cast("decimal(38,2)").as("sum_price")
-                  )
-            }
-            val out = s"$root/mv_$id"
-            merged.coalesce(1).write.mode("overwrite").parquet(out)
-            latest.set(out)
-            batches.incrementAndGet()
-          }
-          ()
         }
-        .option("checkpointLocation", s"$root/_chk")
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
+        val out = s"$root/mv_$id"
+        merged.coalesce(1).write.mode("overwrite").parquet(out)
+        latest.set(out)
+      }
       require(latest.get() != null, s"streaming MV drained zero non-empty batches from $frag")
       val total = Tables.artifactParquet(spark, latest.get()).agg(sum($"n_rows")).collect().head.getLong(0)
-      lastStreamMv.set((batches.get, total))
+      lastStreamMv.set((batches, total))
       java.nio.file.Files.write(
         new java.io.File(root, "_latest").toPath,
         latest.get().getBytes("UTF-8")
@@ -828,8 +799,9 @@ object Layout {
     val fp = Warehouse.sourceFingerprint(spark, s"$dir/lineitem.parquet")
     val ticks = (0 until IncSlices).map(k => specEvoTick(spark, dir, fp, k))
     val segs = ticks.map { seg =>
-      // MEASURED EXCEPTION to the artifact reader memo (r20
-      // continuation): this is the one PARTITIONED artifact
+      // MEASURED EXCEPTION to the artifact reader memo
+      // (OPTIMIZATION_r20.md, "Layout/MV artifact reader memo"): this is
+      // the one PARTITIONED artifact
       // (partitionBy(p_year[,p_month]) trees), and routing it through
       // Tables.artifactParquet regressed the steady serve 0.62–0.84 →
       // 1.67–1.72 s (isolated, reproducible, alternating JVMs on one
@@ -1319,8 +1291,6 @@ object Layout {
   private[graft] val lastStreamTakedown =
     new java.util.concurrent.atomic.AtomicReference[(Int, Int, Long)]((0, 0, 0L))
 
-  private val StreamTakedownQueueFiles = 6
-
   /** Builds (once per fingerprint) the STREAM-maintained takedown state
     * for the data-file family — the continuous form of [[morDvDir]]'s
     * one-shot DELETE commit, symmetric with the lexical index's
@@ -1334,47 +1304,25 @@ object Layout {
     * whole drain); per-trigger cost ∝ that batch's victims. Because the
     * DV is a set union of disjoint key files, N partial takedowns equal
     * the one-shot DV EXACTLY — spec-pinned against [[morDvDir]]. The
-    * checkpoint lives inside the artifact and the root _SUCCESS marker
-    * is written LAST (the streamIngestRoot discipline), so a crashed
-    * build can never pass the build-once check with missing commits.
+    * root _SUCCESS marker is written LAST (the streamIngestRoot
+    * discipline), so a crashed build can never pass the build-once check
+    * with missing commits.
     */
   private[graft] def streamTakedownRoot(spark: SparkSession, dir: String): String = {
-    import spark.implicits._
     val data = morDataDir(spark, dir)
     val fp = morChildFp(spark, dir)
-    val frag = Warehouse.tmpDirOnce("graft_morsdq_", fp) { path =>
-      Tables.artifactParquet(spark, data)
-        .filter(morPred(spark))
-        .select(MorKeys.map(col): _*)
-        .repartition(StreamTakedownQueueFiles)
-        .write
-        .mode("overwrite")
-        .parquet(path)
+    val frag = StreamDrain.queue("graft_morsdq_", fp) {
+      Tables.artifactParquet(spark, data).filter(morPred(spark)).select(MorKeys.map(col): _*)
     }
     Warehouse.tmpDirOnce("graft_morsd_", fp) { root =>
       new java.io.File(root).mkdirs()
-      val schema = Tables.artifactParquet(spark, frag).schema
-      val stream = spark.readStream
-        .schema(schema)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(frag)
-      val batches = new java.util.concurrent.atomic.AtomicInteger
-      val q = stream.writeStream
-        .foreachBatch { (df: DataFrame, id: java.lang.Long) =>
-          if (!df.isEmpty) {
-            df.coalesce(1).write.mode("overwrite").parquet(s"$root/dv_$id")
-            batches.incrementAndGet()
-          }
-          ()
-        }
-        .option("checkpointLocation", s"$root/_chk")
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
+      val batches = StreamDrain.drainTicks(spark, frag) { (df, id) =>
+        df.coalesce(1).write.mode("overwrite").parquet(s"$root/dv_$id")
+      }
       val dvs = streamTakedownDvDirs(root)
       val dvRows =
         if (dvs.isEmpty) 0L else Tables.artifactParquet(spark, dvs: _*).count()
-      lastStreamTakedown.set((batches.get, dvs.length, dvRows))
+      lastStreamTakedown.set((batches, dvs.length, dvRows))
       new java.io.File(root, "_SUCCESS").createNewFile()
       ()
     }

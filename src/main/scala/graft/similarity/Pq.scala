@@ -2,6 +2,7 @@ package graft.similarity
 
 import graft.Tables
 import graft.functions.Portable._
+import graft.streaming.StreamDrain
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -74,9 +75,10 @@ object Pq {
     * identical doubles. The previous ×PqCodes join + groupBy(max(struct))
     * planned as SortAggregate (struct buffers cannot hash-aggregate),
     * sorting the whole exploded stream per Lloyd round / encode pass —
-    * the r18 probes' fourth-decade build term. `keep` carries payload
-    * columns (the Lloyd mean's sub) through the map, so no corpus join
-    * back.
+    * the build term the fourth-decade scale probes singled out. `keep`
+    * carries payload columns (the Lloyd mean's sub) through the map, so
+    * no corpus join back.
+    * Numbers: OPTIMIZATION_r20.md, "Cell assignment as a pure map everywhere".
     */
   private def assignCodes(
       subv: DataFrame,
@@ -420,8 +422,7 @@ object Pq {
     * streaming never runs a Lloyd job), and foreachBatch runs
     * [[pqAppendTick]] verbatim per micro-batch — encode the batch
     * against stored codebooks (8 code rows per vector), append codes +
-    * vectors. Per-trigger cost ∝ batch at any corpus size; checkpoint
-    * per-build for the established resume-safety reason.
+    * vectors. Per-trigger cost ∝ batch at any corpus size.
     */
   private[graft] def pqStreamTables(spark: SparkSession, dir: String): (String, String, String) = {
     import spark.implicits._
@@ -438,20 +439,12 @@ object Pq {
       Seq(ct, kt, vt, done)
     ) {
       val (act, _, _) = pqAppendTables(spark, dir)
-      val frag = graft.Warehouse.tmpDirOnce("graft_pqsrc_", fp) { path =>
-        Tables
-          .embeddingsFanned(spark, dir)
-          .select($"vec_id", $"embedding")
-          .repartition(6)
-          .write
-          .mode("overwrite")
-          .parquet(path)
+      val frag = StreamDrain.queue("graft_pqsrc_", fp) {
+        Tables.embeddingsFanned(spark, dir).select($"vec_id", $"embedding")
       }
       Seq(ct, kt, vt).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
       spark.table(act).write.mode("overwrite").format("parquet").saveAsTable(ct)
-      val batches = graft.streaming.StreamDrain.drainTicks(spark, frag, "graft_pqchk_") {
-        df => pqAppendTick(spark, ct, kt, vt, df)
-      }
+      val batches = StreamDrain.drainTicks(spark, frag) { (df, _) => pqAppendTick(spark, ct, kt, vt, df) }
       lastStreamPq.set((batches, spark.table(kt).count()))
       graft.Warehouse.writeDoneSentinel(spark, done)
       ()

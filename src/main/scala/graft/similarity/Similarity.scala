@@ -3,6 +3,7 @@ package graft.similarity
 import graft.Tables
 import graft.dedup.Dedup
 import graft.functions.Portable._
+import graft.streaming.StreamDrain
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -283,8 +284,9 @@ object Similarity {
       .select($"vec_id", $"embedding", norm($"embedding").as("nrm"), $"label")
     val emb = embL.select($"vec_id", $"embedding", $"nrm")
     val cents = lloydCentroids(emb)
-    // assignment via the assignCells pure map (r20, see annIvfWith);
-    // the scored crossJoin survives only query-side (pushdown-bounded)
+    // assignment via the assignCells pure map (see annIvfWith); the
+    // scored crossJoin survives only query-side (pushdown-bounded).
+    // Numbers: OPTIMIZATION_r20.md, "Cell assignment as a pure map everywhere"
     val cell = assignCells(emb, cents)
     val wProbe = Window.partitionBy($"vec_id").orderBy($"ccos".desc, $"cid")
     val qprobe = emb
@@ -379,15 +381,17 @@ object Similarity {
     * lowest cid), on the identical dot/divide doubles. The previous
     * crossJoin(×cells) + groupBy(max(struct)) form planned as
     * SortAggregate (a struct buffer cannot hash-aggregate), sorting the
-    * whole exploded stream per build/Lloyd round — the r18 probes'
-    * fourth-decade term. `keep` carries payload columns through the map
-    * so callers (the Lloyd mean) never join the corpus back.
+    * whole exploded stream per build/Lloyd round — the build term the
+    * fourth-decade scale probes singled out. `keep` carries payload
+    * columns through the map so callers (the Lloyd mean) never join the
+    * corpus back.
     * `withScore` additionally emits the WINNER's cosine under that
     * column name, recomputed from the winning centroid via element_at —
     * the identical dot/divide doubles the old form's max(struct) kept
     * (one extra 64-float dot per row instead of a corpus×k
     * SortAggregate), for the callers (prototypes, the admit artifact)
     * that need the alignment score, not just the cell.
+    * Numbers: OPTIMIZATION_r20.md, "Cell assignment as a pure map everywhere".
     */
   private[graft] def assignCells(
       emb: DataFrame,
@@ -603,20 +607,12 @@ object Similarity {
     val fp = graft.Warehouse.sourceFingerprint(spark, s"$dir/embeddings.parquet")
     val dvt = s"graft_ivfsd_dv_$fp"
     graft.Warehouse.buildOnce(spark, Seq("graft_ivfsd_dv_"), Seq(dvt)) {
-      spark.sql(s"DROP TABLE IF EXISTS $dvt")
-      val frag = graft.Warehouse.tmpDirOnce("graft_ivfsdq_", fp) { path =>
+      val frag = StreamDrain.queue("graft_ivfsdq_", fp) {
         corpusWithNorm(spark, dir)
           .filter($"vec_id" % IvfDeleteMod === IvfDeleteRem && $"vec_id" >= NumQueries)
           .select($"vec_id")
-          .repartition(6)
-          .write
-          .mode("overwrite")
-          .parquet(path)
       }
-      // crash-safe drain: per-batch staged slices, table committed only
-      // after a complete drain (see StreamDrain scaladoc — a partial
-      // first-batch-created table must never satisfy build-once)
-      val batches = graft.streaming.StreamDrain.drainToTable(spark, frag, dvt)
+      val batches = StreamDrain.drainToTable(spark, frag, dvt)
       lastStreamIvfDel.set((batches, spark.table(dvt).count()))
       ()
     }
@@ -785,9 +781,7 @@ object Similarity {
     * At 100 TB this is how embeddings actually land: a model server
     * emits vectors continuously, each micro-batch pays one broadcast
     * assignment map pass, and the accumulated posting table IS the
-    * serving index — no rebuild, no retrain, ever. Checkpoint is
-    * per-BUILD (the bm25 stream's lesson): a resumed checkpoint from an
-    * earlier JVM would drain zero batches into this JVM's empty tables.
+    * serving index — no rebuild, no retrain, ever.
     */
   private[graft] def ivfStreamTables(spark: SparkSession, dir: String): (String, String) = {
     import spark.implicits._
@@ -805,14 +799,10 @@ object Similarity {
       Seq(ct, at, done)
     ) {
       val (act, _) = ivfAppendTables(spark, dir)
-      val frag = graft.Warehouse.tmpDirOnce("graft_ivfsrc_", fp) { path =>
-        corpusWithNorm(spark, dir).repartition(6).write.mode("overwrite").parquet(path)
-      }
+      val frag = StreamDrain.queue("graft_ivfsrc_", fp)(corpusWithNorm(spark, dir))
       Seq(ct, at).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
       spark.table(act).write.mode("overwrite").format("parquet").saveAsTable(ct)
-      val batches = graft.streaming.StreamDrain.drainTicks(spark, frag, "graft_ivfchk_") {
-        df => ivfAppendTick(spark, ct, at, df)
-      }
+      val batches = StreamDrain.drainTicks(spark, frag) { (df, _) => ivfAppendTick(spark, ct, at, df) }
       lastStreamIvf.set((batches, spark.table(at).count()))
       graft.Warehouse.writeDoneSentinel(spark, done)
       ()
@@ -983,12 +973,13 @@ object Similarity {
   private def annIvfWith(emb: DataFrame, cents: DataFrame, probes: Int): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
-    // nearest cell per vector: the assignCells pure map (r20) — the
+    // nearest cell per vector: the assignCells pure map — the
     // old crossJoin(×cells) + groupBy(max(struct)) planned a corpus×k
     // SortAggregate; the scored crossJoin below survives only on the
     // QUERY side, where the vec_id < NumQueries pushdown bounds it to
     // queries×k rows (top-`probes` cells need a ranked list, not the
-    // argmax, so the window formulation is the right one there)
+    // argmax, so the window formulation is the right one there).
+    // Numbers: OPTIMIZATION_r20.md, "Cell assignment as a pure map everywhere"
     val cell = assignCells(emb, cents)
     val wProbe = Window.partitionBy($"vec_id").orderBy($"ccos".desc, $"cid")
     val qprobe = emb
@@ -1053,10 +1044,11 @@ object Similarity {
     import spark.implicits._
     val emb = corpusWithNorm(spark, dir)
     val cents = lloydCentroids(emb)
-    // assignment as the assignCells pure map (r20): the old
+    // assignment as the assignCells pure map: the old
     // crossJoin(×cells) + groupBy(max(struct)) planned a SortAggregate
     // over corpus×k rows — the documented fourth-decade term the IVF
-    // build already removed; same argmax, same tie rule, same doubles
+    // build already removed; same argmax, same tie rule, same doubles.
+    // Numbers: OPTIMIZATION_r20.md, "Cell assignment as a pure map everywhere"
     val cell = assignCells(emb, cents)
     // capped path: drop over-populated cells BEFORE the pair join. The
     // population frame is centroid-count-sized (≤ IvfMaxCells rows) —
@@ -1107,9 +1099,10 @@ object Similarity {
     import spark.implicits._
     val emb = corpusWithNorm(spark, dir)
     val cents = lloydCentroids(emb)
-    // assignCells pure map with the winner's score (r20) — replaces the
+    // assignCells pure map with the winner's score — replaces the
     // corpus×k SortAggregate; ccos recomputed from the winning centroid
-    // is the identical dot/divide double the max(struct) kept
+    // is the identical dot/divide double the max(struct) kept.
+    // Numbers: OPTIMIZATION_r20.md, "Cell assignment as a pure map everywhere"
     val cell = assignCells(emb, cents, withScore = Some("ccos"))
     cell
       .groupBy($"cid")
@@ -1150,7 +1143,8 @@ object Similarity {
     import spark.implicits._
     val emb = corpusWithNorm(spark, dir)
     val cents = lloydCentroids(emb)
-    // assignCells pure map with score (r20) — see prototypes
+    // assignCells pure map with score, as in prototypes.
+    // Numbers: OPTIMIZATION_r20.md, "Cell assignment as a pure map everywhere"
     val cell = assignCells(emb, cents, withScore = Some("ccos"))
     val reps = cell
       .groupBy($"cid")
@@ -1394,8 +1388,9 @@ object Similarity {
     // winner, its score recomputed via element_at on the identical
     // dot/divide doubles) — the old crossJoin(×queries) +
     // groupBy(max) fanned the corpus ×|eval| into an aggregate
-    // exchange for a value that is a function of the row alone (r20,
-    // the assignCells pattern; same fixture-exact values, oracle-green)
+    // exchange for a value that is a function of the row alone (the
+    // assignCells pattern; same fixture-exact values, oracle-green).
+    // Numbers: OPTIMIZATION_r20.md, "Cell assignment as a pure map everywhere"
     val qArr = emb
       .filter($"vec_id" < NumQueries)
       .select($"vec_id".as("qid"), $"embedding".as("qe"), $"nrm".as("qn"))

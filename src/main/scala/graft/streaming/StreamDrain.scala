@@ -2,138 +2,72 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Crash-safe streaming drain for the takedown-queue DV builders.
+/** The one file-queue stream drain. Every stream-maintained build (the
+  * layout, MV and takedown builders in `Layout`, and the IVF, PQ, BM25
+  * and dedup index builders) writes its input as a bounded parquet
+  * queue with [[queue]] and drains it through Structured Streaming with
+  * [[drainTicks]], so the queue shape (6 files, 2 per trigger: 3
+  * micro-batches) and the replay discipline are one policy:
   *
-  * The naive drain (`foreachBatch { _.write.mode("append").saveAsTable(dvt) }`)
-  * has two failure windows the build-once guard can't see: (a) the DV
-  * table is created by the FIRST micro-batch, so an exception mid-drain
-  * leaves a partial tombstone table that satisfies the catalog-existence
-  * check on the next call in this JVM — silently under-deleting; and
-  * (b) a replayed micro-batch appends its slice twice (append is not
-  * idempotent per batchId). The layout twin (`Layout.streamTakedownRoot`)
-  * avoids both by writing its root `_SUCCESS` last; this is the
-  * catalog-table edition of the same discipline:
-  *
-  *   - each micro-batch writes its slice to a per-batchId staging dir
-  *     with `overwrite` — a replayed batch clobbers its own slice, so
-  *     the staged union is exactly-once by construction;
-  *   - the catalog table is written ONCE, after `processAllAvailable`
-  *     returns — table existence IS the completion marker, so a partial
-  *     drain leaves nothing for build-once to trust.
-  *
-  * The staged slices stay additive artifacts: N partial takedowns union
-  * to the one-shot DV exactly (the spec pin carries over unchanged).
+  *   - each drain gets a fresh temp checkpoint, deleted when it returns.
+  *     The artifacts a drain commits live in the warehouse or under a
+  *     `/tmp` dir that survives the JVM; a checkpoint resumed from an
+  *     earlier drain would skip the batches it already committed, so a
+  *     rebuild always drains from batch 0;
+  *   - a replayed micro-batch (same batchId) never runs its tick twice,
+  *     since append-mode ticks are not idempotent ([[BatchGuard]]);
+  *   - the build-once marker the caller writes AFTER the drain returns
+  *     (a `_SUCCESS` file, a done-sentinel table, or the committed table
+  *     of [[drainToTable]]) covers the cross-JVM half: a crashed drain
+  *     leaves no marker, and the next call rebuilds from scratch.
   */
 object StreamDrain {
 
-  /** Drains the parquet file-source at `frag` (a bounded takedown queue)
-    * through Structured Streaming into catalog table `table`, committing
-    * the table only after a complete drain. Returns the number of
-    * non-empty micro-batches.
+  /** Files per queue; with [[FilesPerTrigger]] a queue drains in 3
+    * micro-batches, so every stream build commits more than once.
     */
-  def drainToTable(
-      spark: SparkSession,
-      frag: String,
-      table: String,
-      maxFilesPerTrigger: Int = 2
-  ): Int = {
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    val stg = java.nio.file.Files.createTempDirectory("graft_dvstage_").toString
-    val chk = java.nio.file.Files.createTempDirectory("graft_dvchk_").toString
-    val schema = graft.Tables.artifactParquet(spark, frag).schema
-    val stream = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(frag)
-    val q = stream.writeStream
-      .foreachBatch { (df: DataFrame, batchId: java.lang.Long) =>
-        if (!df.isEmpty) {
-          df.coalesce(1).write.mode("overwrite").parquet(s"$stg/b$batchId")
-        }
-        ()
-      }
-      .option("checkpointLocation", s"$chk/_chk")
-      .start()
-    // the batch count is derived at commit time from the DISTINCT staged
-    // b<batchId> dirs, never a foreachBatch invocation counter: a
-    // replayed/retried micro-batch re-enters foreachBatch (which the
-    // staged overwrite absorbs for DATA) but must not inflate the count
-    // the ledgers and CrashSafetySpec compare across drains
-    def stagedBatches: Int =
-      Option(new java.io.File(stg).listFiles())
-        .map(_.count(f => f.isDirectory && f.getName.startsWith("b")))
-        .getOrElse(0)
-    val n =
-      try {
-        q.processAllAvailable()
-        // the commit point: only a COMPLETE drain materializes the table
-        val count = stagedBatches
-        val union =
-          if (count == 0)
-            spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-          else spark.read.parquet(s"$stg/b*")
-        union.coalesce(1).write.mode("overwrite").format("parquet").saveAsTable(table)
-        count
-      } finally {
-        q.stop()
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(chk))
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(stg))
-      }
-    n
-  }
+  val QueueFiles = 6
+  val FilesPerTrigger = 2
 
-  /** Drains the parquet file-source at `frag` running `tick` once per
-    * NON-EMPTY micro-batch — the shared shape of every append-tick
-    * stream build (IVF postings, PQ codes, BM25 postings and takedown).
-    * The tick is guarded idempotent per batchId: the append-mode
-    * saveAsTable inside a tick is not idempotent, so a replayed/retried
-    * micro-batch (same batchId, the micro-batch-retry window the staged
-    * DV drains already close) must not run its tick twice — the guard
-    * set admits each batchId exactly once for the build's lifetime.
-    * The build-once done-sentinel callers write AFTER this returns
-    * covers the cross-JVM half (a crashed drain rebuilds from batch 0
-    * with a fresh guard set), so in-memory is exactly the right scope.
-    * Returns the number of ticked batches — derived from the guard set,
-    * so a replay can't inflate the ledgers either.
+  /** Writes (once per fingerprint) `rows` as a [[QueueFiles]]-file
+    * parquet queue under the tmp dir `prefix + fp`; returns the dir.
     */
-  /** The replayed-batch guard around a drain tick, factored out of
-    * [[drainTicks]] so the spec can drive a DUPLICATE batchId through
-    * the exact foreachBatch lambda the production drains install
-    * (CrashSafetySpec) instead of asserting the guard by reading it.
-    * Admits each batchId's tick exactly once for the guard's lifetime
-    * (one drain = one guard instance); empty batches never tick and
-    * never consume their batchId — a replay that delivers the data on
-    * the retry still gets its tick.
+  def queue(prefix: String, fp: String)(rows: => DataFrame): String =
+    graft.Warehouse.tmpDirOnce(prefix, fp) { path =>
+      rows.repartition(QueueFiles).write.mode("overwrite").parquet(path)
+    }
+
+  /** Wraps a drain's tick as its `foreachBatch` function: runs `tick`
+    * once per non-empty batchId for the guard's lifetime (one drain).
+    * An empty delivery neither ticks nor consumes its batchId, so a
+    * retry that delivers the data still ticks. Kept apart from
+    * [[drainTicks]] so a spec can drive a duplicate batchId through it.
     */
-  private[streaming] final class BatchGuard(tick: DataFrame => Unit)
+  private[streaming] final class BatchGuard(tick: (DataFrame, Long) => Unit)
       extends ((DataFrame, Long) => Unit)
       with Serializable {
     private val ticked = java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
-    override def apply(df: DataFrame, batchId: Long): Unit = {
-      if (!df.isEmpty && ticked.add(batchId)) tick(df)
-      ()
-    }
+    override def apply(df: DataFrame, batchId: Long): Unit =
+      if (!df.isEmpty && ticked.add(batchId)) tick(df, batchId)
 
-    /** Number of batchIds whose tick ran — the drain's ledger count. */
+    /** Number of batchIds whose tick ran. */
     def count: Int = ticked.size
   }
 
-  def drainTicks(
-      spark: SparkSession,
-      frag: String,
-      chkPrefix: String,
-      maxFilesPerTrigger: Int = 2
-  )(tick: DataFrame => Unit): Int = {
-    val chk = java.nio.file.Files.createTempDirectory(chkPrefix).toString
-    val schema = graft.Tables.artifactParquet(spark, frag).schema
-    val stream = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(frag)
+  /** Drains the parquet queue at `frag`, running `tick(batch, batchId)`
+    * once per non-empty micro-batch. Returns the number of batches
+    * ticked: admitted batchIds, so a replay can't inflate a ledger.
+    */
+  def drainTicks(spark: SparkSession, frag: String)(tick: (DataFrame, Long) => Unit): Int = {
+    val chk = java.nio.file.Files.createTempDirectory("graft_drainchk_").toString
     val guard = new BatchGuard(tick)
-    val q = stream.writeStream
+    val q = spark.readStream
+      .schema(graft.Tables.artifactParquet(spark, frag).schema)
+      .option("maxFilesPerTrigger", FilesPerTrigger)
+      .parquet(frag)
+      .writeStream
       .foreachBatch(guard)
-      .option("checkpointLocation", s"$chk/_chk")
+      .option("checkpointLocation", chk)
       .start()
     try q.processAllAvailable()
     finally {
@@ -141,5 +75,29 @@ object StreamDrain {
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(chk))
     }
     guard.count
+  }
+
+  /** Drains the queue at `frag` into catalog table `table`, committing
+    * the table only after a complete drain; returns the batch count.
+    * Each batch stages its slice in a per-batchId dir, and the table is
+    * written once from the staged union, so table existence IS the
+    * completion marker: a drain that fails midway leaves no table for
+    * the build-once check to trust (a table the first batch created and
+    * later batches appended to would). The slices are disjoint, so N
+    * partial drains union to the one-shot table exactly.
+    */
+  def drainToTable(spark: SparkSession, frag: String, table: String): Int = {
+    spark.sql(s"DROP TABLE IF EXISTS $table")
+    val stg = java.nio.file.Files.createTempDirectory("graft_dvstage_").toString
+    try {
+      val n = drainTicks(spark, frag) { (df, id) =>
+        df.coalesce(1).write.mode("overwrite").parquet(s"$stg/b$id")
+      }
+      val union =
+        if (n == 0) graft.Tables.artifactParquet(spark, frag).limit(0)
+        else spark.read.parquet(s"$stg/b*")
+      union.coalesce(1).write.mode("overwrite").format("parquet").saveAsTable(table)
+      n
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(stg))
   }
 }

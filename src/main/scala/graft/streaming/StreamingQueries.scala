@@ -69,7 +69,8 @@ object StreamingQueries {
   // schema-inference memo: the batch-side schema probe that seeds
   // readStream lists files and reads a footer on the driver, and the
   // stream-stream joins would pay it twice per query run. Pure metadata,
-  // under the same immutable-fixture contract as the Tables reader memo
+  // keyed by path alone: it assumes a fixture's schema is fixed for the
+  // session
   private val streamSchemas = new Warehouse.Memo[(String, String), org.apache.spark.sql.types.StructType]()
 
   private def eventStream(

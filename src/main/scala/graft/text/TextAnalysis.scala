@@ -2,6 +2,7 @@ package graft.text
 
 import graft.Tables
 import graft.functions.Portable._
+import graft.streaming.StreamDrain
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -626,7 +627,9 @@ object TextAnalysis {
     * longs). Eager collection replaces the former session-lived
     * `.persist()` of the corpus-proportional base — the scoring pass
     * re-scans instead (bounded cost), and no cache entry outlives the
-    * query (r11 ADVICE).
+    * query: a session-lived cache of a corpus-proportional frame holds
+    * memory that grows with the corpus. Numbers: BASELINE.md, the
+    * text_bm25 row of the sf1/sf3/sf10 scale probes.
     */
   private def bm25CollectStats(statsRows: DataFrame): Bm25Stats = {
     val n = Bm25Query.length
@@ -706,8 +709,9 @@ object TextAnalysis {
     * stored index always covers exactly the docs that have arrived.
     * A fresh serving JVM reads BOTH tables from the catalog: no corpus
     * scan, no text decode, no stats recompute — the index outlives the
-    * trainer (the r11 lesson: serving paths read persisted artifacts,
-    * never rebuild).
+    * trainer: a serving path that rebuilds pays the build per query.
+    * Numbers: BASELINE.md, "durable PQ artifacts + native BM25 term
+    * stats".
     */
   private[graft] def bm25IndexTables(spark: SparkSession, dir: String): (String, String) = {
     import spark.implicits._
@@ -795,20 +799,11 @@ object TextAnalysis {
       Seq("graft_bm25s_post_", "graft_bm25s_stats_", "graft_bm25s_done_"),
       Seq(bt, st, done)
     ) {
-      val frag = graft.Warehouse.tmpDirOnce("graft_bm25src_", fp) { path =>
-        Tables.documents(spark, dir).repartition(6).write.mode("overwrite").parquet(path)
-      }
-      // the tables live in the per-JVM warehouse while /tmp survives
-      // JVMs, so the checkpoint must be per-BUILD, never
-      // fingerprint-cached: a resumed checkpoint from an earlier JVM
-      // would drain zero batches into this JVM's empty tables. Same
-      // reasoning for partial state within a JVM: a crashed build left
-      // tables the catalog still lists — drop them so the restarted
-      // stream indexes from batch 0.
+      val frag = StreamDrain.queue("graft_bm25src_", fp)(Tables.documents(spark, dir))
+      // a crashed build left tables the catalog still lists: drop them
+      // so the restarted drain indexes from batch 0 into empty tables
       Seq(bt, st).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-      val batches = graft.streaming.StreamDrain.drainTicks(spark, frag, "graft_bm25chk_") {
-        df => bm25AppendTick(spark, bt, st, df)
-      }
+      val batches = StreamDrain.drainTicks(spark, frag) { (df, _) => bm25AppendTick(spark, bt, st, df) }
       lastStreamBm25.set((batches, spark.table(st).count()))
       graft.Warehouse.writeDoneSentinel(spark, done)
       ()
@@ -956,20 +951,10 @@ object TextAnalysis {
       Seq(bt, st, dvt).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
       spark.table(abt).write.mode("overwrite").format("parquet").saveAsTable(bt)
       spark.table(ast).write.mode("overwrite").format("parquet").saveAsTable(st)
-      val frag = graft.Warehouse.tmpDirOnce("graft_bm25delsrc_", fp) { path =>
-        spark
-          .table(bt)
-          .filter($"doc_id" % Bm25DeleteMod === Bm25DeleteRem)
-          .select($"doc_id")
-          .distinct()
-          .repartition(6)
-          .write
-          .mode("overwrite")
-          .parquet(path)
+      val frag = StreamDrain.queue("graft_bm25delsrc_", fp) {
+        spark.table(bt).filter($"doc_id" % Bm25DeleteMod === Bm25DeleteRem).select($"doc_id").distinct()
       }
-      val batches = graft.streaming.StreamDrain.drainTicks(spark, frag, "graft_bm25dchk_") {
-        df => bm25DeleteTick(spark, bt, st, dvt, df)
-      }
+      val batches = StreamDrain.drainTicks(spark, frag) { (df, _) => bm25DeleteTick(spark, bt, st, dvt, df) }
       lastStreamBm25Del.set(
         (batches, spark.table(st).filter($"n_docs" < 0).count())
       )

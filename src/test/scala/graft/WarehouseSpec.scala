@@ -32,11 +32,27 @@ class WarehouseSpec extends AnyFunSuite {
     assert(spark.sparkContext.getPersistentRDDs.contains(oldRdd))
 
     spark.read.parquet(s"$sf/embeddings.parquet").limit(5).write.mode("append").parquet(path)
+    assert(Tables.embeddings(spark, dir).count() === spark.read.parquet(path).count(),
+      "the fixture reader lists the appended files")
     val c = Similarity.knnGraph(spark, dir)
     assert(!(c eq a), "a new fingerprint builds a new frame")
     assert(cached(a).isEmpty, "superseded frame still cached")
     assert(!spark.sparkContext.getPersistentRDDs.contains(oldRdd), "superseded blocks still persisted")
     c.unpersist()
+  }
+
+  test("the fixture reader lists a source file added outside the session") {
+    val dir = Files.createTempDirectory("graft-warehouse-spec-").toString
+    val path = s"$dir/embeddings.parquet"
+    spark.read.parquet(s"$sf/embeddings.parquet").write.parquet(path)
+    val before = Tables.embeddings(spark, dir).count()
+    // another producer lands a file; no writer of this session refreshes
+    // the reader's file index
+    val part = new java.io.File(path).listFiles().filter(_.getName.endsWith(".parquet")).head
+    Files.copy(part.toPath, Paths.get(path, "part-added.parquet"))
+    val want = spark.read.parquet(path).count()
+    assert(want > before)
+    assert(Tables.embeddings(spark, dir).count() === want, "the reader kept the old listing")
   }
 
   test("memory-sink views are kept per (stream session, family), not per family") {

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{GraftSession, Tables}
+import graft.streaming.StreamDrain
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -220,7 +221,7 @@ class LayoutSpec extends AnyFunSuite {
 
     val got = Layout.streamIngestScan(spark, sdir).collect()
     val (batches, segments) = Layout.lastStreamIngest.get()
-    val wantBatches = Layout.StreamIngestFragFiles / Layout.StreamIngestFilesPerTrigger
+    val wantBatches = StreamDrain.QueueFiles / StreamDrain.FilesPerTrigger
     assert(batches === wantBatches, "file source must drain in maxFilesPerTrigger batches")
     assert(segments === batches, "exactly one manifest segment per micro-batch")
     val root = Layout.streamIngestRoot(spark, sdir)
@@ -229,6 +230,7 @@ class LayoutSpec extends AnyFunSuite {
         .filter(f => f.isDirectory && f.getName.startsWith(prefix))
     assert(dirs("man_").length === segments)
     assert(dirs("data_").length === segments)
+    assert(!new java.io.File(root, "_chk").exists(), "the drain's checkpoint is not part of the artifact")
     // each segment holds stats for exactly its tick's files
     dirs("man_").foreach { m =>
       val tick = m.getName.stripPrefix("man_")
@@ -453,9 +455,10 @@ class LayoutSpec extends AnyFunSuite {
 
     val got = Layout.streamMvServe(spark, sdir).collect().map(_.toSeq).toSeq
     val (batches, totalRows) = Layout.lastStreamMv.get()
-    val wantBatches = Layout.StreamIngestFragFiles / Layout.StreamIngestFilesPerTrigger
+    val wantBatches = StreamDrain.QueueFiles / StreamDrain.FilesPerTrigger
     assert(batches === wantBatches)
     val root = Layout.streamMvRoot(spark, sdir)
+    assert(!new java.io.File(root, "_chk").exists(), "the drain's checkpoint is not part of the artifact")
     val versions = Option(new java.io.File(root).listFiles()).getOrElse(Array.empty)
       .filter(f => f.isDirectory && f.getName.startsWith("mv_"))
     assert(versions.length === batches, "one immutable MV version per micro-batch")
@@ -748,6 +751,7 @@ class LayoutSpec extends AnyFunSuite {
     val (batches, dvCommits, dvRows) = Layout.lastStreamTakedown.get()
     assert(batches >= 3, s"expected >=3 micro-batches, got $batches")
     assert(dvCommits === batches, "one key-delete commit per non-empty batch")
+    assert(!new java.io.File(root, "_chk").exists(), "the drain's checkpoint is not part of the artifact")
 
     // 2) no commit rewrote a data file
     assert(fileState(data) === before, "takedown commits must not touch data files")

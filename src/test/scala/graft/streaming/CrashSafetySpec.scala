@@ -51,13 +51,11 @@ class CrashSafetySpec extends AnyFunSuite {
 
   test("drainTicks replay guard: a replayed batchId ticks exactly once, and the ledger counts admissions") {
     import spark.implicits._
-    // the EXACT foreachBatch lambda the four append-mode index drains
-    // install (IVF postings graft_ivfchk_, PQ codes graft_pqchk_, BM25
-    // postings graft_bm25chk_ and takedown graft_bm25dchk_ — all route
-    // through StreamDrain.drainTicks), driven directly with the
+    // the EXACT foreachBatch lambda every stream build installs (all
+    // route through StreamDrain.drainTicks), driven directly with the
     // replayed-micro-batch sequence the streaming engine can deliver
     val ticks = new java.util.concurrent.atomic.AtomicInteger(0)
-    val guard = new StreamDrain.BatchGuard(_ => { ticks.incrementAndGet(); () })
+    val guard = new StreamDrain.BatchGuard((_, _) => { ticks.incrementAndGet(); () })
     val batch = Seq(1L, 2L).toDF("doc_id")
 
     guard(batch, 7L)
@@ -80,7 +78,7 @@ class CrashSafetySpec extends AnyFunSuite {
     (1L to 40L).toDF("doc_id").repartition(4).write.mode("overwrite").parquet(frag)
     val ticks = new java.util.concurrent.atomic.AtomicInteger(0)
     var rows = 0L
-    val n = StreamDrain.drainTicks(spark, frag, "graft_testchk_") { df =>
+    val n = StreamDrain.drainTicks(spark, frag) { (df, _) =>
       ticks.incrementAndGet()
       rows += df.count()
     }
@@ -88,6 +86,27 @@ class CrashSafetySpec extends AnyFunSuite {
     assert(n >= 2, s"4 files / 2 per trigger must tick >=2 batches ($n)")
     assert(rows === 40L, "ticks together must see every queued row exactly once")
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(frag))
+  }
+
+  test("file-queue streams start only in streaming/StreamDrain.scala") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"${root.toAbsolutePath} not found")
+    val files = Files.walk(root)
+    val starters =
+      try
+        files.iterator.asScala
+          .filter(_.toString.endsWith(".scala"))
+          .filter { f =>
+            val src = Files.readString(f, java.nio.charset.StandardCharsets.UTF_8)
+            src.contains(".foreachBatch(") || src.contains("\"maxFilesPerTrigger\"")
+          }
+          .map(f => root.relativize(f).toString)
+          .toList
+          .sorted
+      finally files.close()
+    assert(starters === List("graft/streaming/StreamDrain.scala"), "a stream drain outside StreamDrain")
   }
 
   test("sentinel-guarded stream build: a missing done-sentinel forces a full rebuild") {
